@@ -184,7 +184,7 @@ def encode_pq(vectors: DataFrame, codes: DataFrame) -> DataFrame:
     fp_params=[CRAWL_MOD, CENTROID_MOD, KM_ITERS, PQ_M, PQ_CODES],
 )
 def _build_trained_index_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """vectors  v0 = base (seeds AND PQ codebook ids forced in so the
                      frozen codebooks equal the oracle's), v1 = crawl
@@ -204,19 +204,19 @@ def _build_trained_index_tables(
         | (F.col("vec_id") % CENTROID_MOD == 0)
         | (F.col("vec_id") < PQ_CODES)
     )
-    vectors = tmp / "vectors"
+    vectors = dest / "vectors"
     write_table(v.filter(is_base), str(vectors), mode="overwrite")
     write_table(v.filter(~is_base), str(vectors), mode="append")
 
     base = read_table(spark, str(vectors), version=0)
     cents = train_codebook(base)
-    write_table(cents, str(tmp / "codebook"), mode="overwrite")
+    write_table(cents, str(dest / "codebook"), mode="overwrite")
 
     # serving state is built FROM the persisted codebook (not the
     # in-flight frame) — the at-rest flow a restart would take
-    cents_at_rest = read_table(spark, str(tmp / "codebook"))
+    cents_at_rest = read_table(spark, str(dest / "codebook"))
     write_table(
-        assign_cells(base, cents_at_rest), str(tmp / "cells"),
+        assign_cells(base, cents_at_rest), str(dest / "cells"),
         mode="overwrite",
     )
     pq_codes = _subs_of(base).filter(F.col("vec_id") < PQ_CODES).select(
@@ -224,7 +224,7 @@ def _build_trained_index_tables(
         F.col("s").alias("c"), F.col("ss").alias("cc"),
     )
     write_table(
-        encode_pq(base, pq_codes), str(tmp / "pq_codes"), mode="overwrite"
+        encode_pq(base, pq_codes), str(dest / "pq_codes"), mode="overwrite"
     )
 
     delta = (
@@ -233,11 +233,11 @@ def _build_trained_index_tables(
         .select("vec_id", "label", "emb", "norm")
     )
     write_table(
-        assign_cells(delta, cents_at_rest), str(tmp / "cells"),
+        assign_cells(delta, cents_at_rest), str(dest / "cells"),
         mode="append",
     )
     write_table(
-        encode_pq(delta, pq_codes), str(tmp / "pq_codes"), mode="append"
+        encode_pq(delta, pq_codes), str(dest / "pq_codes"), mode="append"
     )
 
 

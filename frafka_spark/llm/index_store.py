@@ -114,7 +114,7 @@ def ivf_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
 
 @_register_builder("documents_digest_indexed", fp_params=[CRAWL_MOD])
 def _build_digest_index_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """The persisted-index lifecycle, run once per fixture:
 
@@ -130,7 +130,7 @@ def _build_digest_index_tables(
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    corpus, index = tmp / "corpus", tmp / "digest_index"
+    corpus, index = dest / "corpus", dest / "digest_index"
     write_table(
         d.filter(F.col("doc_id") % CRAWL_MOD != 0), str(corpus),
         mode="overwrite",
@@ -235,7 +235,7 @@ PIPE_VALID_RESIDUE = 7
     fp_params=[PIPE_MOD, PIPE_MIN_WORDS, PIPE_VALID_RESIDUE],
 )
 def _build_pipeline_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """The incremental training-data pipeline, run once per fixture:
 
@@ -273,7 +273,7 @@ def _build_pipeline_tables(
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     corpus = d.filter(F.col("doc_id") % PIPE_MOD != 0)
-    staging, curated = tmp / "staging", tmp / "curated"
+    staging, curated = dest / "staging", dest / "curated"
     write_table(corpus, str(staging), mode="overwrite")
     write_table(
         d.filter(F.col("doc_id") % PIPE_MOD == 0), str(staging),
@@ -432,7 +432,7 @@ def _near_index_fp():
 
 @_register_builder("documents_near_indexed", fp_params=_near_index_fp())
 def _build_near_index_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """corpus v0 = base docs, v1 = crawl append; shingles and MinHash
     signature tables each built from corpus v0 and maintained by
@@ -444,7 +444,7 @@ def _build_near_index_tables(
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    corpus = tmp / "corpus"
+    corpus = dest / "corpus"
     write_table(
         d.filter(F.col("doc_id") % CRAWL_MOD != 0), str(corpus),
         mode="overwrite",
@@ -461,8 +461,8 @@ def _build_near_index_tables(
         ("shingles", shingle_rows),
         ("signatures", minhash_rows),
     ):
-        write_table(rows_fn(base), str(tmp / name), mode="overwrite")
-        write_table(rows_fn(delta), str(tmp / name), mode="append")
+        write_table(rows_fn(base), str(dest / name), mode="overwrite")
+        write_table(rows_fn(delta), str(dest / name), mode="append")
 
 
 def _near_at_rest_oracle() -> str:
@@ -562,7 +562,7 @@ DML_DEL_HI = 199
     "documents_digest_dml", fp_params=[CRAWL_MOD, DML_DEL_LO, DML_DEL_HI]
 )
 def _build_digest_dml_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """corpus  v0 = base docs (range-clustered, stats on doc_id)
                v1 = crawl append
@@ -578,7 +578,7 @@ def _build_digest_dml_tables(
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    corpus, index = tmp / "corpus", tmp / "digest_index"
+    corpus, index = dest / "corpus", dest / "digest_index"
 
     def clustered(df):
         return df.repartitionByRange(4, "doc_id").sortWithinPartitions(
@@ -677,7 +677,7 @@ N_INDEX_BATCHES = 4
 
 @_register_builder("documents_index_streamed", fp_params=[N_INDEX_BATCHES])
 def _build_streamed_index_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """Documents replayed as ``foreachBatch`` micro-batches: batch b =
     docs with doc_id % N_INDEX_BATCHES == b, committed to the corpus
@@ -689,7 +689,7 @@ def _build_streamed_index_tables(
     from frafka_spark.sources.manifest_table import write_stream_batch
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    corpus, index = tmp / "corpus", tmp / "digest_index"
+    corpus, index = dest / "corpus", dest / "digest_index"
     for bid in range(N_INDEX_BATCHES):
         part = d.filter(F.col("doc_id") % N_INDEX_BATCHES == bid)
         if bid == 2:
@@ -816,7 +816,7 @@ def q_llm_dedup_exact_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register_builder("embeddings_cells_indexed", fp_params=[CRAWL_MOD])
 def _build_cells_index_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """vectors v0 = base (every centroid vec_id % CENTROID_MOD == 0 is
     FORCED into the base so the frozen codebook equals the oracle's
@@ -833,7 +833,7 @@ def _build_cells_index_tables(
     is_base = (F.col("vec_id") % CRAWL_MOD != 0) | (
         F.col("vec_id") % CENTROID_MOD == 0
     )
-    vectors, cells = tmp / "vectors", tmp / "cells"
+    vectors, cells = dest / "vectors", dest / "cells"
     write_table(v.filter(is_base), str(vectors), mode="overwrite")
     write_table(v.filter(~is_base), str(vectors), mode="append")
 
@@ -979,7 +979,7 @@ def posting_rows(docs: DataFrame) -> DataFrame:
     fp_params=[BM25_MOD, BM25_DEL_LO, BM25_DEL_HI],
 )
 def _build_postings_index_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """corpus   v0 = base docs (doc_id % BM25_MOD != 0, range-
                      clustered, stats on doc_id)
@@ -999,7 +999,7 @@ def _build_postings_index_tables(
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    corpus, postings = tmp / "corpus", tmp / "postings"
+    corpus, postings = dest / "corpus", dest / "postings"
 
     def clustered(df):
         return df.repartitionByRange(4, "doc_id").sortWithinPartitions(
@@ -1214,7 +1214,7 @@ TXN_DEL_HI = 399
     "documents_digest_txn", fp_params=[CRAWL_MOD, TXN_DEL_LO, TXN_DEL_HI]
 )
 def _build_digest_txn_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """catalog c0 = {corpus v0 (base docs), index i0 (full build)}
     txn "crawl-1": corpus append COMMITTED, then CRASH (no index
@@ -1239,7 +1239,7 @@ def _build_digest_txn_tables(
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    corpus, index = tmp / "corpus", tmp / "digest_index"
+    corpus, index = dest / "corpus", dest / "digest_index"
 
     def clustered(df):
         return df.repartitionByRange(4, "doc_id").sortWithinPartitions(
@@ -1255,7 +1255,7 @@ def _build_digest_txn_tables(
         str(index), ["doc_id"], mode="overwrite",
     )
     catalog_commit(
-        str(tmp),
+        str(dest),
         {
             "corpus": {"path": str(corpus), "version": 0},
             "index": {"path": str(index), "version": 0},
@@ -1288,7 +1288,7 @@ def _build_digest_txn_tables(
         )
 
     run_txn(
-        str(tmp), "crawl-1",
+        str(dest), "crawl-1",
         {"corpus": corpus_applier, "index": index_applier},
     )
 
@@ -1306,7 +1306,7 @@ def _build_digest_txn_tables(
         )["version"]
 
     run_txn(
-        str(tmp), "delete-1",
+        str(dest), "delete-1",
         {"corpus": corpus_delete, "index": index_delete},
     )
 
@@ -1373,7 +1373,7 @@ def q_llm_index_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "documents_index_txn_streamed", fp_params=[N_INDEX_BATCHES, "txn"]
 )
 def _build_txn_streamed_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """STREAMED ingest with CROSS-TABLE atomicity — the composition
     that closes the wave-8 lifecycle's documented gap (per-table
@@ -1396,7 +1396,7 @@ def _build_txn_streamed_tables(
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    corpus, index = tmp / "corpus", tmp / "digest_index"
+    corpus, index = dest / "corpus", dest / "digest_index"
 
     def batch_version(path: str, bid: int, above: int) -> int:
         # a stream batch's own exactly-once marker doubles as the
@@ -1431,7 +1431,7 @@ def _build_txn_streamed_tables(
         digest_rows(part0), 0, str(index), ["doc_id"]
     ) == 0
     catalog_commit(
-        str(tmp),
+        str(dest),
         {
             "corpus": {"path": str(corpus), "version": 0},
             "index": {"path": str(index), "version": 0},
@@ -1446,13 +1446,13 @@ def _build_txn_streamed_tables(
             assert write_stream_batch(
                 part, bid, str(corpus), ["doc_id"]
             ) is not None
-            cv, snap = catalog_current(str(tmp))
+            cv, snap = catalog_current(str(dest))
             # the torn state is INVISIBLE through the catalog
             assert snap["txn_id"] == "b1"
             assert snap["tables"]["corpus"]["version"] < current_version(
                 str(corpus)
             )
-        run_txn(str(tmp), f"b{bid}", appliers(bid, part))
+        run_txn(str(dest), f"b{bid}", appliers(bid, part))
 
 
 @query(
@@ -1555,7 +1555,7 @@ def segment_rows(docs: DataFrame) -> DataFrame:
 
 @_register_builder("documents_segfreq_indexed", fp_params=[SEGIDX_MOD])
 def _build_segfreq_index_tables(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """corpus v0 = base docs (doc_id % SEGIDX_MOD != 0), v1 = crawl
     append; seg_index v0 = segment_rows(corpus v0) — the one full
@@ -1567,7 +1567,7 @@ def _build_segfreq_index_tables(
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    corpus, index = tmp / "corpus", tmp / "seg_index"
+    corpus, index = dest / "corpus", dest / "seg_index"
     write_table(
         d.filter(F.col("doc_id") % SEGIDX_MOD != 0), str(corpus),
         mode="overwrite",

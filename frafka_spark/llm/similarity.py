@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.functions.determinism import dec_avg, half_up, sql_dec_avg
 from frafka_spark.io import fan_out, table
 from frafka_spark.registry import query
@@ -66,14 +67,6 @@ _SQL_VECS = """
 
 MAX_GEMM_BUILD_ROWS = 1_000_000  # ~512 MB of float64 at dim 64
 
-# (app id, sf_dir) → broadcast handle: the matrix build (count +
-# collect + broadcast) is the expensive leg of both GEMM consumers
-# (q_llm_sim_cosine, q_llm_hard_negatives) and is deterministic per
-# session+sf_dir, so it runs once per session like _corpus_bloom.
-_UNIT_MATRIX_CACHE: dict = {}
-_UNIT_MATRIX_LOCK = __import__("threading").Lock()
-
-
 def _broadcast_unit_matrix(spark: SparkSession, sf_dir: str):
     """Bounded GEMM build side: (ids, labels, row-normalized matrix),
     broadcast once per session — analogous to a broadcast join's
@@ -88,31 +81,24 @@ def _broadcast_unit_matrix(spark: SparkSession, sf_dir: str):
     """
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _UNIT_MATRIX_LOCK:
-        hit = _UNIT_MATRIX_CACHE.get(key)
-        if hit is not None:
-            return hit
+    def build():
+        v = _vectors(spark, sf_dir).select("vec_id", "label", "emb")
+        n = v.count()
+        if n > MAX_GEMM_BUILD_ROWS:
+            raise ValueError(
+                f"brute-force build side has {n} rows "
+                f"(> {MAX_GEMM_BUILD_ROWS}); use the IVF cell path "
+                "(q_llm_sim_ann / q_llm_dedup_embed) for corpus-scale "
+                "similarity"
+            )
+        rows = v.orderBy("vec_id").collect()
+        ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+        labels = np.array([r["label"] for r in rows], dtype=np.int32)
+        mat = np.array([r["emb"] for r in rows], dtype=np.float64)
+        unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        return spark.sparkContext.broadcast((ids, labels, unit))
 
-    v = _vectors(spark, sf_dir).select("vec_id", "label", "emb")
-    n = v.count()
-    if n > MAX_GEMM_BUILD_ROWS:
-        raise ValueError(
-            f"brute-force build side has {n} rows (> {MAX_GEMM_BUILD_ROWS}); "
-            "use the IVF cell path (q_llm_sim_ann / q_llm_dedup_embed) "
-            "for corpus-scale similarity"
-        )
-    rows = v.orderBy("vec_id").collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    labels = np.array([r["label"] for r in rows], dtype=np.int32)
-    mat = np.array([r["emb"] for r in rows], dtype=np.float64)
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    bcast = spark.sparkContext.broadcast((ids, labels, unit))
-    with _UNIT_MATRIX_LOCK:
-        prior = _UNIT_MATRIX_CACHE.setdefault(key, bcast)
-        if prior is not bcast:  # lost the race — drop the duplicate
-            bcast.unpersist()
-        return prior
+    return session_artifact(spark, sf_dir, "unit_matrix", build)
 
 
 @query(

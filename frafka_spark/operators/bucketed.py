@@ -2,15 +2,16 @@
 
 The second §4 layout behavior elevated from pytest to a DECLARED
 query (the DPP sibling, ``operators/dpp.py``): ``orders`` and
-``lineitem`` are persisted ONCE per session as bucketed managed
-tables on the join key (``sources/batch.py:write_bucketed_table`` —
-Spark's bucketing contract: same key, same bucket count, files
-pre-hashed into matching buckets), and the declared rollup joins
-them with ZERO Exchange on either side — the plan property that
-decides whether a 100 TB fact⋈fact join pays two full-table shuffles
-per run or none ever (plan-pinned in tests/test_plans.py; a
-100 TB deployment writes the bucketed layout once at ingest and
-amortizes it over every subsequent join, exactly as modeled here).
+``lineitem`` are written ONCE per fixture generation as a bucketed
+disk artifact on the join key (Spark's bucketing contract: same key,
+same bucket count, files pre-hashed into matching buckets), each
+session registers them as external bucketed tables, and the declared
+rollup joins them with ZERO Exchange on either side — the plan
+property that decides whether a 100 TB fact⋈fact join pays two
+full-table shuffles per run or none ever (plan-pinned in
+tests/test_plans.py; a 100 TB deployment writes the bucketed layout
+once at ingest and amortizes it over every subsequent join, exactly
+as modeled here).
 
 The differential oracle reads the SAME rows from the flat parquet
 fixtures — layout changes the plan, never the answer.
@@ -18,101 +19,66 @@ fixtures — layout changes the plan, never the answer.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import disk_artifact, session_artifact
 from frafka_spark.io import table
 from frafka_spark.registry import query
 
 N_BUCKETS = 8
 
-_BUCKET_LOCK = threading.Lock()
-_BUCKETED: dict[tuple[str, str], tuple[str, str]] = {}
-
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write (once per session+fixture) and return the managed
-    bucketed table names for orders/lineitem keyed on orderkey.
+    """The bucketed orders/lineitem table names for this fixture.
 
     The write is the one-time layout job a production pipeline runs
     at ingest: one shuffle into ``N_BUCKETS`` pre-hashed files per
     table, after which every orderkey join is exchange-free. Only
     the joined columns are persisted (the bucketed copy is a join
-    index, not a second copy of the fact)."""
-    import hashlib
-    from pathlib import Path
+    index, not a second copy of the fact). Bucket metadata lives in
+    the session catalog, so every session re-registers the files
+    with an explicit column list (Spark rejects a bucket spec on a
+    location without one)."""
 
-    # The tag must be unique per FIXTURE PATH, not per basename: the
-    # memo keys on the full sf_dir, so two fixture dirs sharing a
-    # basename in one session would otherwise have the second build
-    # DROP and rewrite the fs_bkt_* tables the first memo entry still
-    # points to (ADVICE r9). A short path hash disambiguates.
-    base = (Path(sf_dir).name or "sf").replace(".", "_").replace("-", "_")
-    phash = hashlib.sha1(
-        str(Path(sf_dir).resolve()).encode()
-    ).hexdigest()[:8]
-    # Bucketing metadata lives in the session catalog (in-memory for
-    # this repo), so tables can never be REUSED across processes —
-    # every process builds its own. Folding the applicationId into
-    # the name makes concurrent processes (pytest beside a driver
-    # sim, two CI jobs) build DISJOINT locations instead of racing
-    # one shared name with drop-and-rewrite.
-    apphash = hashlib.sha1(
-        spark.sparkContext.applicationId.encode()
-    ).hexdigest()[:8]
-    tag = f"{base}_{phash}_{apphash}"
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _BUCKET_LOCK:
-        hit = _BUCKETED.get(key)
-        if hit is not None:
-            return hit
-        o_name = f"fs_bkt_orders_{tag}"
-        l_name = f"fs_bkt_lineitem_{tag}"
+    def register() -> tuple[str, str]:
         o = table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority"
         )
         li = table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice"
         )
-        from frafka_spark.sources.batch import write_bucketed_table
+        specs = (("orders", o, "o_orderkey"), ("lineitem", li, "l_orderkey"))
 
-        # A previous run of THIS application id (session restart) may
-        # have left the managed locations on disk while the in-memory
-        # catalog has no entry — saveAsTable then fails
-        # LOCATION_ALREADY_EXISTS. Drop/clear only OWN-tag locations;
-        # other live processes' tables are untouched by construction.
-        # Crashed runs' leftovers (other apphashes) are swept once
-        # they are a WEEK old — the gc_orphans retention window. A
-        # day proved too short: a long-running driver session (>24h)
-        # would have its live tables rmtree'd by a newer process
-        # while its in-memory catalog still pointed at them
-        # (ADVICE r10).
-        import shutil
-        import time
-        from urllib.parse import urlparse
+        def build(path: str) -> None:
+            gen = path.rsplit("/", 1)[-1]
+            for name, df, key in specs:
+                tmp = f"fs_bkt_build_{name}_{gen}"
+                (
+                    df.write.format("parquet")
+                    .mode("overwrite")
+                    .bucketBy(N_BUCKETS, key)
+                    .sortBy(key)
+                    .saveAsTable(tmp, path=f"{path}/{name}")
+                )
+                spark.sql(f"DROP TABLE IF EXISTS {tmp}")  # files stay
 
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for name in (o_name, l_name):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(Path(wh) / name, ignore_errors=True)
-        cutoff = time.time() - 7 * 24 * 3600
-        for leftover in Path(wh).glob(f"fs_bkt_*_{base}_{phash}_*"):
-            try:
-                if leftover.stat().st_mtime < cutoff:
-                    shutil.rmtree(leftover, ignore_errors=True)
-            except OSError:
-                pass
+        path = disk_artifact(sf_dir, "bucketed", [N_BUCKETS], build)
+        gen = path.rsplit("/", 1)[-1]
+        names = []
+        for name, df, key in specs:
+            cols = ", ".join(
+                f"{f.name} {f.dataType.simpleString()}" for f in df.schema
+            )
+            names.append(f"fs_bkt_{name}_{gen}")
+            spark.sql(
+                f"CREATE TABLE IF NOT EXISTS {names[-1]} ({cols}) "
+                f"USING parquet CLUSTERED BY ({key}) SORTED BY ({key}) "
+                f"INTO {N_BUCKETS} BUCKETS LOCATION '{path}/{name}'"
+            )
+        return tuple(names)
 
-        write_bucketed_table(
-            o, o_name, "o_orderkey", n_buckets=N_BUCKETS, sort_by="o_orderkey"
-        )
-        write_bucketed_table(
-            li, l_name, "l_orderkey", n_buckets=N_BUCKETS, sort_by="l_orderkey"
-        )
-        _BUCKETED[key] = (o_name, l_name)
-        return o_name, l_name
+    return session_artifact(spark, sf_dir, "bucketed", register)
 
 
 @query(

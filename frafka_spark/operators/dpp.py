@@ -19,27 +19,16 @@ even when the day list is data-dependent (top revenue days, dates in
 a dim slice, a holiday table). The fixture layout is 30 daily
 partitions; a production layout is identical with more directories.
 
-Layout lifecycle: written once per fixture generation under the
-repo's ``spark-warehouse/`` scratch dir (gitignored), guarded by a
-freshness marker recording the source parquet's (size, mtime) — a
-regenerated fixture triggers a rewrite, concurrent constructors in
-one process serialize on a lock, and concurrent PROCESSES are safe
-because the write goes to a process-unique temp dir first and is
-atomically renamed into place.
+The layout is a disk artifact (``frafka_spark/artifacts.py``), written
+once per fixture generation.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import threading
-import time
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import disk_artifact
 from frafka_spark.io import table
 from frafka_spark.registry import query
 
@@ -48,75 +37,24 @@ from frafka_spark.registry import query
 #: discipline), and DPP's reuseBroadcastOnly requirement is met.
 DPP_TOP_DAYS = 3
 
-_LAYOUT_LOCK = threading.Lock()
-
-
-def _repo_root() -> Path:
-    return Path(__file__).resolve().parents[2]
-
-
-def _layout_dir(sf_dir: str) -> Path:
-    tag = Path(sf_dir).name or "sf"
-    return _repo_root() / "spark-warehouse" / "dpp_layout" / tag
-
-
-def _events_fingerprint(sf_dir: str) -> dict:
-    st = os.stat(Path(sf_dir) / "events.parquet")
-    return {"size": st.st_size, "mtime_ns": st.st_mtime_ns}
-
 
 def _ensure_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once) and return the date-partitioned events layout.
+    """The date-partitioned events layout: one file per partition
+    directory (``repartition`` on the partition column before the
+    write — the small-files discipline a production layout job
+    applies)."""
 
-    One file per partition directory (``repartition`` on the
-    partition column before the write — the small-files discipline a
-    production layout job applies); rewritten only when the source
-    fixture's (size, mtime) fingerprint changes.
-    """
-    root = _layout_dir(sf_dir)
-    dest = root / "events_by_date"
-    marker = root / "source.json"
-    fp = _events_fingerprint(sf_dir)
-    with _LAYOUT_LOCK:
-        try:
-            if json.loads(marker.read_text()) == fp and (
-                dest / "_SUCCESS"
-            ).exists():
-                return str(dest)
-        except (OSError, json.JSONDecodeError):
-            pass
-        ev = table(spark, sf_dir, "events").withColumn(
-            "event_date", F.to_date("ts")
-        )
-        tmp = root / f"_build_{os.getpid()}_{time.monotonic_ns()}"
+    def build(path: str) -> None:
         (
-            ev.repartition("event_date")
+            table(spark, sf_dir, "events")
+            .withColumn("event_date", F.to_date("ts"))
+            .repartition("event_date")
             .write.mode("overwrite")
             .partitionBy("event_date")
-            .parquet(str(tmp))
+            .parquet(path)
         )
-        # Swap discipline (ADVICE r9): move the stale dest ASIDE with a
-        # rename (one syscall — readers holding open fds are unaffected
-        # on POSIX; the dest-missing window is a single rename gap, not
-        # an rmtree's duration), then rename the unique tmp into place.
-        # If another process won the race between the two renames,
-        # os.rename raises ENOTEMPTY/EEXIST — a freshly-present dest
-        # with _SUCCESS is THEIR completed swap, accept it.
-        dest.parent.mkdir(parents=True, exist_ok=True)
-        trash = None
-        if dest.exists():
-            trash = root / f"_trash_{os.getpid()}_{time.monotonic_ns()}"
-            os.rename(dest, trash)
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            if not (dest / "_SUCCESS").exists():
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-        marker.write_text(json.dumps(fp))
-        if trash is not None:
-            shutil.rmtree(trash, ignore_errors=True)
-        return str(dest)
+
+    return disk_artifact(sf_dir, "events_by_date", [], build)
 
 
 def dpp_fact(spark: SparkSession, sf_dir: str) -> DataFrame:

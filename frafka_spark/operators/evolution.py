@@ -20,14 +20,10 @@ end-to-end answer under the driver's differential.
 
 from __future__ import annotations
 
-import json
-import os
-import threading
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import disk_artifact
 from frafka_spark.io import table
 from frafka_spark.registry import query
 
@@ -35,23 +31,15 @@ from frafka_spark.registry import query
 #: constant both engines apply with identical arithmetic
 SEG_PRICE = 100_000.0
 
-_EVO_LOCK = threading.Lock()
-#: (appId, sf_dir) → table path
-_EVO_MEMO: dict[tuple[str, str], str] = {}
-
 
 def _ensure_evolved_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per fixture generation) the evolved orders table:
+    """The evolved orders table (a disk artifact):
 
     v0  write  — even-orderkey rows as (o_orderkey, o_orderpriority,
                  o_totalprice)
     v1  evolve — ADD COLUMN segment string (metadata-only)
     v2  append — odd-orderkey rows WITH segment (price-threshold tag)
     v3  evolve — RENAME o_totalprice → price (metadata-only, mapped)
-
-    Freshness-markered like the dpp/fileskip layouts; concurrent
-    constructors serialize on the lock, and the memo makes repeat
-    construction free within a session.
     """
     from frafka_spark.sources.manifest_table import (
         add_column,
@@ -59,76 +47,27 @@ def _ensure_evolved_table(spark: SparkSession, sf_dir: str) -> str:
         write_table,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = (
-        Path(__file__).resolve().parents[2]
-        / "spark-warehouse"
-        / "evolution_layout"
-        / (Path(sf_dir).name or "sf")
-    )
-    dest = root / "orders_evolved"
-    marker = root / "source.json"
-    st = os.stat(Path(sf_dir) / "orders.parquet")
-    fp = {"size": st.st_size, "mtime_ns": st.st_mtime_ns}
-    with _EVO_LOCK:
-        hit = _EVO_MEMO.get(key)
-        if hit is not None:
-            return hit
-        fresh = False
-        try:
-            fresh = json.loads(marker.read_text()) == fp and any(
-                (dest / "_manifest").iterdir()
-            )
-        except (OSError, json.JSONDecodeError):
-            pass
-        if not fresh:
-            import shutil
-            import time
+    def build(path: str) -> None:
+        o = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderpriority", "o_totalprice"
+        )
+        write_table(
+            o.filter(F.col("o_orderkey") % 2 == 0), path, mode="overwrite"
+        )
+        add_column(path, "segment", "string")
+        write_table(
+            o.filter(F.col("o_orderkey") % 2 == 1).withColumn(
+                "segment",
+                F.when(
+                    F.col("o_totalprice") >= F.lit(SEG_PRICE), "high"
+                ).otherwise("std"),
+            ),
+            path,
+            mode="append",
+        )
+        rename_column(path, "o_totalprice", "price")
 
-            o = table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderpriority", "o_totalprice"
-            )
-            tmp = root / f"_evbuild_{os.getpid()}_{time.monotonic_ns()}"
-            write_table(
-                o.filter(F.col("o_orderkey") % 2 == 0), str(tmp),
-                mode="overwrite",
-            )
-            add_column(str(tmp), "segment", "string")
-            write_table(
-                o.filter(F.col("o_orderkey") % 2 == 1).withColumn(
-                    "segment",
-                    F.when(
-                        F.col("o_totalprice") >= F.lit(SEG_PRICE), "high"
-                    ).otherwise("std"),
-                ),
-                str(tmp),
-                mode="append",
-            )
-            rename_column(str(tmp), "o_totalprice", "price")
-            # manifests record absolute paths — retarget before the
-            # rename-aside swap (the fileskip._ensure_layout pattern)
-            for mf in (tmp / "_manifest").glob("v*.json"):
-                m = json.loads(mf.read_text())
-                m["files"] = [
-                    f.replace(str(tmp), str(dest), 1) for f in m["files"]
-                ]
-                mf.write_text(json.dumps(m))
-            trash = None
-            if dest.exists():
-                trash = root / f"_trash_{os.getpid()}_{time.monotonic_ns()}"
-                os.rename(dest, trash)
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            try:
-                os.rename(tmp, dest)
-            except OSError:
-                if not any((dest / "_manifest").iterdir()):
-                    raise
-                shutil.rmtree(tmp, ignore_errors=True)
-            marker.write_text(json.dumps(fp))
-            if trash is not None:
-                shutil.rmtree(trash, ignore_errors=True)
-        _EVO_MEMO[key] = str(dest)
-        return str(dest)
+    return disk_artifact(sf_dir, "orders_evolved", [SEG_PRICE], build)
 
 
 @query(

@@ -24,25 +24,15 @@ never the rows.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import threading
-import time
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import disk_artifact, session_artifact
 from frafka_spark.io import table
 from frafka_spark.registry import query
 
 N_ZFILES = 8
 SKIP_DEN = 10  # predicate band: l_partkey in [1, ceil(max/DEN)]
-
-_SKIP_LOCK = threading.Lock()
-#: (appId, sf_dir) → (table path, band hi)
-_SKIP_MEMO: dict[tuple[str, str], tuple[str, int]] = {}
 
 _COLS = [
     "l_orderkey",
@@ -55,46 +45,17 @@ _COLS = [
 
 
 def _ensure_layout(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    """Write (once per fixture generation) the z-ordered, stats-
-    manifested lineitem layout; return (path, band hi).
-
-    Freshness-markered like the DPP layout: a regenerated fixture
-    triggers a rewrite; within a process the memo also carries the
-    band bound so the 1-row max aggregate runs once per session.
-    """
+    """The z-ordered, stats-manifested lineitem layout (a disk
+    artifact) and the band bound, both resolved once per session."""
     from frafka_spark.sources.layout import zorder_key, zorder_rank
     from frafka_spark.sources.manifest_table import write_table_with_stats
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = (
-        Path(__file__).resolve().parents[2]
-        / "spark-warehouse"
-        / "fileskip_layout"
-        / (Path(sf_dir).name or "sf")
-    )
-    dest = root / "lineitem_z"
-    marker = root / "source.json"
-    st = os.stat(Path(sf_dir) / "lineitem.parquet")
-    fp = {"size": st.st_size, "mtime_ns": st.st_mtime_ns}
-    with _SKIP_LOCK:
-        hit = _SKIP_MEMO.get(key)
-        if hit is not None:
-            return hit
+    zcols = ["l_partkey", "l_suppkey"]
+
+    def resolve() -> tuple[str, int]:
         li = table(spark, sf_dir, "lineitem").select(*_COLS)
-        max_pk = li.agg(F.max("l_partkey")).first()[0]
-        hi = (int(max_pk) + SKIP_DEN - 1) // SKIP_DEN
-        fresh = False
-        try:
-            # JSONDecodeError too: a corrupt/truncated marker must
-            # trigger a rewrite, not crash construction (ADVICE r9;
-            # same clause as dpp._ensure_layout)
-            fresh = json.loads(marker.read_text()) == fp and any(
-                (dest / "_manifest").iterdir()
-            )
-        except (OSError, json.JSONDecodeError):
-            pass
-        if not fresh:
-            zcols = ["l_partkey", "l_suppkey"]
+
+        def build(path: str) -> None:
             ranked = li.select(
                 "*", *[zorder_rank(c).alias(f"__zr_{c}") for c in zcols]
             )
@@ -105,41 +66,13 @@ def _ensure_layout(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
                 .sortWithinPartitions("__z")
                 .drop("__z", *[f"__zr_{c}" for c in zcols])
             )
-            # Temp-then-swap, mirroring dpp._ensure_layout (ADVICE r9:
-            # the write was directly destructive here). The manifest
-            # records ABSOLUTE file paths, so after writing into the
-            # process-unique temp dir the manifest is retargeted to the
-            # final location before the rename.
-            tmp = root / f"_zbuild_{os.getpid()}_{time.monotonic_ns()}"
-            write_table_with_stats(clustered, str(tmp), zcols, mode="overwrite")
-            for mf in (tmp / "_manifest").glob("v*.json"):
-                m = json.loads(mf.read_text())
-                m["files"] = [
-                    f.replace(str(tmp), str(dest), 1) for f in m["files"]
-                ]
-                m["stats"] = {
-                    k.replace(str(tmp), str(dest), 1): v
-                    for k, v in m["stats"].items()
-                }
-                mf.write_text(json.dumps(m))
-            trash = None
-            if dest.exists():
-                trash = root / f"_trash_{os.getpid()}_{time.monotonic_ns()}"
-                os.rename(dest, trash)
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            try:
-                os.rename(tmp, dest)
-            except OSError:
-                # a concurrent process completed its own swap between
-                # our two renames — accept a freshly-present dest
-                if not any((dest / "_manifest").iterdir()):
-                    raise
-                shutil.rmtree(tmp, ignore_errors=True)
-            marker.write_text(json.dumps(fp))
-            if trash is not None:
-                shutil.rmtree(trash, ignore_errors=True)
-        _SKIP_MEMO[key] = (str(dest), hi)
-        return str(dest), hi
+            write_table_with_stats(clustered, path, zcols, mode="overwrite")
+
+        max_pk = li.agg(F.max("l_partkey")).first()[0]
+        hi = (int(max_pk) + SKIP_DEN - 1) // SKIP_DEN
+        return disk_artifact(sf_dir, "lineitem_z", [N_ZFILES], build), hi
+
+    return session_artifact(spark, sf_dir, "lineitem_z", resolve)
 
 
 def pruned_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:

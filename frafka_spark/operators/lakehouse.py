@@ -31,14 +31,12 @@ exactly what the driver's differential is built to catch.
 
 from __future__ import annotations
 
-import json
-import os
-import threading
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import disk_artifact
 from frafka_spark.io import table
 from frafka_spark.registry import query
 
@@ -55,17 +53,8 @@ N_RANGE_FILES = 8
 #: small-append count for the compaction table
 N_APPENDS = 6
 
-_LH_LOCK = threading.Lock()
-#: (appId, sf_dir, which) → table path
-_LH_MEMO: dict[tuple[str, str, str], str] = {}
-#: (sf_dir, which) → in-process lock for that one table's build, so a
-#: slow/hung rebuild of one table (possibly blocked on another
-#: process's flock) never stalls _ensure_table calls for UNRELATED
-#: tables in this process (ADVICE r11); _LH_LOCK only guards the dicts
-_LH_TABLE_LOCKS: dict[tuple[str, str], threading.Lock] = {}
 
-
-def _build_compact_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_compact_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0..v5: six small appends (orderkey mod-6 slices, each split
     into 2 files — the micro-batch accretion shape); v6: compact."""
     from frafka_spark.sources.manifest_table import compact, write_table
@@ -76,13 +65,13 @@ def _build_compact_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
     for i in range(N_APPENDS):
         write_table(
             o.filter(F.col("o_orderkey") % N_APPENDS == i).repartition(2),
-            str(tmp),
+            str(dest),
             mode="append" if i else "overwrite",
         )
-    compact(spark, str(tmp))
+    compact(spark, str(dest))
 
 
-def _build_deleted_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_deleted_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0: range-clustered stats write; v1: file-pruned DELETE of
     orderkeys in [DEL_LO, DEL_HI]."""
     from frafka_spark.sources.manifest_table import (
@@ -96,8 +85,8 @@ def _build_deleted_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
-    delete_rows(spark, str(tmp), "o_orderkey", DEL_LO, DEL_HI)
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
+    delete_rows(spark, str(dest), "o_orderkey", DEL_LO, DEL_HI)
 
 
 #: merge change set: orderkeys in [UPD_LO, UPD_HI] get a fixed price
@@ -111,7 +100,7 @@ UPD_BUMP = 100_000.0
 INS_ROWS = [(-i, "1-URGENT", 1000.0 * i) for i in range(1, 6)]
 
 
-def _build_merged_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_merged_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0: range-clustered stats write; v1: file-pruned MERGE whose
     change-set key span [-5, UPD_HI] touches only the low-key files."""
     from frafka_spark.sources.manifest_table import (
@@ -125,7 +114,7 @@ def _build_merged_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
     upd = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey").between(UPD_LO, UPD_HI))
@@ -138,7 +127,7 @@ def _build_merged_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
     ins = spark.createDataFrame(
         INS_ROWS, "o_orderkey long, o_orderpriority string, o_totalprice double"
     )
-    merge_table_pruned(spark, str(tmp), upd.unionByName(ins), key="o_orderkey")
+    merge_table_pruned(spark, str(dest), upd.unionByName(ins), key="o_orderkey")
 
 
 #: bloom point-probe constants: PROBE_CUST exists at every fixture
@@ -147,7 +136,7 @@ PROBE_CUST = 77
 MISS_CUST = -7
 
 
-def _build_bloom_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_bloom_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0: orders clustered on o_orderkey (NOT the probe column) with
     a per-file Bloom index on o_custkey — the unclustered
     high-cardinality equality case min/max stats cannot prune."""
@@ -159,7 +148,7 @@ def _build_bloom_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_bloom(o, str(tmp), ["o_custkey"], mode="overwrite")
+    write_table_with_bloom(o, str(dest), ["o_custkey"], mode="overwrite")
 
 
 _BUILDERS = {
@@ -170,17 +159,14 @@ _BUILDERS = {
 }
 
 
-#: graded constants contributed by OUT-OF-MODULE builders (e.g.
-#: llm/index_store.py) — folded into the freshness fingerprint so
-#: changing them invalidates stale on-disk lifecycle tables exactly
-#: like this module's own constants
-_FP_PARAMS_EXTRA: list = []
+#: tag → the graded constants of an out-of-module builder (e.g.
+#: llm/index_store.py), part of that tag's generation hash
+_PARAMS: dict[str, list] = {}
 
 
 def _register_builder(name, fp_params: list | None = None):
     """Builders defined after the dict literal self-register here."""
-    if fp_params:
-        _FP_PARAMS_EXTRA.append([name, fp_params])
+    _PARAMS[name] = fp_params or []
 
     def deco(fn):
         _BUILDERS[name] = fn
@@ -188,178 +174,32 @@ def _register_builder(name, fp_params: list | None = None):
     return deco
 
 
-def _ensure_table(spark: SparkSession, sf_dir: str, which: str) -> str:
-    """Build (once per fixture generation) the ``which`` lifecycle
-    table. Freshness-markered like the dpp/fileskip/evolution layouts;
-    concurrent constructors serialize on the lock, and the memo makes
-    repeat construction free within a session."""
-    key = (spark.sparkContext.applicationId, sf_dir, which)
-    root = (
-        Path(__file__).resolve().parents[2]
-        / "spark-warehouse"
-        / "lakehouse_layout"
-        / (Path(sf_dir).name or "sf")
-    )
-    dest = root / which
-    marker = root / f"{which}.source.json"
-    st = os.stat(Path(sf_dir) / "orders.parquet")
-    st_e = os.stat(Path(sf_dir) / "events.parquet")
-    # constants participate in the fingerprint so changing the graded
-    # predicate/layout invalidates a stale on-disk lifecycle table
-    fp = {
-        # bump on any change to the persisted index encodings
-        # (e.g. the r11 integral-float bloom canonicalization) so
-        # tables built by older code rebuild once instead of probing
-        # old-encoding bitsets with new-encoding hashes
-        "enc": 2,
-        "size": st.st_size,
-        "mtime_ns": st.st_mtime_ns,
-        "events": [st_e.st_size, st_e.st_mtime_ns],
-        "params": [
+def _table_params(which: str) -> list:
+    """The generation params of one lifecycle table: the persisted
+    index encoding version, this module's builder constants, and the
+    tag's own registered constants."""
+    return [
+        2,  # bump on any change to the persisted index encodings
+        [
             DEL_LO, DEL_HI, N_RANGE_FILES, N_APPENDS,
             UPD_LO, UPD_HI, UPD_BUMP, INS_ROWS, PROBE_CUST,
             N_STREAM_BATCHES, PFX_WORDS,
             UPD2_LO, UPD2_HI, UPD2_BUMP, UPD2_PRIORITY,
         ],
-        "extra": sorted(map(repr, _FP_PARAMS_EXTRA)),
-    }
-    # compare in canonical JSON form: INS_ROWS holds tuples, which a
-    # JSON round-trip turns into lists — comparing the raw dict against
-    # the re-read marker would be always-False, so every new process
-    # would rebuild and rename-aside-swap tables a concurrent reader
-    # may be scanning (ADVICE r10)
-    fp = json.loads(json.dumps(fp))
-    def is_fresh() -> bool:
-        try:
-            # nested lifecycles keep several tables under one dest —
-            # any committed manifest below it marks a usable build
-            return json.loads(marker.read_text()) == fp and any(
-                dest.glob("**/_manifest/v*.json")
-            )
-        except (OSError, json.JSONDecodeError):
-            return False
+        _PARAMS.get(which, []),
+    ]
 
-    with _LH_LOCK:
-        hit = _LH_MEMO.get(key)
-        if hit is not None:
-            return hit
-        tlock = _LH_TABLE_LOCKS.setdefault((sf_dir, which), threading.Lock())
-    with tlock:
-        with _LH_LOCK:
-            hit = _LH_MEMO.get(key)  # built while we waited on tlock
-            if hit is not None:
-                return hit
-        # Cross-process exclusive lock with a double-checked freshness
-        # re-read: when a fingerprint change makes every process see a
-        # stale table at once (each new session's first contact after
-        # a constants bump), exactly ONE process rebuilds — the others
-        # block on the flock, re-read the marker the winner wrote, and
-        # skip. Without this, two concurrent graders both rebuild and
-        # the second's rename-aside swap rmtree's files the first's
-        # in-flight scan still references (the r11 concurrent
-        # double-run caught exactly this). Blocking on the flock holds
-        # only THIS table's tlock, never the module-wide _LH_LOCK.
-        import fcntl
 
-        root.mkdir(parents=True, exist_ok=True)
-        lockf = open(root / f"{which}.lock", "w")
-        try:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            fresh = is_fresh()
-            if not fresh:
-                import shutil
-                import time
-
-                tmp = root / f"_lhbuild_{os.getpid()}_{time.monotonic_ns()}"
-                _BUILDERS[which](spark, sf_dir, tmp)
-                # manifests record absolute paths — retarget before
-                # the rename-aside swap (the fileskip._ensure_layout
-                # pattern); the recursive glob also covers nested
-                # multi-table builds
-                for mf in tmp.glob("**/_manifest/v*.json"):
-                    m = json.loads(mf.read_text())
-                    if "meta" in m:
-                        # sidecar-mode manifest: the file list lives in
-                        # parquet sidecars (retargeted below); the JSON
-                        # only names the sidecars and removed paths
-                        m["meta"]["sidecars"] = [
-                            s.replace(str(tmp), str(dest), 1)
-                            for s in m["meta"]["sidecars"]
-                        ]
-                        m["meta"]["removed"] = [
-                            f.replace(str(tmp), str(dest), 1)
-                            for f in m["meta"]["removed"]
-                        ]
-                    else:
-                        m["files"] = [
-                            f.replace(str(tmp), str(dest), 1)
-                            for f in m["files"]
-                        ]
-                    for keyed in ("stats", "bloom", "dv", "partitions"):
-                        if keyed in m:
-                            m[keyed] = {
-                                k.replace(str(tmp), str(dest), 1): v
-                                for k, v in m[keyed].items()
-                            }
-                    # DV sidecar bitmap paths are absolute too
-                    for e in m.get("dv", {}).values():
-                        if "sidecar" in e:
-                            e["sidecar"] = e["sidecar"].replace(
-                                str(tmp), str(dest), 1
-                            )
-                    mf.write_text(json.dumps(m))
-                # metadata sidecars carry absolute data-file paths in
-                # their ``file`` column — rewrite each parquet in place
-                for sc in tmp.glob("**/_manifest/meta/*.parquet"):
-                    import pyarrow as pa
-                    import pyarrow.parquet as pq
-
-                    t0 = pq.read_table(sc)
-                    t1 = pa.table(
-                        {
-                            "file": pa.array(
-                                [
-                                    f.replace(str(tmp), str(dest), 1)
-                                    for f in t0.column("file").to_pylist()
-                                ],
-                                pa.string(),
-                            ),
-                            "meta": t0.column("meta"),
-                        }
-                    )
-                    pq.write_table(t1, sc)
-                # txn-catalog snapshots pin absolute table paths
-                for cf in tmp.glob("**/_catalog/v*.json"):
-                    c = json.loads(cf.read_text())
-                    for e in c.get("tables", {}).values():
-                        e["path"] = e["path"].replace(
-                            str(tmp), str(dest), 1
-                        )
-                    cf.write_text(json.dumps(c))
-                trash = None
-                if dest.exists():
-                    trash = root / (
-                        f"_trash_{os.getpid()}_{time.monotonic_ns()}"
-                    )
-                    os.rename(dest, trash)
-                dest.parent.mkdir(parents=True, exist_ok=True)
-                try:
-                    os.rename(tmp, dest)
-                except OSError:
-                    if not any(dest.glob("**/_manifest/v*.json")):
-                        raise
-                    shutil.rmtree(tmp, ignore_errors=True)
-                marker.write_text(json.dumps(fp))
-                if trash is not None:
-                    shutil.rmtree(trash, ignore_errors=True)
-        finally:
-            import fcntl as _fcntl
-
-            _fcntl.flock(lockf, _fcntl.LOCK_UN)
-            lockf.close()
-        with _LH_LOCK:
-            _LH_MEMO[key] = str(dest)
-        return str(dest)
+def _ensure_table(spark: SparkSession, sf_dir: str, which: str) -> str:
+    """The ``which`` lifecycle table, built once per fixture generation
+    through the artifact store; nested lifecycles keep several tables
+    under the returned directory."""
+    return disk_artifact(
+        sf_dir,
+        which,
+        _table_params(which),
+        lambda path: _BUILDERS[which](spark, sf_dir, Path(path)),
+    )
 
 
 @query(
@@ -458,7 +298,7 @@ def q_scan_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_deleted_dv_table(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """v0: range-clustered stats write (same layout as the COW twin);
     v1: merge-on-read DELETE of the same key band — zero files
@@ -475,8 +315,8 @@ def _build_deleted_dv_table(
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
-    delete_rows_dv(spark, str(tmp), "o_orderkey", DEL_LO, DEL_HI)
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
+    delete_rows_dv(spark, str(dest), "o_orderkey", DEL_LO, DEL_HI)
 
 
 _BUILDERS["orders_deleted_dv"] = _build_deleted_dv_table
@@ -595,7 +435,7 @@ def apply_cdf_to_rollup(
 
 
 @_register_builder("orders_rollup_ivm", fp_params=[IVM_MOD])
-def _build_ivm_tables(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_ivm_tables(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """corpus v0 = base orders (o_orderkey % IVM_MOD != 0, range-
     clustered stats); v1 = crawl append; v2 = DELETION-VECTOR delete
     of [DEL_LO, DEL_HI]. rollup r0 = one full aggregate over corpus
@@ -615,7 +455,7 @@ def _build_ivm_tables(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    corpus, rollup = tmp / "corpus", tmp / "rollup"
+    corpus, rollup = dest / "corpus", dest / "rollup"
     write_table_with_stats(
         o.filter(F.col("o_orderkey") % IVM_MOD != 0),
         str(corpus), ["o_orderkey"], mode="overwrite",
@@ -803,7 +643,7 @@ UPD2_PRIORITY = "5-LOW"
 
 
 @_register_builder("orders_updated")
-def _build_updated_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_updated_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0: range-clustered stats write; v1: file-pruned UPDATE of the
     [UPD2_LO, UPD2_HI] key band (price bump + priority overwrite)."""
     from frafka_spark.sources.manifest_table import (
@@ -817,10 +657,10 @@ def _build_updated_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
     update_rows(
         spark,
-        str(tmp),
+        str(dest),
         "o_orderkey",
         UPD2_LO,
         UPD2_HI,
@@ -833,7 +673,7 @@ def _build_updated_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
 
 @_register_builder("orders_updated_dv")
 def _build_updated_dv_table(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """v0: range-clustered stats write; v1: MERGE-ON-READ UPDATE of
     the same [UPD2_LO, UPD2_HI] band as the COW twin — matched rows
@@ -849,10 +689,10 @@ def _build_updated_dv_table(
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
     update_rows_dv(
         spark,
-        str(tmp),
+        str(dest),
         "o_orderkey",
         UPD2_LO,
         UPD2_HI,
@@ -864,7 +704,7 @@ def _build_updated_dv_table(
 
 
 @_register_builder("orders_restored")
-def _build_restored_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_restored_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0: range-clustered stats write; v1: the MISTAKE (file-pruned
     DELETE of [DEL_LO, DEL_HI]); v2: RESTORE to v0 as a new commit."""
     from frafka_spark.sources.manifest_table import (
@@ -879,9 +719,9 @@ def _build_restored_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
-    delete_rows(spark, str(tmp), "o_orderkey", DEL_LO, DEL_HI)
-    restore_table(str(tmp), 0)
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
+    delete_rows(spark, str(dest), "o_orderkey", DEL_LO, DEL_HI)
+    restore_table(str(dest), 0)
 
 
 #: three-branch CDC merge: delete band (distinct from every other
@@ -893,7 +733,7 @@ CDC_DEL_HI = 699
 
 
 @_register_builder("orders_cdc", fp_params=[CDC_DEL_LO, CDC_DEL_HI])
-def _build_cdc_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_cdc_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0: range-clustered stats write; v1: one three-branch CDC merge
     (updates [UPD_LO, UPD_HI], inserts INS_ROWS, deletes
     [CDC_DEL_LO, CDC_DEL_HI])."""
@@ -908,7 +748,7 @@ def _build_cdc_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
     upd = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey").between(UPD_LO, UPD_HI))
@@ -933,7 +773,7 @@ def _build_cdc_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
         )
     )
     merge_table_cdc(
-        spark, str(tmp), upd.unionByName(ins).unionByName(dels),
+        spark, str(dest), upd.unionByName(ins).unionByName(dels),
         key="o_orderkey",
     )
 
@@ -1144,7 +984,7 @@ def q_scan_restored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register_builder("orders_cloned")
-def _build_cloned_tables(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_cloned_tables(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """source v0 = orders; clone = SHALLOW CLONE (zero data files);
     clone v1 = INS_ROWS appended to the CLONE ONLY — the source must
     stay bit-identical."""
@@ -1153,7 +993,7 @@ def _build_cloned_tables(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    src, dst = tmp / "source", tmp / "clone"
+    src, dst = dest / "source", dest / "clone"
     write_table(o, str(src), mode="overwrite")
     clone_table(str(src), str(dst))
     ins = spark.createDataFrame(
@@ -1217,7 +1057,7 @@ N_STREAM_BATCHES = 4
 
 @_register_builder("events_streamed")
 def _build_stream_sink_table(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """Replay events into the manifest table through the exactly-once
     ``foreachBatch`` body: four deterministic micro-batches
@@ -1233,11 +1073,11 @@ def _build_stream_sink_table(
     for bid in range(N_STREAM_BATCHES):
         part = e.filter(F.col("event_id") % N_STREAM_BATCHES == bid)
         assert (
-            write_stream_batch(part, bid, str(tmp), ["event_id"]) == bid
+            write_stream_batch(part, bid, str(dest), ["event_id"]) == bid
         )
     # redelivered batch: same id, must be a no-op
     redelivered = write_stream_batch(
-        e.filter(F.col("event_id") % N_STREAM_BATCHES == 1), 1, str(tmp)
+        e.filter(F.col("event_id") % N_STREAM_BATCHES == 1), 1, str(dest)
     )
     assert redelivered is None
 
@@ -1300,7 +1140,7 @@ def _pfx_col():
 
 
 @_register_builder("documents_curated")
-def _build_curated_tables(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_curated_tables(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """The incremental-curation pipeline, run once per fixture:
 
     staging  v0 = corpus append (doc_id % 7 != 0)
@@ -1319,7 +1159,7 @@ def _build_curated_tables(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     corpus = d.filter(F.col("doc_id") % 7 != 0)
     crawl = d.filter(F.col("doc_id") % 7 == 0)
-    staging, curated = tmp / "staging", tmp / "curated"
+    staging, curated = dest / "staging", dest / "curated"
     write_table(corpus, str(staging), mode="overwrite")
     write_table(crawl, str(staging), mode="append")
     write_table(corpus, str(curated), mode="overwrite")
@@ -1420,7 +1260,7 @@ AC_THRESHOLD = 0.30
     fp_params=[PP_PRIORITY, PP_KEY_LO, PP_KEY_HI, N_PART_RANGE],
 )
 def _build_partitioned_table(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """One overwrite: orders hive-partitioned by o_orderpriority with
     per-file o_orderkey min/max stats — every file is (priority ×
@@ -1435,7 +1275,7 @@ def _build_partitioned_table(
     )
     write_table_with_stats(
         o,
-        str(tmp),
+        str(dest),
         ["o_orderkey"],
         mode="overwrite",
         partition_by=["o_orderpriority"],
@@ -1506,7 +1346,7 @@ def q_scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp_params=[AC_FRAC_NUM, AC_FRAC_DEN, AC_THRESHOLD, N_RANGE_FILES],
 )
 def _build_autocompacted_table(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """v0: range-clustered stats write (8 files); v1: DV delete of
     the low 3/40 of the key space (≈60% of file 0's rows — dense);
@@ -1524,11 +1364,11 @@ def _build_autocompacted_table(
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
     maxk = o.agg(F.max("o_orderkey")).first()[0]
     bound = maxk * AC_FRAC_NUM // AC_FRAC_DEN
-    delete_rows_dv(spark, str(tmp), "o_orderkey", 1, bound)
-    auto_compact(spark, str(tmp), max_deleted_fraction=AC_THRESHOLD)
+    delete_rows_dv(spark, str(dest), "o_orderkey", 1, bound)
+    auto_compact(spark, str(dest), max_deleted_fraction=AC_THRESHOLD)
 
 
 @query(
@@ -1587,7 +1427,7 @@ def q_scan_autocompacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orders_deleted_dv_spilled", fp_params=[AC_FRAC_NUM, AC_FRAC_DEN]
 )
 def _build_deleted_dv_spilled_table(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """v0: range-clustered stats write (8 files); v1: DV delete of the
     low 3/40 of the key space and NOTHING else — at sf0.01 that is
@@ -1606,10 +1446,10 @@ def _build_deleted_dv_spilled_table(
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
     maxk = o.agg(F.max("o_orderkey")).first()[0]
     bound = maxk * AC_FRAC_NUM // AC_FRAC_DEN
-    delete_rows_dv(spark, str(tmp), "o_orderkey", 1, bound)
+    delete_rows_dv(spark, str(dest), "o_orderkey", 1, bound)
 
 
 @query(
@@ -1688,7 +1528,7 @@ MS_BAND_LO, MS_BAND_HI = 1201, 1480  # the graded pruned read
     fp_params=[MS_N_FILES, MS_SPLIT_MOD, MS_DEL_LO, MS_DEL_HI],
 )
 def _build_meta_sidecar_table(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """Three commits against a {MS_N_FILES}-file snapshot (> the 64
     spill threshold, so per-file metadata lives in parquet sidecars
@@ -1713,7 +1553,7 @@ def _build_meta_sidecar_table(
 
     write_table_with_stats(
         clustered(o.filter(F.col("o_orderkey") % MS_SPLIT_MOD != 0), MS_N_FILES),
-        str(tmp),
+        str(dest),
         ["o_orderkey"],
         mode="overwrite",
     )
@@ -1721,11 +1561,11 @@ def _build_meta_sidecar_table(
         clustered(
             o.filter(F.col("o_orderkey") % MS_SPLIT_MOD == 0), MS_N_FILES // 6
         ),
-        str(tmp),
+        str(dest),
         ["o_orderkey"],
         mode="append",
     )
-    delete_rows(spark, str(tmp), "o_orderkey", MS_DEL_LO, MS_DEL_HI)
+    delete_rows(spark, str(dest), "o_orderkey", MS_DEL_LO, MS_DEL_HI)
 
 
 @query(
@@ -1790,7 +1630,7 @@ PE_STATUS = "F"
 
 @_register_builder("orders_partition_evolved", fp_params=[PE_STATUS])
 def _build_partition_evolved_table(
-    spark: SparkSession, sf_dir: str, tmp: Path
+    spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
     """v0: even orderkeys partitioned by o_orderpriority; v1:
     ``evolve_partitioning`` → ["o_orderstatus"] (zero files touched);
@@ -1806,12 +1646,12 @@ def _build_partition_evolved_table(
     )
     write_table(
         o.filter(F.col("o_orderkey") % 2 == 0),
-        str(tmp),
+        str(dest),
         mode="overwrite",
         partition_by=["o_orderpriority"],
     )
-    evolve_partitioning(str(tmp), ["o_orderstatus"])
-    write_table(o.filter(F.col("o_orderkey") % 2 == 1), str(tmp), mode="append")
+    evolve_partitioning(str(dest), ["o_orderstatus"])
+    write_table(o.filter(F.col("o_orderkey") % 2 == 1), str(dest), mode="append")
 
 
 @query(
@@ -1884,7 +1724,7 @@ VAC_FRAC_NUM, VAC_FRAC_DEN = 35, 40
 
 
 @_register_builder("orders_vacuumed", fp_params=[VAC_FRAC_NUM, VAC_FRAC_DEN])
-def _build_vacuumed_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
+def _build_vacuumed_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0: range-clustered stats write (8 files); v1: copy-on-write
     DELETE of the top 5/40 of the key space (rewrites only the
     span-intersecting tail files); v2: full compact; then
@@ -1904,18 +1744,18 @@ def _build_vacuumed_table(spark: SparkSession, sf_dir: str, tmp: Path) -> None:
         .repartitionByRange(N_RANGE_FILES, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    write_table_with_stats(o, str(tmp), ["o_orderkey"], mode="overwrite")
+    write_table_with_stats(o, str(dest), ["o_orderkey"], mode="overwrite")
     maxk = o.agg(F.max("o_orderkey")).first()[0]
     lo = maxk * VAC_FRAC_NUM // VAC_FRAC_DEN + 1
-    delete_rows(spark, str(tmp), "o_orderkey", lo, maxk)
-    compact(spark, str(tmp))
-    deleted = vacuum(str(tmp), keep_last=1)
+    delete_rows(spark, str(dest), "o_orderkey", lo, maxk)
+    compact(spark, str(dest))
+    deleted = vacuum(str(dest), keep_last=1)
     # the builder itself guarantees the retention pass had teeth: the
     # CoW delete and the compact both strand files, so a vacuum that
     # removes nothing means the lifecycle under grade never happened
     if not deleted:
         raise RuntimeError("vacuum deleted no files — lifecycle broken")
-    if current_version(str(tmp)) != 2:
+    if current_version(str(dest)) != 2:
         raise RuntimeError("expected exactly v0..v2 before retention")
 
 

@@ -183,3 +183,16 @@ def test_correctness_union_covers_registry():
         f"{len(never)} never-graded queries exceed two grading windows "
         f"({2 * GRADING_WINDOW}) — first driver row would wait >2 rounds"
     )
+
+
+def test_one_layout_root_and_one_lock_discipline():
+    """Only the artifact store names the layout root or takes file
+    locks; every other module goes through ``frafka_spark.artifacts``."""
+    pkg = REPO / "frafka_spark"
+    offenders = [
+        str(p.relative_to(REPO))
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "artifacts.py"
+        and ("fcntl" in (src := p.read_text()) or "spark-warehouse" in src)
+    ]
+    assert offenders == []

@@ -1479,16 +1479,15 @@ def test_curation_delta_reads_only_the_crawl_files(spark):
 
 
 def test_lifecycle_freshness_marker_prevents_rebuild(spark):
-    """ADVICE r10: the lifecycle freshness fingerprint must survive a
-    JSON round-trip (INS_ROWS holds tuples → lists), or every new
-    process rebuilds and rename-aside swaps tables a concurrent
-    reader may be scanning. Pin: with the memo cleared (a fresh
-    process, as far as _ensure_table can tell), a second ensure is a
-    pure marker check — same path, zero manifest rewrites."""
+    """A committed lifecycle generation is never rebuilt: with the
+    session store cleared (a fresh process, as far as the store can
+    tell), a second ensure is a pure marker check — same path, zero
+    manifest rewrites."""
     import os
     from pathlib import Path
 
-    from frafka_spark.operators.lakehouse import _LH_MEMO, _ensure_table
+    from frafka_spark import artifacts
+    from frafka_spark.operators.lakehouse import _ensure_table
 
     path = _ensure_table(spark, SF_DIR, "orders_compacted")
     manifests = sorted(Path(path).glob("**/_manifest/v*.json"))
@@ -1496,10 +1495,10 @@ def test_lifecycle_freshness_marker_prevents_rebuild(spark):
     before = {str(p): os.stat(p).st_mtime_ns for p in manifests}
     inode_before = os.stat(path).st_ino
 
-    _LH_MEMO.clear()
+    artifacts._SESSION.clear()
     again = _ensure_table(spark, SF_DIR, "orders_compacted")
     assert again == path
-    assert os.stat(path).st_ino == inode_before  # no rename-aside swap
+    assert os.stat(path).st_ino == inode_before  # not rebuilt
     after = {
         str(p): os.stat(p).st_mtime_ns
         for p in sorted(Path(path).glob("**/_manifest/v*.json"))

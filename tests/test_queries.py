@@ -38,6 +38,12 @@ _CROSS_SF_QUERIES = (
     "q_tpch_q19_shape",       # disjunctive pushdown
     "q_events_rfm",           # melted one-exchange multi-ranking (r6 wave 3)
     "q_llm_dedup_segment",    # sub-document dedup join (r6 wave 3)
+    # artifact-store consumers: one generation per fixture directory
+    "q_join_bucketed",
+    "q_scan_dpp",
+    "q_scan_file_skip",
+    "q_scan_evolved",
+    "q_scan_compacted",
 )
 
 

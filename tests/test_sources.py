@@ -733,59 +733,74 @@ def test_text_source_reads_corpus_shards_with_provenance(spark, tmp_path):
     assert by_line["gamma"].endswith("shard-001.txt")
 
 
-def test_dpp_layout_rewrites_when_fixture_fingerprint_changes(spark):
-    """The DPP layout's freshness marker: a marker that no longer
-    matches the source parquet's (size, mtime) fingerprint must
-    trigger a rewrite on next access — a regenerated fixture can
-    never be served from a stale layout."""
-    import json
-    import time
+def test_dpp_layout_rewrites_when_fixture_fingerprint_changes(
+    spark, tmp_path
+):
+    """A regenerated fixture (same bytes, new mtime) must get a new
+    DPP layout generation on next access — the stale layout path is
+    never served again, and the old generation is left untouched."""
+    import os
+    import shutil
     from pathlib import Path
 
     from frafka_spark.operators import dpp
 
-    path = Path(dpp._ensure_layout(spark, SF_DIR))
-    marker = path.parent / "source.json"
-    good = json.loads(marker.read_text())
-    assert good == dpp._events_fingerprint(SF_DIR)
+    sf = tmp_path / "sf_refreshed"
+    shutil.copytree(SF_DIR, sf)
+    path = Path(dpp._ensure_layout(spark, str(sf)))
+    assert (path / "_ARTIFACT.json").exists()
+    assert Path(dpp._ensure_layout(spark, str(sf))) == path
     before = (path / "_SUCCESS").stat().st_mtime_ns
 
-    marker.write_text(json.dumps({"size": -1, "mtime_ns": 0}))
-    time.sleep(0.01)
-    path2 = Path(dpp._ensure_layout(spark, SF_DIR))
-    assert path2 == path
-    assert (path / "_SUCCESS").stat().st_mtime_ns > before  # rewritten
-    assert json.loads(marker.read_text()) == good  # marker healed
+    ev = sf / "events.parquet"
+    st = ev.stat()
+    os.utime(ev, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    path2 = Path(dpp._ensure_layout(spark, str(sf)))
+    assert path2 != path and path2.parent == path.parent
+    assert (path2 / "_ARTIFACT.json").exists()
+    assert (path / "_SUCCESS").stat().st_mtime_ns == before
+    assert spark.read.parquet(str(path2)).count() == spark.read.parquet(
+        str(ev)
+    ).count()
+    for gen in (path, path2):
+        shutil.rmtree(gen)
+        os.unlink(f"{gen}.lock")
 
 
-def test_bucketed_tables_recover_from_orphaned_location(spark):
-    """The bucketed-layout writer must survive a managed-table
-    location left on disk by a previous process with no entry in this
-    session's catalog (the LOCATION_ALREADY_EXISTS failure mode):
-    drop the catalog entry and per-session memo, leave the directory,
-    and re-create — the write must succeed and the join still
-    computes."""
+def test_bucketed_tables_reregister_without_rewrite(spark):
+    """A new session over an existing bucketed generation only
+    registers catalog metadata: with the session store cleared and
+    the catalog entries dropped, re-ensuring rewrites no file under
+    the generation (same inodes and mtimes) and the tables still
+    read."""
+    import os
+    from pathlib import Path
+
+    from frafka_spark import artifacts
     from frafka_spark.operators import bucketed
 
     o_name, l_name = bucketed._bucketed_tables(spark, SF_DIR)
-    # simulate "previous process": this session's catalog forgets the
-    # tables (DROP also removes the managed locations), then the
-    # orphaned directories reappear as a dead process would leave them
-    spark.sql(f"DROP TABLE IF EXISTS {o_name}")
-    spark.sql(f"DROP TABLE IF EXISTS {l_name}")
-    with bucketed._BUCKET_LOCK:
-        bucketed._BUCKETED.clear()
-    from urllib.parse import urlparse
-    from pathlib import Path
+    loc = spark.sql(f"DESCRIBE TABLE EXTENDED {o_name}").filter(
+        "col_name = 'Location'"
+    ).first()["data_type"]
+    gen = Path(loc.replace("file:", "", 1)).parent
+    assert (gen / "_ARTIFACT.json").exists()
 
-    wh = Path(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
-    for name in (o_name, l_name):
-        (wh / name).mkdir(parents=True, exist_ok=True)
-        (wh / name / "stale.parquet").write_bytes(b"junk")
-    assert (wh / o_name).exists()  # the orphaned location is there
+    def snapshot():
+        return {
+            p: (os.stat(p).st_ino, os.stat(p).st_mtime_ns)
+            for p in gen.rglob("*")
+        }
+
+    before = snapshot()
+    spark.sql(f"DROP TABLE IF EXISTS {o_name}")  # external: files stay
+    spark.sql(f"DROP TABLE IF EXISTS {l_name}")
+    for key in [k for k in artifacts._SESSION if k[2] == "bucketed"]:
+        del artifacts._SESSION[key]
 
     o2, l2 = bucketed._bucketed_tables(spark, SF_DIR)
     assert (o2, l2) == (o_name, l_name)
+    assert snapshot() == before
     assert spark.table(o2).count() > 0
 
 
