@@ -26,6 +26,10 @@ from frafka_spark.registry import query
 EDGE_TOP_K = 1000  # strongest co-activity edges kept (by co, u1, u2)
 SEED_MOD = 10  # user_id % 10 == 0 → seeded with its dominant type
 LP_BLOCK_CAP = 512  # same hour-block cap as q_events_triangles
+# The in-row pair fan (_copair_counts) materializes each hour block's
+# cap·(cap−1)/2 (u1, u2) structs as one array before the explode, so
+# per-row memory grows as cap²/2: ~131k structs, a few MB, at 512.
+# Raising the cap 10× makes each row 100× larger.
 
 # The declared chain state space (a config constant, like funnel
 # steps elsewhere in this repo): transitions outside it are ignored.

@@ -49,6 +49,10 @@ def get_spark(
             + os.environ.get("SPARK_GRAFT_CODECACHE", "512m"),
         )
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that skips the per-task
+        # rescan of unchanged zip archives (worker_daemon.py): ~130-180
+        # ms of fixed cost off every pandas_udf / mapInPandas / udf task.
+        .config("spark.python.daemon.module", "frafka_spark.worker_daemon")
         # 32 MiB broadcast threshold: every dim table in the fixture star
         # schema broadcasts; at 100 TB the dims are still ≤ GBs vs a
         # multi-TB fact table, so broadcasting dims remains correct.

@@ -3056,7 +3056,8 @@ def committed_batch_ids(path: str) -> set[int]:
         return ids
     for v in range(0, latest + 1):
         if os.path.exists(_manifest_path(path, v)):
-            b = _read_manifest(path, v).get("batch_id")
+            # a top-level key: no metadata sidecar needs rehydrating
+            b = _read_manifest_raw(path, v).get("batch_id")
             if b is not None:
                 ids.add(b)
     return ids
@@ -3173,7 +3174,7 @@ def write_stream_batch(
     if carried_dv:
         manifest["dv"] = carried_dv
     if prev is not None:
-        _carry_partitions_append(manifest, _read_manifest(path, prev))
+        _carry_partitions_append(manifest, pm)
     _commit(path, version, manifest)
     return version
 

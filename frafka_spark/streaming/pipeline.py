@@ -183,7 +183,16 @@ class PipelineListener(StreamingQueryListener):
 
 
 class Pipeline:
-    """source → transform → sink with Ack/Fail/DLQ parity."""
+    """source → transform → sink with Ack/Fail/DLQ parity.
+
+    Each micro-batch writes the DLQ (``fail_sink``) before the main
+    sink. A batch redelivered after a crash between the two writes
+    reruns both with the same ``batch_id``. A plain ``FrSink.parquet``
+    fail sink appends again, so its DLQ is at-least-once;
+    ``FrSink.parquet_txn`` replaces the batch's own partition, which
+    makes the DLQ exactly-once beside an exactly-once main sink
+    (``FrSink.manifest`` or ``parquet_txn``).
+    """
 
     def __init__(
         self,

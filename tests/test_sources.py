@@ -2556,6 +2556,30 @@ def test_meta_sidecar_spill_rehydrate_and_delta_append(spark, tmp_path, monkeypa
     assert mt.read_table(spark, path, version=0).count() == 100  # time travel
 
 
+def test_committed_batch_ids_skip_meta_sidecars(spark, tmp_path, monkeypatch):
+    """Every stream commit first reads the committed batch ids. Each id
+    is a top-level manifest key, so on a sidecar-mode table the read
+    must not rehydrate any version's per-file metadata sidecars."""
+    from frafka_spark.sources import manifest_table as mt
+
+    monkeypatch.setattr(mt, "META_SIDECAR_MIN_FILES", 2)
+    path = str(tmp_path / "streamed")
+    for bid in (3, 5, 8):
+        df = spark.range(bid * 10, bid * 10 + 10).withColumnRenamed("id", "k")
+        assert mt.write_stream_batch(df.repartition(3), bid, path) is not None
+    assert "meta" in mt._read_manifest_raw(path, 2)
+
+    read = mt._read_meta_sidecar
+    calls: list[str] = []
+    monkeypatch.setattr(
+        mt, "_read_meta_sidecar", lambda sc: calls.append(sc) or read(sc)
+    )
+    assert mt.committed_batch_ids(path) == {3, 5, 8}
+    assert calls == []
+    assert mt.write_stream_batch(df, 8, path) is None  # redelivery skipped
+    assert mt.read_table(spark, path).count() == 30
+
+
 def test_meta_sidecar_distributed_prune_and_probe(spark, tmp_path, monkeypatch):
     """read_table_pruned over a sidecar-mode table plans the prune as
     a Spark metadata scan (probe records distributed=True) and skips
