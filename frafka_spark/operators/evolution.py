@@ -67,7 +67,8 @@ def _ensure_evolved_table(spark: SparkSession, sf_dir: str) -> str:
         )
         rename_column(path, "o_totalprice", "price")
 
-    return disk_artifact(sf_dir, "orders_evolved", [SEG_PRICE], build)
+    # 2: version of the persisted manifests' carry rules
+    return disk_artifact(sf_dir, "orders_evolved", [2, SEG_PRICE], build)
 
 
 @query(

@@ -70,7 +70,8 @@ def _ensure_layout(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
 
         max_pk = li.agg(F.max("l_partkey")).first()[0]
         hi = (int(max_pk) + SKIP_DEN - 1) // SKIP_DEN
-        return disk_artifact(sf_dir, "lineitem_z", [N_ZFILES], build), hi
+        # 2: version of the persisted manifest's carry rules
+        return disk_artifact(sf_dir, "lineitem_z", [2, N_ZFILES], build), hi
 
     return session_artifact(spark, sf_dir, "lineitem_z", resolve)
 

@@ -175,11 +175,11 @@ def _register_builder(name, fp_params: list | None = None):
 
 
 def _table_params(which: str) -> list:
-    """The generation params of one lifecycle table: the persisted
-    index encoding version, this module's builder constants, and the
-    tag's own registered constants."""
+    """The generation params of one lifecycle table: the version of
+    the persisted manifest and index encodings, this module's builder
+    constants, and the tag's own registered constants."""
     return [
-        2,  # bump on any change to the persisted index encodings
+        3,  # bump on any change to the persisted manifests or indexes
         [
             DEL_LO, DEL_HI, N_RANGE_FILES, N_APPENDS,
             UPD_LO, UPD_HI, UPD_BUMP, INS_ROWS, PROBE_CUST,

@@ -23,6 +23,16 @@ it under the hood:
 - the current table state is simply the highest manifest version;
   readers pin a version for a consistent read at any later time.
 
+What a commit carries: every commit builds manifest N+1 through
+``_compose``, from a base manifest (normally N), the new file list and
+the keys the operation changes. TABLE keys (``schema``,
+``column_mapping``, ``retired_physical``, ``constraints``,
+``partition_by``) carry unless the operation changes them. PER-FILE
+maps (``stats``, ``bloom``, ``partitions``, ``dv``) carry their entries
+for exactly the files the new snapshot keeps. PER-COMMIT keys
+(``committed_at``, ``batch_id``, ``evolution``, ``restored_from``,
+``cloned_from``, caller markers such as ``txn_id``) never carry.
+
 Scale notes: the manifest lists file paths, not rows — O(files) per
 commit, like Delta. Reads hand Spark the file list, so partition
 pruning/pushdown work unchanged. On object stores without atomic
@@ -47,7 +57,7 @@ class SchemaConflict(Exception):
     """Append would drop or retype existing columns — rewrite instead."""
 
 
-def _check_append_schema(df: DataFrame, prev_manifest: dict | str) -> None:
+def _check_append_schema(df: DataFrame, prev_manifest: dict) -> None:
     """Additive evolution only: every existing column must survive
     with its type; new columns are allowed (old files read as NULL
     for them via the snapshot-schema projection in read_table) —
@@ -56,8 +66,6 @@ def _check_append_schema(df: DataFrame, prev_manifest: dict | str) -> None:
     implicit re-add would resurrect that dead data, so the append is
     rejected with the explicit-``add_column`` remedy (which assigns a
     fresh physical identity)."""
-    if isinstance(prev_manifest, str):  # legacy call shape: schema json
-        prev_manifest = {"schema": prev_manifest}
     prev = _schema_from_json(prev_manifest["schema"])
     prev_names = {f.name for f in prev.fields}
     retired = set(prev_manifest.get("retired_physical", []))
@@ -155,6 +163,9 @@ META_SIDECAR_MIN_FILES = 64
 #: list (drops fully-removed sidecars, folds the removed set) — the
 #: DV-compaction discipline applied to the metadata layer.
 META_REMOVED_COMPACT_FRAC = 0.5
+
+#: target false-positive rate of the per-file Bloom filters
+_BLOOM_FPP = 0.01
 
 
 def _meta_sidecar_dir(path: str) -> str:
@@ -349,33 +360,6 @@ def _partitions_of(manifest: dict) -> dict:
     return manifest.get("partitions", {})
 
 
-def _carry_partitions(new_manifest: dict, prev_manifest: dict) -> None:
-    """Carry partition metadata for every kept file (files added by a
-    non-partitioned writer — DML update images — simply lack an
-    entry, which every pruner treats conservatively: always read)."""
-    if prev_manifest.get("partition_by"):
-        new_manifest["partition_by"] = prev_manifest["partition_by"]
-    parts = _partitions_of(prev_manifest)
-    if parts:
-        kept = {
-            fp: parts[fp] for fp in new_manifest["files"] if fp in parts
-        }
-        if kept:
-            new_manifest["partitions"] = kept
-
-
-def _carry_partitions_append(new_manifest: dict, prev_manifest: dict) -> None:
-    """Carry partition metadata across an APPEND-shaped commit (every
-    previous file kept): layout list and per-file tuples carry
-    verbatim; files the commit added without partition metadata stay
-    conservative (always read)."""
-    if prev_manifest.get("partition_by") and "partition_by" not in new_manifest:
-        new_manifest["partition_by"] = prev_manifest["partition_by"]
-    parts = _partitions_of(prev_manifest)
-    if parts and "partitions" not in new_manifest:
-        new_manifest["partitions"] = parts
-
-
 def _span_keep_files(
     manifest: dict, col: str, lo, hi, _probe: dict | None = None
 ) -> list[str]:
@@ -525,6 +509,189 @@ def _commit(path: str, version: int, manifest: dict) -> None:
         json.dump(manifest, fh, indent=1, sort_keys=True)
 
 
+#: table keys describe the whole table: carried unless an op changes them
+_TABLE_KEYS = (
+    "schema", "column_mapping", "retired_physical", "constraints",
+    "partition_by",
+)
+#: per-file maps: carried for exactly the files the new snapshot keeps
+_FILE_MAPS = ("stats", "bloom", "partitions", "dv")
+
+
+def _compose(
+    path: str,
+    prev: int | None,
+    base: dict,
+    files: list[str],
+    mode: str,
+    added: dict | None = None,
+    extra: dict | None = None,
+    **changes,
+) -> int:
+    """Commit the snapshot after ``prev`` (v0 when ``prev`` is None)
+    holding ``files``, composed from ``base`` by the carry rule in the
+    module docstring; returns the committed version. ``changes``
+    replace a key (None or an empty value drops it), ``added`` merges
+    per-file entries for the new files into the carried maps, and
+    ``extra`` adds caller marker keys that never shadow a protocol
+    key. Raises ``CommitConflict`` if ``prev + 1`` is taken."""
+    version = 0 if prev is None else prev + 1
+    manifest = {k: base[k] for k in _TABLE_KEYS + _FILE_MAPS if base.get(k)}
+    manifest.update(changes)
+    for k, entries in (added or {}).items():
+        manifest[k] = {**(manifest.get(k) or {}), **entries}
+    keep = set(files)
+    for k in _FILE_MAPS:
+        if manifest.get(k):
+            manifest[k] = {
+                fp: e for fp, e in manifest[k].items() if fp in keep
+            }
+    manifest = {k: v for k, v in manifest.items() if v not in (None, {}, [])}
+    manifest.update(version=version, mode=mode, parent=prev, files=files)
+    for k, v in (extra or {}).items():
+        manifest.setdefault(k, v)
+    _commit(path, version, manifest)
+    return version
+
+
+def _index_new_files(build, files: list[str], cols: list[str],
+                     mapping: dict[str, str], **kw) -> dict:
+    """Per-file index entries (``build`` is ``_file_stats`` or
+    ``_file_blooms``) for ``files`` written under the PHYSICAL names
+    of ``mapping``, keyed by the LOGICAL names the manifest records."""
+    phys = [mapping.get(c, c) for c in cols]
+    inverse = dict(zip(phys, cols))
+    return {
+        fp: {inverse.get(c, c): e for c, e in entries.items()}
+        for fp, entries in build(files, phys, **kw).items()
+    }
+
+
+def _stats_like_parent(spark, parent: dict, new_files: list[str]) -> dict:
+    """Stats for the files a rewrite commit adds, on the columns the
+    parent snapshot records stats for (none if it records none)."""
+    cols = sorted(
+        {c for spans in parent.get("stats", {}).values() for c in spans}
+    )
+    if not cols:
+        return {}
+    return _index_new_files(
+        _file_stats, new_files, cols, _mapping_of(parent), spark=spark
+    )
+
+
+def _write(
+    df: DataFrame,
+    path: str,
+    mode: str = "append",
+    retries: int = 3,
+    partition_by: list[str] | None = None,
+    manifest_extra: dict | None = None,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    fpp: float = _BLOOM_FPP,
+    batch_id: int | None = None,
+) -> int | None:
+    """The one append/overwrite commit behind ``write_table``,
+    ``write_table_with_stats``, ``write_table_with_bloom`` and
+    ``write_stream_batch``: checks, data files, per-file indexes over
+    ``stats_cols`` / ``bloom_cols``, then the compose + retry loop
+    ``write_table`` documents. A ``batch_id`` already in the table's
+    history returns None without committing."""
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+    new_files: list[str] | None = None
+    for attempt in range(retries + 1):
+        if batch_id is not None and batch_id in committed_batch_ids(path):
+            return None  # a redelivered (or raced) batch is already in
+        prev = current_version(path)
+        pm = {} if prev is None else _read_manifest(path, prev)
+        _enforce_constraints(df, pm)  # before any data write
+        part_cols = partition_by
+        carried: list[str] = []
+        mapping: dict[str, str] = {}
+        # an overwrite writes logical names: no mapping, none retired
+        reset: dict = {"column_mapping": None, "retired_physical": None}
+        if mode == "append" and pm:
+            _check_append_schema(df, pm)
+            carried = pm["files"]
+            mapping = _mapping_of(pm)  # renames persist: physical
+            reset = {}
+            prev_part = pm.get("partition_by")
+            if prev_part:
+                if partition_by is not None and list(partition_by) != list(
+                    prev_part
+                ):
+                    raise SchemaConflict(
+                        f"append partitioned by {partition_by} onto a "
+                        f"table partitioned by {prev_part}; repartition "
+                        "with mode='overwrite'"
+                    )
+                part_cols = prev_part  # layout is sticky
+        if new_files is None:
+            # written exactly once; a retry recomposes metadata only.
+            # (If the winner RENAMED a column, its new mapping applies
+            # to files written after its commit — ours were written
+            # under the pre-race mapping, so a changed mapping forces
+            # a loud conflict instead of silently mis-mapped bytes.)
+            files_mapping = mapping
+            files_part_cols = part_cols
+            data = _to_physical(df, mapping)
+            added: dict = {}
+            if part_cols:
+                # the data frame is written under PHYSICAL names; the
+                # manifest's partition values stay keyed LOGICAL
+                phys_part = [mapping.get(c, c) for c in part_cols]
+                new_files, parts = _write_data_files_partitioned(
+                    data, path, phys_part
+                )
+                inv = dict(zip(phys_part, part_cols))
+                added["partitions"] = {
+                    fp: {inv[pc]: v for pc, v in d.items()}
+                    for fp, d in parts.items()
+                }
+            else:
+                new_files = _write_data_files(data, path)
+            spark = df.sparkSession
+            if stats_cols:
+                added["stats"] = _index_new_files(
+                    _file_stats, new_files, stats_cols, mapping, spark=spark
+                )
+            if bloom_cols:
+                added["bloom"] = _index_new_files(
+                    _file_blooms, new_files, bloom_cols, mapping, fpp=fpp,
+                    spark=spark,
+                )
+        elif mapping != files_mapping:
+            raise CommitConflict(
+                f"concurrent writer changed the column mapping of {path}; "
+                "re-run the write against the new snapshot"
+            )
+        elif part_cols != files_part_cols:
+            # our files were laid out (and their tuples recorded)
+            # under the pre-race layout — recording them under the
+            # winner's layout would mislabel partitions silently
+            raise CommitConflict(
+                f"concurrent writer repartitioned {path} "
+                f"({files_part_cols} → {part_cols}); re-run the write "
+                "against the new snapshot"
+            )
+        try:
+            return _compose(
+                path, prev, pm, carried + new_files, mode,
+                added=added,
+                extra=manifest_extra,
+                schema=df.schema.json(),
+                partition_by=list(part_cols) if part_cols else None,
+                batch_id=batch_id,
+                **reset,
+            )
+        except CommitConflict:
+            if attempt == retries:
+                raise
+    raise AssertionError("unreachable")
+
+
 def write_table(
     df: DataFrame,
     path: str,
@@ -538,7 +705,9 @@ def write_table(
     ``mode="append"`` — the new snapshot is the previous snapshot's
     files plus the new files; ``mode="overwrite"`` — the new snapshot
     is only the new files (old files stay on disk for time travel
-    until a retention vacuum, exactly like Delta).
+    until a retention vacuum, exactly like Delta). Both modes enforce
+    the table's CHECK constraints and keep them; an overwrite resets
+    the column mapping, the per-file maps and the layout.
 
     ``partition_by`` — hive-partition the data files on these columns
     and record each file's partition tuple in the manifest, enabling
@@ -559,111 +728,7 @@ def write_table(
     no commit is lost and no rows duplicate. After ``retries``
     consecutive losses the ``CommitConflict`` propagates.
     """
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    new_files: list[str] | None = None
-    for attempt in range(retries + 1):
-        prev = current_version(path)
-        mapping: dict[str, str] = {}
-        carried: list[str] = []
-        retired: list[str] = []
-        constraints: dict[str, str] = {}
-        dv_prev: dict = {}
-        part_cols = partition_by
-        carried_parts: dict = {}
-        if prev is not None:
-            pm = _read_manifest(path, prev)
-            constraints = pm.get("constraints", {})
-            if constraints:
-                _enforce_constraints(df, pm)  # before any data write
-            if mode == "append":
-                _check_append_schema(df, pm)
-                carried = pm["files"]
-                # deletion vectors MUST survive an append — dropping
-                # them would resurrect merge-on-read-deleted rows
-                dv_prev = _dv_of(pm)
-                mapping = _mapping_of(pm)  # renames persist: physical
-                retired = pm.get("retired_physical", [])
-                prev_part = pm.get("partition_by")
-                if prev_part:
-                    if partition_by is not None and list(
-                        partition_by
-                    ) != list(prev_part):
-                        raise SchemaConflict(
-                            f"append partitioned by {partition_by} onto a "
-                            f"table partitioned by {prev_part}; repartition "
-                            "with mode='overwrite'"
-                        )
-                    part_cols = prev_part  # layout is sticky
-                    carried_parts = _partitions_of(pm)
-        if new_files is None:
-            # written exactly once; a retry recomposes metadata only.
-            # (If the winner RENAMED a column, its new mapping applies
-            # to files written after its commit — ours were written
-            # under the pre-race mapping, so a changed mapping forces
-            # a loud conflict instead of silently mis-mapped bytes.)
-            files_mapping = mapping
-            files_part_cols = part_cols
-            if part_cols:
-                # the data frame is written under PHYSICAL names; the
-                # manifest's partition values stay keyed LOGICAL
-                phys_part = [mapping.get(c, c) for c in part_cols]
-                new_files, parts_phys = _write_data_files_partitioned(
-                    _to_physical(df, mapping), path, phys_part
-                )
-                inv = dict(zip(phys_part, part_cols))
-                new_parts = {
-                    fp: {inv[pc]: v for pc, v in d.items()}
-                    for fp, d in parts_phys.items()
-                }
-            else:
-                new_files = _write_data_files(_to_physical(df, mapping), path)
-                new_parts = {}
-        elif mapping != files_mapping:
-            raise CommitConflict(
-                f"concurrent writer changed the column mapping of {path}; "
-                "re-run the write against the new snapshot"
-            )
-        elif part_cols != files_part_cols:
-            # our files were laid out (and their tuples recorded)
-            # under the pre-race layout — recording them under the
-            # winner's layout would mislabel partitions silently
-            raise CommitConflict(
-                f"concurrent writer repartitioned {path} "
-                f"({files_part_cols} → {part_cols}); re-run the write "
-                "against the new snapshot"
-            )
-        version = 0 if prev is None else prev + 1
-        manifest = {
-            "version": version,
-            "mode": mode,
-            "files": carried + new_files,
-            "schema": df.schema.json(),
-            "parent": prev,
-        }
-        if part_cols:
-            manifest["partition_by"] = list(part_cols)
-            manifest["partitions"] = {**carried_parts, **new_parts}
-        if mapping:
-            manifest["column_mapping"] = mapping
-        if retired:
-            manifest["retired_physical"] = retired
-        if constraints:
-            manifest["constraints"] = constraints
-        if dv_prev:
-            manifest["dv"] = dv_prev
-        if manifest_extra:
-            # caller-owned marker keys (e.g. a txn_catalog txn_id) —
-            # never allowed to shadow protocol keys
-            for k, v2 in manifest_extra.items():
-                manifest.setdefault(k, v2)
-        try:
-            _commit(path, version, manifest)
-            return version
-        except CommitConflict:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+    return _write(df, path, mode, retries, partition_by, manifest_extra)
 
 
 def read_table(
@@ -722,18 +787,6 @@ def _mapping_of(manifest: dict) -> dict[str, str]:
 
 def _dv_of(manifest: dict) -> dict:
     return manifest.get("dv", {})
-
-
-def _carry_dv(new_manifest: dict, prev_manifest: dict) -> None:
-    """Carry deletion-vector entries for every file the new snapshot
-    kept (rewritten files have fresh paths, so they drop out — their
-    rows were read DV-applied before the rewrite)."""
-    dv = _dv_of(prev_manifest)
-    if not dv:
-        return
-    kept = {fp: dv[fp] for fp in new_manifest["files"] if fp in dv}
-    if kept:
-        new_manifest["dv"] = kept
 
 
 # ---------------------------------------------------------------------------
@@ -1146,11 +1199,29 @@ def _to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     )
 
 
-def _evolution_base(path: str) -> tuple[int, dict]:
+def _head(path: str) -> tuple[int, dict]:
+    """The current version and its manifest; a table must exist."""
     prev = current_version(path)
     if prev is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
     return prev, _read_manifest(path, prev)
+
+
+def _renamed_in_file_maps(m: dict, old: str, new: str | None) -> dict:
+    """The column-keyed per-file maps of ``m`` with column ``old``
+    re-keyed to ``new`` (removed when ``new`` is None)."""
+    return {
+        k: {
+            fp: {
+                (new if c == old else c): e
+                for c, e in d.items()
+                if c != old or new is not None
+            }
+            for fp, d in m[k].items()
+        }
+        for k in _FILE_MAPS
+        if k != "dv" and m.get(k)  # vectors are keyed by file only
+    }
 
 
 def add_column(path: str, name: str, data_type) -> int:
@@ -1174,14 +1245,13 @@ def add_column(path: str, name: str, data_type) -> int:
 
     if isinstance(data_type, str):
         data_type = DataType.fromDDL(data_type)
-    prev, m = _evolution_base(path)
+    prev, m = _head(path)
     schema = _schema_from_json(m["schema"])
     if name in {f.name for f in schema.fields}:
         raise SchemaConflict(f"column {name!r} already exists")
     new_schema = StructType(
         list(schema.fields) + [StructField(name, data_type, True)]
     )
-    version = prev + 1
     mapping = dict(_mapping_of(m))
     # the generated physical name must not collide with any LIVE
     # physical name (a user column literally named like a tag) or any
@@ -1189,33 +1259,17 @@ def add_column(path: str, name: str, data_type) -> int:
     taken = {mapping.get(f.name, f.name) for f in schema.fields} | set(
         m.get("retired_physical", [])
     )
-    bump = version
+    bump = prev + 1
     while f"{name}_c{bump}" in taken:
         bump += 1
     mapping[name] = f"{name}_c{bump}"
-    manifest = {
-        "version": version,
-        "mode": "evolve",
-        "evolution": {"op": "add_column", "column": name,
-                      "type": data_type.simpleString()},
-        "files": m["files"],
-        "schema": new_schema.json(),
-        "parent": prev,
-        "column_mapping": mapping,
-    }
-    if m.get("stats"):
-        manifest["stats"] = m["stats"]
-    if m.get("retired_physical"):
-        manifest["retired_physical"] = m["retired_physical"]
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
-    if m.get("dv"):
-        manifest["dv"] = m["dv"]
-    for carried in ("partition_by", "partitions"):
-        if m.get(carried) and carried not in manifest:
-            manifest[carried] = m[carried]
-    _commit(path, version, manifest)
-    return version
+    return _compose(
+        path, prev, m, m["files"], "evolve",
+        evolution={"op": "add_column", "column": name,
+                   "type": data_type.simpleString()},
+        schema=new_schema.json(),
+        column_mapping=mapping,
+    )
 
 
 def drop_column(path: str, name: str) -> int:
@@ -1226,7 +1280,7 @@ def drop_column(path: str, name: str) -> int:
     ``compact`` physically sheds them). Dropping the last column is
     rejected. Returns the committed version.
     """
-    prev, m = _evolution_base(path)
+    prev, m = _head(path)
     schema = _schema_from_json(m["schema"])
     names = [f.name for f in schema.fields]
     if name not in names:
@@ -1257,37 +1311,19 @@ def drop_column(path: str, name: str) -> int:
     new_schema = StructType([f for f in schema.fields if f.name != name])
     mapping = dict(_mapping_of(m))
     dropped_physical = mapping.pop(name, name)
-    version = prev + 1
-    manifest = {
-        "version": version,
-        "mode": "evolve",
-        "evolution": {"op": "drop_column", "column": name},
-        "files": m["files"],
-        "schema": new_schema.json(),
-        "parent": prev,
+    return _compose(
+        path, prev, m, m["files"], "evolve",
+        evolution={"op": "drop_column", "column": name},
+        schema=new_schema.json(),
+        column_mapping=mapping,
         # the dropped column's bytes still sit in old files under
         # this physical name — record it so an APPEND can't silently
         # re-introduce the name identity-mapped and resurrect them
-        "retired_physical": sorted(
+        retired_physical=sorted(
             set(m.get("retired_physical", [])) | {dropped_physical}
         ),
-    }
-    if mapping:
-        manifest["column_mapping"] = mapping
-    if m.get("stats"):
-        manifest["stats"] = {
-            fp: {c: span for c, span in spans.items() if c != name}
-            for fp, spans in m["stats"].items()
-        }
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
-    if m.get("dv"):
-        manifest["dv"] = m["dv"]
-    for carried in ("partition_by", "partitions"):
-        if m.get(carried) and carried not in manifest:
-            manifest[carried] = m[carried]
-    _commit(path, version, manifest)
-    return version
+        **_renamed_in_file_maps(m, name, None),
+    )
 
 
 def rename_column(path: str, old: str, new: str) -> int:
@@ -1300,7 +1336,7 @@ def rename_column(path: str, old: str, new: str) -> int:
     skipping stats are re-keyed so ``read_table_pruned`` keeps
     working under the new name. Returns the committed version.
     """
-    prev, m = _evolution_base(path)
+    prev, m = _head(path)
     schema = _schema_from_json(m["schema"])
     names = [f.name for f in schema.fields]
     if old not in names:
@@ -1310,18 +1346,6 @@ def rename_column(path: str, old: str, new: str) -> int:
     mapping = dict(_mapping_of(m))
     physical = mapping.pop(old, old)
     mapping[new] = physical
-    # partition layout follows the rename: the list and every file's
-    # tuple re-key so partition pruning and sticky appends keep
-    # working under the new logical name
-    part_extra: dict = {}
-    if m.get("partition_by"):
-        part_extra["partition_by"] = [
-            new if c == old else c for c in m["partition_by"]
-        ]
-        part_extra["partitions"] = {
-            fp: {(new if c == old else c): v for c, v in d.items()}
-            for fp, d in _partitions_of(m).items()
-        }
     from pyspark.sql.types import StructField, StructType
 
     new_schema = StructType(
@@ -1331,33 +1355,18 @@ def rename_column(path: str, old: str, new: str) -> int:
             for f in schema.fields
         ]
     )
-    version = prev + 1
-    manifest = {
-        "version": version,
-        "mode": "evolve",
-        "evolution": {"op": "rename_column", "from": old, "to": new},
-        "files": m["files"],
-        "schema": new_schema.json(),
-        "parent": prev,
-        "column_mapping": mapping,
-        **part_extra,
-    }
-    if m.get("stats"):
-        manifest["stats"] = {
-            fp: {(new if c == old else c): span for c, span in spans.items()}
-            for fp, spans in m["stats"].items()
-        }
-    if m.get("retired_physical"):
-        manifest["retired_physical"] = m["retired_physical"]
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
-    if m.get("dv"):
-        manifest["dv"] = m["dv"]
-    for carried in ("partition_by", "partitions"):
-        if m.get(carried) and carried not in manifest:
-            manifest[carried] = m[carried]
-    _commit(path, version, manifest)
-    return version
+    # the partition layout, every file's tuple and the file indexes
+    # re-key, so pruning and sticky appends keep working under the
+    # new logical name
+    return _compose(
+        path, prev, m, m["files"], "evolve",
+        evolution={"op": "rename_column", "from": old, "to": new},
+        schema=new_schema.json(),
+        column_mapping=mapping,
+        partition_by=[new if c == old else c
+                      for c in m.get("partition_by") or []],
+        **_renamed_in_file_maps(m, old, new),
+    )
 
 
 def merge_table(
@@ -1417,11 +1426,7 @@ def merge_table_pruned(
 
     from frafka_spark.operators.merge import merge_upsert
 
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
-    stats = manifest.get("stats", {})
+    prev, manifest = _head(path)
     mapping = _mapping_of(manifest)
     span_row = changes.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
@@ -1444,45 +1449,10 @@ def merge_table_pruned(
     )
     merged = merge_upsert(target, changes, key)
     new_files = _write_data_files(_to_physical(merged, mapping), path)
-    version = prev + 1
-    new_manifest = {
-        "version": version,
-        "mode": "merge",
-        "files": untouched + new_files,
-        "schema": manifest["schema"],
-        "parent": prev,
-    }
-    if stats:
-        stats_cols = sorted(
-            {c for spans in stats.values() for c in spans}
-        )
-        phys_cols = [mapping.get(c, c) for c in stats_cols]
-        inverse = dict(zip(phys_cols, stats_cols))
-        new_stats = {
-            fp: {inverse.get(c, c): span for c, span in spans.items()}
-            for fp, spans in _file_stats(new_files, phys_cols, spark=spark).items()
-        }
-        new_manifest["stats"] = {
-            **{fp: stats[fp] for fp in untouched if fp in stats},
-            **new_stats,
-        }
-    if manifest.get("bloom"):
-        # carried files keep their Bloom entries; rewritten files are
-        # conservatively unindexed until the next bloom write
-        new_manifest["bloom"] = {
-            fp: manifest["bloom"][fp]
-            for fp in untouched
-            if fp in manifest["bloom"]
-        }
-    if mapping:
-        new_manifest["column_mapping"] = mapping
-    if manifest.get("retired_physical"):
-        new_manifest["retired_physical"] = manifest["retired_physical"]
-    if manifest.get("constraints"):
-        new_manifest["constraints"] = manifest["constraints"]
-    _carry_dv(new_manifest, manifest)
-    _carry_partitions(new_manifest, manifest)
-    _commit(path, version, new_manifest)
+    version = _compose(
+        path, prev, manifest, untouched + new_files, "merge",
+        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+    )
     return {
         "version": version,
         "files_rewritten": len(touched),
@@ -1535,11 +1505,7 @@ def merge_table_cdc(
             "change set must be keyed: a key may appear at most once "
             "across the upsert and delete branches"
         )
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
-    stats = manifest.get("stats", {})
+    prev, manifest = _head(path)
     mapping = _mapping_of(manifest)
     span_row = changes.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
@@ -1560,43 +1526,10 @@ def merge_table_cdc(
     survivors = target.join(F.broadcast(dels), key, "left_anti")
     merged = merge_upsert(survivors, ups, key)
     new_files = _write_data_files(_to_physical(merged, mapping), path)
-    version = prev + 1
-    new_manifest = {
-        "version": version,
-        "mode": "merge",
-        "files": untouched + new_files,
-        "schema": manifest["schema"],
-        "parent": prev,
-    }
-    if stats:
-        stats_cols = sorted({c for spans in stats.values() for c in spans})
-        phys_cols = [mapping.get(c, c) for c in stats_cols]
-        inverse = dict(zip(phys_cols, stats_cols))
-        new_stats = {
-            fp: {inverse.get(c, c): span for c, span in spans.items()}
-            for fp, spans in _file_stats(
-                new_files, phys_cols, spark=spark
-            ).items()
-        }
-        new_manifest["stats"] = {
-            **{fp: stats[fp] for fp in untouched if fp in stats},
-            **new_stats,
-        }
-    if manifest.get("bloom"):
-        new_manifest["bloom"] = {
-            fp: manifest["bloom"][fp]
-            for fp in untouched
-            if fp in manifest["bloom"]
-        }
-    if mapping:
-        new_manifest["column_mapping"] = mapping
-    if manifest.get("retired_physical"):
-        new_manifest["retired_physical"] = manifest["retired_physical"]
-    if manifest.get("constraints"):
-        new_manifest["constraints"] = manifest["constraints"]
-    _carry_dv(new_manifest, manifest)
-    _carry_partitions(new_manifest, manifest)
-    _commit(path, version, new_manifest)
+    version = _compose(
+        path, prev, manifest, untouched + new_files, "merge",
+        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+    )
     return {
         "version": version,
         "files_rewritten": len(touched),
@@ -1631,11 +1564,7 @@ def delete_rows(
     Returns ``{"version", "files_rewritten", "files_carried"}`` so
     callers (and tests) can pin that pruning actually happened.
     """
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
-    stats = manifest.get("stats", {})
+    prev, manifest = _head(path)
     mapping = _mapping_of(manifest)
     # partition values prune first, then stats spans
     touched = _span_keep_files(manifest, col, lo, hi)
@@ -1650,45 +1579,10 @@ def delete_rows(
             spark, touched, logical, mapping, dv=_dv_of(manifest)
         ).filter(~F.col(col).between(lo, hi) | F.col(col).isNull())
         new_files = _write_data_files(_to_physical(survivors, mapping), path)
-    version = prev + 1
-    new_manifest = {
-        "version": version,
-        "mode": "delete",
-        "files": untouched + new_files,
-        "schema": manifest["schema"],
-        "parent": prev,
-    }
-    if stats:
-        stats_cols = sorted(
-            {c for spans in stats.values() for c in spans}
-        )
-        phys_cols = [mapping.get(c, c) for c in stats_cols]
-        inverse = dict(zip(phys_cols, stats_cols))
-        new_stats = {
-            fp: {inverse.get(c, c): span for c, span in spans.items()}
-            for fp, spans in _file_stats(new_files, phys_cols, spark=spark).items()
-        }
-        new_manifest["stats"] = {
-            **{fp: stats[fp] for fp in untouched if fp in stats},
-            **new_stats,
-        }
-    if manifest.get("bloom"):
-        # carried files keep their Bloom entries; rewritten files are
-        # conservatively unindexed until the next bloom write
-        new_manifest["bloom"] = {
-            fp: manifest["bloom"][fp]
-            for fp in untouched
-            if fp in manifest["bloom"]
-        }
-    if mapping:
-        new_manifest["column_mapping"] = mapping
-    if manifest.get("retired_physical"):
-        new_manifest["retired_physical"] = manifest["retired_physical"]
-    if manifest.get("constraints"):
-        new_manifest["constraints"] = manifest["constraints"]
-    _carry_dv(new_manifest, manifest)
-    _carry_partitions(new_manifest, manifest)
-    _commit(path, version, new_manifest)
+    version = _compose(
+        path, prev, manifest, untouched + new_files, "delete",
+        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+    )
     return {
         "version": version,
         "files_rewritten": len(touched),
@@ -1725,11 +1619,7 @@ def update_rows(
     """
     from pyspark.sql import functions as F
 
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
-    stats = manifest.get("stats", {})
+    prev, manifest = _head(path)
     mapping = _mapping_of(manifest)
     logical = _schema_from_json(manifest["schema"])
     known = {f.name for f in logical.fields}
@@ -1766,43 +1656,10 @@ def update_rows(
                 f"{logical.simpleString()} → {updated.schema.simpleString()}"
             )
         new_files = _write_data_files(_to_physical(updated, mapping), path)
-    version = prev + 1
-    new_manifest = {
-        "version": version,
-        "mode": "update",
-        "files": untouched + new_files,
-        "schema": manifest["schema"],
-        "parent": prev,
-    }
-    if stats:
-        stats_cols = sorted({c for spans in stats.values() for c in spans})
-        phys_cols = [mapping.get(c, c) for c in stats_cols]
-        inverse = dict(zip(phys_cols, stats_cols))
-        new_stats = {
-            fp: {inverse.get(c, c): span for c, span in spans.items()}
-            for fp, spans in _file_stats(
-                new_files, phys_cols, spark=spark
-            ).items()
-        }
-        new_manifest["stats"] = {
-            **{fp: stats[fp] for fp in untouched if fp in stats},
-            **new_stats,
-        }
-    if manifest.get("bloom"):
-        new_manifest["bloom"] = {
-            fp: manifest["bloom"][fp]
-            for fp in untouched
-            if fp in manifest["bloom"]
-        }
-    if mapping:
-        new_manifest["column_mapping"] = mapping
-    if manifest.get("retired_physical"):
-        new_manifest["retired_physical"] = manifest["retired_physical"]
-    if manifest.get("constraints"):
-        new_manifest["constraints"] = manifest["constraints"]
-    _carry_dv(new_manifest, manifest)
-    _carry_partitions(new_manifest, manifest)
-    _commit(path, version, new_manifest)
+    version = _compose(
+        path, prev, manifest, untouched + new_files, "update",
+        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+    )
     return {
         "version": version,
         "files_rewritten": len(touched),
@@ -1834,10 +1691,7 @@ def delete_keys(spark: SparkSession, path: str, col: str, keys) -> dict:
     from pyspark.sql import functions as F
 
     ks = sorted({k for k in keys if k is not None})
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
+    prev, manifest = _head(path)
     stats = manifest.get("stats", {})
     mapping = _mapping_of(manifest)
     parts = _partitions_of(manifest)
@@ -1871,43 +1725,12 @@ def delete_keys(spark: SparkSession, path: str, col: str, keys) -> dict:
     elif touched:
         new_files = touched  # empty key set: nothing to rewrite
         touched = []
-    version = prev + 1
-    new_manifest = {
-        "version": version,
-        "mode": "delete",
-        "files": untouched + new_files,
-        "schema": manifest["schema"],
-        "parent": prev,
-    }
-    if stats:
-        stats_cols = sorted({c for spans in stats.values() for c in spans})
-        phys_cols = [mapping.get(c, c) for c in stats_cols]
-        inverse = dict(zip(phys_cols, stats_cols))
-        rebuilt = _file_stats(
-            [fp for fp in new_files if fp not in stats], phys_cols, spark=spark
-        )
-        new_manifest["stats"] = {
-            **{fp: stats[fp] for fp in untouched + new_files if fp in stats},
-            **{
-                fp: {inverse.get(c, c): span for c, span in spans.items()}
-                for fp, spans in rebuilt.items()
-            },
-        }
-    if manifest.get("bloom"):
-        new_manifest["bloom"] = {
-            fp: manifest["bloom"][fp]
-            for fp in untouched
-            if fp in manifest["bloom"]
-        }
-    if mapping:
-        new_manifest["column_mapping"] = mapping
-    if manifest.get("retired_physical"):
-        new_manifest["retired_physical"] = manifest["retired_physical"]
-    if manifest.get("constraints"):
-        new_manifest["constraints"] = manifest["constraints"]
-    _carry_dv(new_manifest, manifest)
-    _carry_partitions(new_manifest, manifest)
-    _commit(path, version, new_manifest)
+    version = _compose(
+        path, prev, manifest, untouched + new_files, "delete",
+        added={"stats": _stats_like_parent(
+            spark, manifest, [fp for fp in new_files if fp not in stats]
+        )},
+    )
     return {
         "version": version,
         "files_rewritten": len(touched),
@@ -1957,11 +1780,7 @@ def delete_rows_dv(
     """
     from pyspark.sql import functions as F
 
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
-    stats = manifest.get("stats", {})
+    prev, manifest = _head(path)
     mapping = _mapping_of(manifest)
     logical = _schema_from_json(manifest["schema"])
     dv = _dv_of(manifest)
@@ -2010,24 +1829,11 @@ def delete_rows_dv(
             "files_rewritten": 0,
             "files_carried": len(manifest["files"]),
         }
-    version = prev + 1
-    new_manifest = {
-        "version": version,
-        "mode": "delete_dv",
-        "files": manifest["files"],  # verbatim — merge-on-read
-        "schema": manifest["schema"],
-        "parent": prev,
-    }
-    for carried in (
-        "stats", "bloom", "column_mapping", "retired_physical",
-        "constraints", "partition_by", "partitions",
-    ):
-        if manifest.get(carried):
-            new_manifest[carried] = manifest[carried]
     live = {fp: e for fp, e in new_dv.items() if _dv_has(e)}
-    if live:
-        new_manifest["dv"] = live
-    _commit(path, version, new_manifest)
+    # the file list carries verbatim — merge-on-read
+    version = _compose(
+        path, prev, manifest, manifest["files"], "delete_dv", dv=live
+    )
     _warn_dense_dv(path, live)
     return {
         "version": version,
@@ -2068,11 +1874,7 @@ def update_rows_dv(
     """
     from pyspark.sql import functions as F
 
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
-    stats = manifest.get("stats", {})
+    prev, manifest = _head(path)
     mapping = _mapping_of(manifest)
     logical = _schema_from_json(manifest["schema"])
     dv = _dv_of(manifest)
@@ -2161,35 +1963,12 @@ def update_rows_dv(
             "files_rewritten": 0,
             "files_carried": len(manifest["files"]),
         }
-    version = prev + 1
-    new_manifest = {
-        "version": version,
-        "mode": "update_dv",
-        "files": manifest["files"] + new_files,
-        "schema": manifest["schema"],
-        "parent": prev,
-    }
-    if stats:
-        stats_cols = sorted({c for spans in stats.values() for c in spans})
-        phys_cols = [mapping.get(c, c) for c in stats_cols]
-        inverse = dict(zip(phys_cols, stats_cols))
-        new_stats = {
-            fp: {inverse.get(c, c): span for c, span in spans.items()}
-            for fp, spans in _file_stats(
-                new_files, phys_cols, spark=spark
-            ).items()
-        }
-        new_manifest["stats"] = {**stats, **new_stats}
-    for carried in (
-        "bloom", "column_mapping", "retired_physical", "constraints",
-        "partition_by", "partitions",
-    ):
-        if manifest.get(carried):
-            new_manifest[carried] = manifest[carried]
     live = {fp: e for fp, e in new_dv.items() if _dv_has(e)}
-    if live:
-        new_manifest["dv"] = live
-    _commit(path, version, new_manifest)
+    version = _compose(
+        path, prev, manifest, manifest["files"] + new_files, "update_dv",
+        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+        dv=live,
+    )
     _warn_dense_dv(path, live)
     return {
         "version": version,
@@ -2215,36 +1994,22 @@ def evolve_partitioning(path: str, new_cols: list[str] | None) -> int:
     partitioning (or adding a source column) must not rewrite history
     — readers prune old files by the old spec and new files by the
     new one, exactly Iceberg's spec-per-file contract."""
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
+    prev, manifest = _head(path)
     if new_cols:
-        import json as _json
-
         schema_cols = {
-            f["name"]
-            for f in _json.loads(manifest["schema"]).get("fields", [])
+            f["name"] for f in json.loads(manifest["schema"]).get("fields", [])
         }
         missing = [c for c in new_cols if c not in schema_cols]
         if missing:
             raise SchemaConflict(
                 f"partition evolution names absent columns {missing}"
             )
-    version = prev + 1
-    new_manifest = dict(manifest)
-    new_manifest["version"] = version
-    new_manifest["parent"] = prev
-    new_manifest["mode"] = "evolve-partitioning"
-    new_manifest.pop("committed_at", None)
-    if new_cols:
-        new_manifest["partition_by"] = list(new_cols)
-    else:
-        new_manifest.pop("partition_by", None)
     # per-file tuples persist untouched — they describe the FILES,
     # not the current spec
-    _commit(path, version, new_manifest)
-    return version
+    return _compose(
+        path, prev, manifest, manifest["files"], "evolve-partitioning",
+        partition_by=list(new_cols) if new_cols else None,
+    )
 
 
 def restore_table(path: str, version: int) -> int:
@@ -2267,23 +2032,9 @@ def restore_table(path: str, version: int) -> int:
     if not 0 <= version <= prev:
         raise ValueError(f"cannot restore to v{version}; latest is v{prev}")
     src = _read_manifest(path, version)
-    new_version = prev + 1
-    new_manifest = {
-        "version": new_version,
-        "mode": "restore",
-        "restored_from": version,
-        "files": src["files"],
-        "schema": src["schema"],
-        "parent": prev,
-    }
-    for carried in (
-        "stats", "bloom", "column_mapping", "retired_physical",
-        "constraints", "dv", "partition_by", "partitions",
-    ):
-        if src.get(carried):
-            new_manifest[carried] = src[carried]
-    _commit(path, new_version, new_manifest)
-    return new_version
+    return _compose(
+        path, prev, src, src["files"], "restore", restored_from=version
+    )
 
 
 def clone_table(src_path: str, dst_path: str) -> int:
@@ -2309,22 +2060,10 @@ def clone_table(src_path: str, dst_path: str) -> int:
     if current_version(dst_path) is not None:
         raise FileExistsError(f"table already exists at {dst_path}")
     src = _read_manifest(src_path, src_v)
-    manifest = {
-        "version": 0,
-        "mode": "clone",
-        "cloned_from": {"path": src_path, "version": src_v},
-        "files": src["files"],
-        "schema": src["schema"],
-        "parent": None,
-    }
-    for carried in (
-        "stats", "bloom", "column_mapping", "retired_physical",
-        "constraints", "dv", "partition_by", "partitions",
-    ):
-        if src.get(carried):
-            manifest[carried] = src[carried]
-    _commit(dst_path, 0, manifest)
-    return 0
+    return _compose(
+        dst_path, None, src, src["files"], "clone",
+        cloned_from={"path": src_path, "version": src_v},
+    )
 
 
 class ConstraintViolation(Exception):
@@ -2341,25 +2080,12 @@ def add_constraint(path: str, name: str, expr_sql: str) -> int:
     validate existing rows — run the expression as a query first if
     the table's history must also conform (Delta validates eagerly;
     at 100 TB that's a full scan you schedule, not a side effect)."""
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
-    version = prev + 1
-    constraints = dict(manifest.get("constraints", {}))
-    constraints[name] = expr_sql
-    new_manifest = {
-        **manifest,
-        "version": version,
-        "mode": "evolve",
-        "parent": prev,
-        "constraints": constraints,
-    }
-    for stale in ("committed_at", "batch_id", "evolution",
-                  "restored_from", "cloned_from"):
-        new_manifest.pop(stale, None)
-    _commit(path, version, new_manifest)
-    return version
+    prev, manifest = _head(path)
+    constraints = {**manifest.get("constraints", {}), name: expr_sql}
+    return _compose(
+        path, prev, manifest, manifest["files"], "evolve",
+        constraints=constraints,
+    )
 
 
 def drop_constraint(path: str, name: str) -> int:
@@ -2367,31 +2093,17 @@ def drop_constraint(path: str, name: str) -> int:
     CONSTRAINT``) — the release valve ``drop_column`` points at when
     a constraint references the column being dropped. Metadata-only
     commit; raises ``KeyError`` for an unknown constraint name."""
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
+    prev, manifest = _head(path)
     constraints = dict(manifest.get("constraints", {}))
     if name not in constraints:
         raise KeyError(
             f"no CHECK constraint {name!r}; have {sorted(constraints)}"
         )
     del constraints[name]
-    version = prev + 1
-    new_manifest = {
-        **manifest,
-        "version": version,
-        "mode": "evolve",
-        "parent": prev,
-    }
-    for stale in ("committed_at", "batch_id", "evolution",
-                  "restored_from", "cloned_from"):
-        new_manifest.pop(stale, None)
-    new_manifest.pop("constraints", None)
-    if constraints:
-        new_manifest["constraints"] = constraints
-    _commit(path, version, new_manifest)
-    return version
+    return _compose(
+        path, prev, manifest, manifest["files"], "evolve",
+        constraints=constraints,
+    )
 
 
 def _enforce_constraints(df: DataFrame, manifest: dict) -> None:
@@ -2527,9 +2239,6 @@ def vacuum(path: str, keep_last: int = 1) -> list[str]:
 # case for needle-in-haystack lookups at 100 TB — touches zero data.
 # ---------------------------------------------------------------------------
 
-_BLOOM_FPP = 0.01
-
-
 def _bloom_bytes(value) -> bytes:
     """Canonical byte encoding so the same logical value hashes the
     same regardless of arrow/python integer width or float identity."""
@@ -2653,56 +2362,9 @@ def write_table_with_bloom(
     the manifest, enabling ``read_table_bloom`` to skip files on
     equality probes. Composes with stats: pass data pre-clustered and
     use ``write_table_with_stats`` for the range column; bloom columns
-    need no clustering at all — that is the point."""
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    prev = current_version(path)
-    mapping: dict[str, str] = {}
-    carried_files: list[str] = []
-    carried_bloom: dict = {}
-    retired: list[str] = []
-    constraints: dict = {}
-    carried_dv: dict = {}
-    if mode == "append" and prev is not None:
-        m = _read_manifest(path, prev)
-        _check_append_schema(df, m)
-        carried_files = m["files"]
-        carried_bloom = m.get("bloom", {})
-        mapping = _mapping_of(m)
-        retired = m.get("retired_physical", [])
-        constraints = m.get("constraints", {})
-        carried_dv = _dv_of(m)
-        _enforce_constraints(df, m)
-    new_files = _write_data_files(_to_physical(df, mapping), path)
-    phys_cols = [mapping.get(c, c) for c in bloom_cols]
-    inverse = dict(zip(phys_cols, bloom_cols))
-    new_bloom = {
-        fp: {inverse.get(c, c): b for c, b in blooms.items()}
-        for fp, blooms in _file_blooms(
-            new_files, phys_cols, fpp, spark=df.sparkSession
-        ).items()
-    }
-    version = 0 if prev is None else prev + 1
-    manifest = {
-        "version": version,
-        "mode": mode,
-        "files": carried_files + new_files,
-        "bloom": {**carried_bloom, **new_bloom},
-        "schema": df.schema.json(),
-        "parent": prev,
-    }
-    if mapping:
-        manifest["column_mapping"] = mapping
-    if retired:
-        manifest["retired_physical"] = retired
-    if constraints:
-        manifest["constraints"] = constraints
-    if carried_dv:
-        manifest["dv"] = carried_dv
-    if prev is not None:
-        _carry_partitions_append(manifest, _read_manifest(path, prev))
-    _commit(path, version, manifest)
-    return version
+    need no clustering at all — that is the point. Checks, modes and
+    retries are ``write_table``'s."""
+    return _write(df, path, mode, bloom_cols=bloom_cols, fpp=fpp)
 
 
 def read_table_bloom(
@@ -2916,85 +2578,10 @@ def write_table_with_stats(
     overlap and nothing can be skipped. ``partition_by`` layers the
     hive-partitioned layout on top (partition prune BEFORE the stats
     prune — same stickiness rules as ``write_table``)."""
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    prev = current_version(path)
-    mapping: dict[str, str] = {}
-    carried_files: list[str] = []
-    carried_stats: dict = {}
-    retired: list[str] = []
-    constraints: dict = {}
-    carried_dv: dict = {}
-    carried_parts: dict = {}
-    part_cols = partition_by
-    if mode == "append" and prev is not None:
-        m = _read_manifest(path, prev)
-        _check_append_schema(df, m)
-        carried_files = m["files"]
-        carried_stats = m.get("stats", {})
-        mapping = _mapping_of(m)
-        retired = m.get("retired_physical", [])
-        constraints = m.get("constraints", {})
-        carried_dv = _dv_of(m)
-        _enforce_constraints(df, m)
-        prev_part = m.get("partition_by")
-        if prev_part:
-            if partition_by is not None and list(partition_by) != list(
-                prev_part
-            ):
-                raise SchemaConflict(
-                    f"append partitioned by {partition_by} onto a table "
-                    f"partitioned by {prev_part}; repartition with "
-                    "mode='overwrite'"
-                )
-            part_cols = prev_part
-            carried_parts = _partitions_of(m)
-    # footers carry physical names; stats stay keyed by LOGICAL name
-    phys_cols = [mapping.get(c, c) for c in stats_cols]
-    new_parts: dict = {}
-    if part_cols:
-        phys_part = [mapping.get(c, c) for c in part_cols]
-        new_files, parts_phys = _write_data_files_partitioned(
-            _to_physical(df, mapping), path, phys_part
-        )
-        inv_part = dict(zip(phys_part, part_cols))
-        new_parts = {
-            fp: {inv_part[pc]: v for pc, v in d.items()}
-            for fp, d in parts_phys.items()
-        }
-    else:
-        new_files = _write_data_files(_to_physical(df, mapping), path)
-    raw_stats = _file_stats(new_files, phys_cols, spark=df.sparkSession)
-    inverse = dict(zip(phys_cols, stats_cols))
-    new_stats = {
-        fp: {inverse.get(c, c): span for c, span in spans.items()}
-        for fp, spans in raw_stats.items()
-    }
-    version = 0 if prev is None else prev + 1
-    manifest = {
-        "version": version,
-        "mode": mode,
-        "files": carried_files + new_files,
-        "stats": {**carried_stats, **new_stats},
-        "schema": df.schema.json(),
-        "parent": prev,
-    }
-    if part_cols:
-        manifest["partition_by"] = list(part_cols)
-        manifest["partitions"] = {**carried_parts, **new_parts}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    if retired:
-        manifest["retired_physical"] = retired
-    if constraints:
-        manifest["constraints"] = constraints
-    if carried_dv:
-        manifest["dv"] = carried_dv
-    if manifest_extra:
-        for k, v2 in manifest_extra.items():
-            manifest.setdefault(k, v2)
-    _commit(path, version, manifest)
-    return version
+    return _write(
+        df, path, mode, partition_by=partition_by,
+        manifest_extra=manifest_extra, stats_cols=stats_cols,
+    )
 
 
 def read_table_pruned(
@@ -3096,87 +2683,14 @@ def write_stream_batch(
     Use: ``stream.writeStream.foreachBatch(
     lambda df, bid: write_stream_batch(df, bid, path)).start()``.
     The atomic manifest create is the transaction boundary — there is
-    no window where data is visible but the batch unrecorded.
+    no window where data is visible but the batch unrecorded. A lost
+    commit race retries like ``write_table``'s; if the winner committed
+    this same ``batch_id``, the loser returns None.
     """
-    if batch_id in committed_batch_ids(path):
-        return None
-    prev = current_version(path)
-    mapping: dict[str, str] = {}
-    carried: list[str] = []
-    carried_stats: dict = {}
-    retired: list[str] = []
-    constraints: dict = {}
-    carried_dv: dict = {}
-    carried_parts: dict = {}
-    part_cols = partition_by
-    if prev is not None:
-        pm = _read_manifest(path, prev)
-        _check_append_schema(df, pm)
-        carried = pm["files"]
-        carried_stats = pm.get("stats", {})
-        mapping = _mapping_of(pm)
-        retired = pm.get("retired_physical", [])
-        constraints = pm.get("constraints", {})
-        carried_dv = _dv_of(pm)
-        _enforce_constraints(df, pm)
-        prev_part = pm.get("partition_by")
-        if prev_part:
-            if partition_by is not None and list(partition_by) != list(
-                prev_part
-            ):
-                raise SchemaConflict(
-                    f"stream batch partitioned by {partition_by} onto a "
-                    f"table partitioned by {prev_part}"
-                )
-            part_cols = prev_part  # layout is sticky
-            carried_parts = _partitions_of(pm)
-    new_parts: dict = {}
-    if part_cols:
-        phys_part = [mapping.get(c, c) for c in part_cols]
-        new_files, parts_phys = _write_data_files_partitioned(
-            _to_physical(df, mapping), path, phys_part
-        )
-        inv_part = dict(zip(phys_part, part_cols))
-        new_parts = {
-            fp: {inv_part[pc]: v for pc, v in d.items()}
-            for fp, d in parts_phys.items()
-        }
-    else:
-        new_files = _write_data_files(_to_physical(df, mapping), path)
-    version = 0 if prev is None else prev + 1
-    manifest = {
-        "version": version,
-        "mode": "append",
-        "files": carried + new_files,
-        "schema": df.schema.json(),
-        "parent": prev,
-        "batch_id": batch_id,
-    }
-    if part_cols:
-        manifest["partition_by"] = list(part_cols)
-        manifest["partitions"] = {**carried_parts, **new_parts}
-    if stats_cols:
-        phys_cols = [mapping.get(c, c) for c in stats_cols]
-        inverse = dict(zip(phys_cols, stats_cols))
-        new_stats = {
-            fp: {inverse.get(c, c): span for c, span in spans.items()}
-            for fp, spans in _file_stats(new_files, phys_cols, spark=df.sparkSession).items()
-        }
-        manifest["stats"] = {**carried_stats, **new_stats}
-    elif carried_stats:
-        manifest["stats"] = carried_stats
-    if mapping:
-        manifest["column_mapping"] = mapping
-    if retired:
-        manifest["retired_physical"] = retired
-    if constraints:
-        manifest["constraints"] = constraints
-    if carried_dv:
-        manifest["dv"] = carried_dv
-    if prev is not None:
-        _carry_partitions_append(manifest, pm)
-    _commit(path, version, manifest)
-    return version
+    return _write(
+        df, path, partition_by=partition_by, stats_cols=stats_cols,
+        batch_id=batch_id,
+    )
 
 
 def compact(
@@ -3218,10 +2732,7 @@ def compact(
     dimension immediately after.
     Returns the committed version.
     """
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
+    prev, manifest = _head(path)
     if not manifest["files"]:
         raise ValueError(f"snapshot v{prev} at {path} has no data files")
     total_bytes = sum(os.path.getsize(fp) for fp in manifest["files"])
@@ -3262,26 +2773,17 @@ def compact(
         {c for spans in manifest.get("stats", {}).values() for c in spans}
         | set(zorder_by or [])
     )
-    version = prev + 1
-    new_manifest = {
-        "version": version,
-        "mode": "compact",
-        "files": new_files,
-        "schema": manifest["schema"],
-        "parent": prev,
-    }
-    if part_cols:
-        new_manifest["partition_by"] = list(part_cols)
-        new_manifest["partitions"] = new_parts
-    if stats_cols:
-        new_manifest["stats"] = _file_stats(new_files, stats_cols, spark=spark)
-    # column_mapping / retired_physical are deliberately NOT carried:
-    # the rewrite materialized logical names into the new files.
-    # CHECK constraints are table semantics, not file layout — carry.
-    if manifest.get("constraints"):
-        new_manifest["constraints"] = manifest["constraints"]
-    _commit(path, version, new_manifest)
-    return version
+    new_stats = (
+        _file_stats(new_files, stats_cols, spark=spark) if stats_cols else {}
+    )
+    # column_mapping / retired_physical are deliberately dropped: the
+    # rewrite materialized logical names into the new files
+    return _compose(
+        path, prev, manifest, new_files, "compact",
+        added={"partitions": new_parts, "stats": new_stats},
+        column_mapping=None,
+        retired_physical=None,
+    )
 
 
 def auto_compact(
@@ -3314,14 +2816,10 @@ def auto_compact(
 
     if not 0 < max_deleted_fraction <= 1:
         raise ValueError("max_deleted_fraction must be in (0, 1]")
-    prev = current_version(path)
-    if prev is None:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    manifest = _read_manifest(path, prev)
+    prev, manifest = _head(path)
     dv = _dv_of(manifest)
     mapping = _mapping_of(manifest)
     logical = _schema_from_json(manifest["schema"])
-    stats = manifest.get("stats", {})
     dense: list[str] = []
     full: list[str] = []
     for fp, entry in dv.items():
@@ -3362,50 +2860,15 @@ def auto_compact(
         new_files += written
     drop = set(dense) | set(full)
     kept = [fp for fp in manifest["files"] if fp not in drop]
-    version = prev + 1
-    new_manifest = {
-        "version": version,
-        "mode": "compact",
-        "files": kept + new_files,
-        "schema": manifest["schema"],
-        "parent": prev,
-    }
-    if stats:
-        stats_cols = sorted({c for spans in stats.values() for c in spans})
-        phys_cols = [mapping.get(c, c) for c in stats_cols]
-        inverse = dict(zip(phys_cols, stats_cols))
-        rebuilt = {
-            fp: {inverse.get(c, c): span for c, span in spans.items()}
-            for fp, spans in _file_stats(
-                new_files, phys_cols, spark=spark
-            ).items()
-        }
-        new_manifest["stats"] = {
-            **{fp: stats[fp] for fp in kept if fp in stats},
-            **rebuilt,
-        }
-    if manifest.get("bloom"):
-        # rewritten files lose their bloom entries (conservative:
-        # no entry ⇒ the file is always read)
-        kept_bloom = {
-            fp: manifest["bloom"][fp]
-            for fp in kept
-            if fp in manifest["bloom"]
-        }
-        if kept_bloom:
-            new_manifest["bloom"] = kept_bloom
-    for carried in ("column_mapping", "retired_physical", "constraints"):
-        if manifest.get(carried):
-            new_manifest[carried] = manifest[carried]
-    if manifest.get("partition_by"):
-        new_manifest["partition_by"] = manifest["partition_by"]
-    kept_parts = {fp: parts[fp] for fp in kept if fp in parts}
-    if kept_parts or new_parts:
-        new_manifest["partitions"] = {**kept_parts, **new_parts}
-    live = {fp: e for fp, e in dv.items() if fp in set(kept) and _dv_has(e)}
-    if live:
-        new_manifest["dv"] = live
-    _commit(path, version, new_manifest)
+    # dropped and rewritten files leave the snapshot, and with it their
+    # vectors and bloom entries (no entry ⇒ the file is always read)
+    version = _compose(
+        path, prev, manifest, kept + new_files, "compact",
+        added={
+            "stats": _stats_like_parent(spark, manifest, new_files),
+            "partitions": new_parts,
+        },
+    )
     return {
         "version": version,
         "files_rewritten": len(dense),

@@ -196,3 +196,39 @@ def test_one_layout_root_and_one_lock_discipline():
         and ("fcntl" in (src := p.read_text()) or "spark-warehouse" in src)
     ]
     assert offenders == []
+
+
+def test_one_snapshot_composer():
+    """Every manifest-table commit goes through one composer:
+    ``_commit`` is called from exactly one function, and the keys a
+    commit carries are listed once (table keys, per-file maps)."""
+    import ast
+
+    carried = {
+        "schema", "column_mapping", "retired_physical", "constraints",
+        "partition_by", "stats", "bloom", "partitions", "dv",
+    }
+    callers, key_lists = set(), []
+    for p in sorted((REPO / "frafka_spark").rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for n in ast.walk(fn):
+                    if isinstance(n, ast.Call) and "_commit" in (
+                        getattr(n.func, "id", None),
+                        getattr(n.func, "attr", None),
+                    ):
+                        callers.add(f"{p.name}:{fn.name}")
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.Tuple, ast.List, ast.Set)):
+                names = {
+                    e.value for e in n.elts if isinstance(e, ast.Constant)
+                } & carried
+                if len(names) >= 2:
+                    key_lists.append((p.name, sorted(names)))
+    assert callers == {"manifest_table.py:_compose"}
+    assert key_lists == [
+        ("manifest_table.py", sorted(carried - {"stats", "bloom",
+                                                "partitions", "dv"})),
+        ("manifest_table.py", ["bloom", "dv", "partitions", "stats"]),
+    ]

@@ -1363,11 +1363,103 @@ print(prev + 1)
     assert got == list(range(0, 5)) + list(range(100, 104)) + [1000, 1001, 1002]
 
 
-def test_write_table_retries_lost_race(spark, tmp_path, monkeypatch):
-    """write_table's optimistic retry: when another writer wins the
-    composed version between read-head and commit, the loser
-    recomposes against the new head (data files written ONCE) and
-    lands on the next version — no lost commit, no duplicate rows."""
+def _carry_case(spark, mt, path, case):
+    """Build one carry case's table; return (head manifest, the
+    manifest before the last commit)."""
+    def kdf(lo, hi, parts=2):
+        return spark.range(lo, hi, numPartitions=parts).select(
+            F.col("id").alias("k"), (F.col("id") % 10).alias("p")
+        )
+
+    if case == "write_table_append_keeps_stats":
+        mt.write_table_with_stats(kdf(0, 10), path, ["k"], mode="overwrite")
+        mt.write_table(kdf(10, 20), path)
+    elif case.endswith("_overwrite_keeps_constraints"):
+        write = (mt.write_table_with_stats if case.startswith("stats")
+                 else mt.write_table_with_bloom)
+        mt.write_table(kdf(1, 10), path, mode="overwrite")
+        mt.add_constraint(path, "k_positive", "k > 0")
+        with pytest.raises(mt.ConstraintViolation, match="k_positive"):
+            write(kdf(-3, 3), path, ["k"], mode="overwrite")
+        write(kdf(5, 9), path, ["k"], mode="overwrite")
+    elif case == "bloom_overwrite_drops_layout":
+        mt.write_table(kdf(0, 100), path, mode="overwrite",
+                       partition_by=["p"])
+        mt.write_table_with_bloom(kdf(0, 10), path, ["k"], mode="overwrite")
+    elif case == "stats_append_keeps_bloom":
+        mt.write_table_with_bloom(kdf(0, 10), path, ["k"], mode="overwrite")
+        mt.write_table_with_stats(kdf(10, 20), path, ["k"])
+    elif case == "bloom_append_keeps_stats":
+        mt.write_table_with_stats(kdf(0, 10), path, ["k"], mode="overwrite")
+        mt.write_table_with_bloom(kdf(10, 20), path, ["k"])
+    elif case == "stream_batch_keeps_bloom":
+        mt.write_table_with_bloom(kdf(0, 10), path, ["k"], mode="overwrite")
+        mt.write_stream_batch(kdf(10, 20), 0, path)
+    v = mt.current_version(path)
+    return mt._read_manifest(path, v), mt._read_manifest(path, v - 1)
+
+
+@pytest.mark.parametrize("case", [
+    "write_table_append_keeps_stats",
+    "stats_overwrite_keeps_constraints",
+    "bloom_overwrite_keeps_constraints",
+    "bloom_overwrite_drops_layout",
+    "stats_append_keeps_bloom",
+    "bloom_append_keeps_stats",
+    "stream_batch_keeps_bloom",
+])
+def test_every_writer_carries_by_one_rule(spark, tmp_path, case):
+    """The four append writers commit through one composer, so they
+    agree: an append keeps every carried file's stats and bloom
+    entries whichever writer made them; an overwrite enforces and
+    keeps the table's CHECK constraints and drops the old layout and
+    every per-file entry of a file it removed."""
+    from frafka_spark.sources import manifest_table as mt
+
+    head, before = _carry_case(spark, mt, str(tmp_path / "t"), case)
+    files = set(head["files"])
+    for key in ("stats", "bloom", "partitions", "dv"):
+        assert set(head.get(key, {})) <= files, key
+    if "overwrite" in case:
+        assert not files & set(before["files"])
+    if case.endswith("_overwrite_keeps_constraints"):
+        assert head["constraints"] == {"k_positive": "k > 0"}
+    elif case == "bloom_overwrite_drops_layout":
+        assert before["partition_by"] == ["p"]
+        assert "partition_by" not in head and "partitions" not in head
+    else:  # an append: the previous snapshot's entries all carry
+        assert set(before["files"]) < files
+        key = "stats" if case.endswith("stats") else "bloom"
+        assert before[key] and all(
+            head[key][fp] == e for fp, e in before[key].items()
+        )
+
+
+_RACE_WRITERS = {
+    "write_table": lambda mt, df, path: mt.write_table(df, path),
+    "write_table_with_stats": lambda mt, df, path: (
+        mt.write_table_with_stats(df, path, ["k"])
+    ),
+    "write_table_with_bloom": lambda mt, df, path: (
+        mt.write_table_with_bloom(df, path, ["k"])
+    ),
+    "write_stream_batch": lambda mt, df, path: (
+        mt.write_stream_batch(df, 7, path)
+    ),
+    "write_stream_batch_same_id": lambda mt, df, path: (
+        mt.write_stream_batch(df, 7, path)
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", list(_RACE_WRITERS))
+def test_write_table_retries_lost_race(spark, tmp_path, monkeypatch, writer):
+    """Every append writer's optimistic retry: when another writer wins
+    the composed version between read-head and commit, the loser
+    recomposes against the new head (data files and their index
+    entries built ONCE) and lands on the next version — no lost
+    commit, no duplicate rows. A stream batch whose id the winner
+    already committed is not committed again."""
     from frafka_spark.sources import manifest_table as mt
 
     path = str(tmp_path / "tbl")
@@ -1375,6 +1467,8 @@ def test_write_table_retries_lost_race(spark, tmp_path, monkeypatch):
         spark.range(0, 5).withColumnRenamed("id", "k"), path,
         mode="overwrite",
     )
+    batch = spark.range(100, 103).withColumnRenamed("id", "k")
+    same_id = writer == "write_stream_batch_same_id"
 
     real_commit = mt._commit
     state = {"interloped": False, "commits": 0}
@@ -1384,30 +1478,40 @@ def test_write_table_retries_lost_race(spark, tmp_path, monkeypatch):
         if not state["interloped"]:
             state["interloped"] = True
             prev = mt._read_manifest(p, version - 1)
-            real_commit(p, version, {
+            winner = {
                 "version": version, "mode": "append",
-                "files": prev["files"],  # winner: a no-op append
+                "files": prev["files"],  # a no-op append ...
                 "schema": prev["schema"], "parent": version - 1,
-            })
+            }
+            if same_id:  # ... or a redelivery of the same batch
+                winner["files"] = prev["files"] + mt._write_data_files(
+                    batch, p
+                )
+                winner["batch_id"] = 7
+            real_commit(p, version, winner)
         return real_commit(p, version, manifest)
 
     monkeypatch.setattr(mt, "_commit", racing_commit)
-    v = mt.write_table(
-        spark.range(100, 103).withColumnRenamed("id", "k"), path,
-        mode="append",
-    )
-    assert v == 2                    # lost v1, landed on v2
-    assert state["commits"] == 2     # exactly one retry
+    v = _RACE_WRITERS[writer](mt, batch, path)
     monkeypatch.undo()
     got = sorted(r.k for r in mt.read_table(spark, path).collect())
     assert got == [0, 1, 2, 3, 4, 100, 101, 102]   # once each
+    if same_id:
+        assert v is None and state["commits"] == 1
+        assert mt.current_version(path) == 1
+        return
+    assert v == 2                    # lost v1, landed on v2
+    assert state["commits"] == 2     # exactly one retry
     # and the loser's data files were written exactly once
-    assert len(mt._read_manifest(path, 2)["files"]) == len(
-        mt._read_manifest(path, 0)["files"]
-    ) + len(
-        set(mt._read_manifest(path, 2)["files"])
-        - set(mt._read_manifest(path, 0)["files"])
-    )
+    m0, m2 = mt._read_manifest(path, 0), mt._read_manifest(path, 2)
+    new = set(m2["files"]) - set(m0["files"])
+    assert len(m2["files"]) == len(m0["files"]) + len(new)
+    index = {"write_table_with_stats": "stats",
+             "write_table_with_bloom": "bloom"}.get(writer)
+    if index:
+        assert set(m2[index]) == new
+    if writer == "write_stream_batch":
+        assert m2["batch_id"] == 7 and mt.committed_batch_ids(path) == {7}
 
 
 def test_delete_keys_prunes_and_keeps_nulls(spark, tmp_path):
