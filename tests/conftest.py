@@ -19,9 +19,31 @@ from frafka_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 
+def _driver_memory() -> str:
+    """Max heap of the test JVM: ``SPARK_GRAFT_DRIVER_MEM`` if set, else
+    a third of the memory this process may use (physical RAM, or a
+    lower cgroup limit). The suite's JVM shares the host with its
+    Python workers; under the session's fixed 48g ceiling G1 grew the
+    heap past physical RAM (14 GB resident on a 15 GB VM) and the run
+    stalled in reclaim or lost the JVM to the OOM killer."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            mem = min(mem, int(fh.read()))
+    except (OSError, ValueError):
+        pass  # no cgroup v2 file, or no limit ("max")
+    return f"{max(mem // 3 >> 20, 2048)}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="frafka-spark-tests")
+    spark = get_spark(
+        app_name="frafka-spark-tests",
+        extra_conf={"spark.driver.memory": _driver_memory()},
+    )
     yield spark
 
 
