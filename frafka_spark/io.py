@@ -153,9 +153,10 @@ def shuffle_width(df: DataFrame, max_per_core: int = 2) -> int:
     fixture tables into 200 partitions — and can legally hold the
     non-numeric ``"auto"``. Clamp to ``defaultParallelism ×
     max_per_core`` (and fall back to it outright when non-numeric).
-    Under this repo's tuned sessions conf ≤ cores, so the clamp is
-    the identity and keyed consumers still reuse the layout with no
-    extra exchange.
+    ``session.get_spark`` guarantees conf ≤ cores (its default width
+    is the core count), so under the library's own sessions the clamp
+    is the identity and keyed consumers reuse the layout with no extra
+    exchange; the clamp acts only on sessions built outside it.
     """
     cap = df.sparkSession.sparkContext.defaultParallelism * max_per_core
     try:
