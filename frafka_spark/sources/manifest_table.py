@@ -27,11 +27,12 @@ What a commit carries: every commit builds manifest N+1 through
 ``_compose``, from a base manifest (normally N), the new file list and
 the keys the operation changes. TABLE keys (``schema``,
 ``column_mapping``, ``retired_physical``, ``constraints``,
-``partition_by``) carry unless the operation changes them. PER-FILE
-maps (``stats``, ``bloom``, ``partitions``, ``dv``) carry their entries
-for exactly the files the new snapshot keeps. PER-COMMIT keys
-(``committed_at``, ``batch_id``, ``evolution``, ``restored_from``,
-``cloned_from``, caller markers such as ``txn_id``) never carry.
+``partition_by``, ``stream_marks``) carry unless the operation changes
+them. PER-FILE maps (``stats``, ``bloom``, ``partitions``, ``dv``)
+carry their entries for exactly the files the new snapshot keeps.
+PER-COMMIT keys (``committed_at``, ``batch_id``, ``evolution``,
+``restored_from``, ``cloned_from``, caller markers such as ``txn_id``)
+never carry.
 
 Scale notes: the manifest lists file paths, not rows — O(files) per
 commit, like Delta. Reads hand Spark the file list, so partition
@@ -57,19 +58,23 @@ class SchemaConflict(Exception):
     """Append would drop or retype existing columns — rewrite instead."""
 
 
-def _check_append_schema(df: DataFrame, prev_manifest: dict) -> None:
+def _check_append_schema(schema, prev_manifest: dict) -> None:
     """Additive evolution only: every existing column must survive
     with its type; new columns are allowed (old files read as NULL
     for them via the snapshot-schema projection in read_table) —
-    UNLESS the name matches a retired physical name (a column dropped
-    earlier whose bytes still sit in old files): an identity-mapped
-    implicit re-add would resurrect that dead data, so the append is
-    rejected with the explicit-``add_column`` remedy (which assigns a
-    fresh physical identity)."""
+    UNLESS the name is a physical name already in the files: a
+    RETIRED one (a column dropped earlier whose bytes still sit in
+    old files) would resurrect that dead data, and a LIVE one (the
+    frozen name of a renamed column) would write two columns under
+    one name. Both are rejected with the explicit-``add_column``
+    remedy, which assigns a fresh physical identity."""
     prev = _schema_from_json(prev_manifest["schema"])
     prev_names = {f.name for f in prev.fields}
-    retired = set(prev_manifest.get("retired_physical", []))
-    new_fields = {f.name: f.dataType for f in df.schema.fields}
+    mapping = _mapping_of(prev_manifest)
+    taken = set(prev_manifest.get("retired_physical", [])) | {
+        mapping.get(n, n) for n in prev_names
+    }
+    new_fields = {f.name: f.dataType for f in schema.fields}
     for f in prev.fields:
         if f.name not in new_fields:
             raise SchemaConflict(
@@ -83,13 +88,12 @@ def _check_append_schema(df: DataFrame, prev_manifest: dict) -> None:
                 f"{new_fields[f.name].simpleString()})"
             )
     for name in new_fields:
-        if name not in prev_names and name in retired:
+        if name not in prev_names and name in taken:
             raise SchemaConflict(
-                f"column {name!r} was dropped earlier and its physical "
-                "name is retired; re-add it with add_column() to get a "
-                "fresh physical identity, then append"
+                f"column {name!r} is a physical name already used in the "
+                "table's files; add it with add_column() to get a fresh "
+                "physical identity, then append"
             )
-
 
 
 def _manifest_dir(path: str) -> str:
@@ -512,7 +516,7 @@ def _commit(path: str, version: int, manifest: dict) -> None:
 #: table keys describe the whole table: carried unless an op changes them
 _TABLE_KEYS = (
     "schema", "column_mapping", "retired_physical", "constraints",
-    "partition_by",
+    "partition_by", "stream_marks",
 )
 #: per-file maps: carried for exactly the files the new snapshot keeps
 _FILE_MAPS = ("stats", "bloom", "partitions", "dv")
@@ -592,99 +596,168 @@ def _write(
     fpp: float = _BLOOM_FPP,
     batch_id: int | None = None,
 ) -> int | None:
-    """The one append/overwrite commit behind ``write_table``,
+    """The one append/overwrite behind ``write_table``,
     ``write_table_with_stats``, ``write_table_with_bloom`` and
-    ``write_stream_batch``: checks, data files, per-file indexes over
-    ``stats_cols`` / ``bloom_cols``, then the compose + retry loop
-    ``write_table`` documents. A ``batch_id`` already in the table's
-    history returns None without committing."""
+    ``write_stream_batch``: the data half (data files and per-file
+    indexes over ``stats_cols`` / ``bloom_cols``), which the commit
+    half ``_commit_files`` runs once. A ``batch_id`` this stream already
+    committed returns None without writing anything."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    new_files: list[str] | None = None
+    spark = df.sparkSession
+
+    def write_files(mapping: dict[str, str], part_cols) -> tuple[list, dict]:
+        data = _to_physical(df, mapping)
+        added: dict = {}
+        if part_cols:
+            # the data frame is written under PHYSICAL names; the
+            # manifest's partition values stay keyed LOGICAL
+            phys_part = [mapping.get(c, c) for c in part_cols]
+            files, parts = _write_data_files_partitioned(data, path, phys_part)
+            inv = dict(zip(phys_part, part_cols))
+            added["partitions"] = {
+                fp: {inv[pc]: v for pc, v in d.items()}
+                for fp, d in parts.items()
+            }
+        else:
+            files = _write_data_files(data, path)
+        if stats_cols:
+            added["stats"] = _index_new_files(
+                _file_stats, files, stats_cols, mapping, spark=spark
+            )
+        if bloom_cols:
+            added["bloom"] = _index_new_files(
+                _file_blooms, files, bloom_cols, mapping, fpp=fpp, spark=spark
+            )
+        return files, added
+
+    return _commit_files(
+        spark, path, df.schema, lambda: df, write_files, mode, retries,
+        partition_by=partition_by, manifest_extra=manifest_extra,
+        batch_id=batch_id,
+    )
+
+
+def _append_layout(schema, pm: dict, mode: str, partition_by) -> tuple:
+    """Check that ``schema`` may land on head ``pm`` and return the
+    layout its files are written under: ``(mapping, partition
+    columns, keys the commit resets)``. Appends keep the head's
+    column mapping and sticky partition layout; an overwrite writes
+    logical names, so it resets the mapping and the retired names."""
+    if mode == "overwrite" or not pm:
+        return {}, partition_by, {"column_mapping": None, "retired_physical": None}
+    _check_append_schema(schema, pm)
+    prev_part = pm.get("partition_by")
+    if prev_part and partition_by is not None and list(partition_by) != list(
+        prev_part
+    ):
+        raise SchemaConflict(
+            f"append partitioned by {partition_by} onto a table "
+            f"partitioned by {prev_part}; repartition with mode='overwrite'"
+        )
+    return _mapping_of(pm), prev_part or partition_by, {}
+
+
+#: the stream key of batch commits made outside a streaming query; a
+#: query's own key is its id, which its checkpoint keeps across restarts
+DIRECT_STREAM = "direct"
+
+
+def _stream_key(spark: SparkSession) -> str:
+    """The committing stream: the id of the streaming query whose
+    ``foreachBatch`` runs on this thread, else ``DIRECT_STREAM``."""
+    sc = spark.sparkContext
+    return sc.getLocalProperty("sql.streaming.queryId") or DIRECT_STREAM
+
+
+def _stream_marks_after(
+    path: str, pm: dict, stream: str, batch_id: int
+) -> dict | None:
+    """The head's ``stream_marks`` (stream key → last committed batch
+    id, Delta's ``SetTransaction(appId, version)``) once ``stream``
+    commits ``batch_id``, or None when it already has. A query's batch
+    ids only grow, so its own mark decides from the head alone, and a
+    second query with another checkpoint never shadows it. A direct
+    call counts a batch id as delivered when it is at or below any
+    stream's mark. A head without marks (written before them, or
+    never streamed into) is checked against its whole history once,
+    and the marks start from that history's highest id."""
+    marks = pm.get("stream_marks")
+    if marks is None:
+        ids = committed_batch_ids(path) if pm else set()
+        if batch_id in ids:
+            return None
+        marks = {DIRECT_STREAM: max(ids)} if ids else {}
+    else:
+        seen = marks.values() if stream == DIRECT_STREAM else [marks.get(stream)]
+        if any(m is not None and batch_id <= m for m in seen):
+            return None
+    return {**marks, stream: max(batch_id, marks.get(stream, batch_id))}
+
+
+def _commit_files(
+    spark: SparkSession,
+    path: str,
+    schema,
+    rows,
+    write_files,
+    mode: str = "append",
+    retries: int = 3,
+    partition_by: list[str] | None = None,
+    manifest_extra: dict | None = None,
+    batch_id: int | None = None,
+) -> int | None:
+    """The commit half shared by every append writer and the stream
+    sinks' publish step: per attempt, read the head, apply the
+    redelivery guard, the CHECK constraints (over ``rows()``, a frame
+    of the logical rows) and the schema and layout checks, then
+    compose the snapshot of ``schema`` with the retry loop
+    ``write_table`` documents. ``write_files(mapping, partition
+    columns) -> (files, added per-file entries)`` is the data half:
+    it runs once, in the first attempt after its checks, so a
+    rejected write leaves no data file. A retry recomposes metadata
+    only; if the winner changed the column mapping or the layout the
+    files were written under, it raises ``CommitConflict`` instead
+    of mislabelling bytes. Returns the committed version, or None
+    when this stream already committed ``batch_id``."""
+    stream = None if batch_id is None else _stream_key(spark)
+    written = None
     for attempt in range(retries + 1):
-        if batch_id is not None and batch_id in committed_batch_ids(path):
-            return None  # a redelivered (or raced) batch is already in
         prev = current_version(path)
         pm = {} if prev is None else _read_manifest(path, prev)
-        _enforce_constraints(df, pm)  # before any data write
-        part_cols = partition_by
-        carried: list[str] = []
-        mapping: dict[str, str] = {}
-        # an overwrite writes logical names: no mapping, none retired
-        reset: dict = {"column_mapping": None, "retired_physical": None}
-        if mode == "append" and pm:
-            _check_append_schema(df, pm)
-            carried = pm["files"]
-            mapping = _mapping_of(pm)  # renames persist: physical
-            reset = {}
-            prev_part = pm.get("partition_by")
-            if prev_part:
-                if partition_by is not None and list(partition_by) != list(
-                    prev_part
-                ):
-                    raise SchemaConflict(
-                        f"append partitioned by {partition_by} onto a "
-                        f"table partitioned by {prev_part}; repartition "
-                        "with mode='overwrite'"
-                    )
-                part_cols = prev_part  # layout is sticky
-        if new_files is None:
-            # written exactly once; a retry recomposes metadata only.
-            # (If the winner RENAMED a column, its new mapping applies
-            # to files written after its commit — ours were written
-            # under the pre-race mapping, so a changed mapping forces
-            # a loud conflict instead of silently mis-mapped bytes.)
-            files_mapping = mapping
-            files_part_cols = part_cols
-            data = _to_physical(df, mapping)
-            added: dict = {}
-            if part_cols:
-                # the data frame is written under PHYSICAL names; the
-                # manifest's partition values stay keyed LOGICAL
-                phys_part = [mapping.get(c, c) for c in part_cols]
-                new_files, parts = _write_data_files_partitioned(
-                    data, path, phys_part
-                )
-                inv = dict(zip(phys_part, part_cols))
-                added["partitions"] = {
-                    fp: {inv[pc]: v for pc, v in d.items()}
-                    for fp, d in parts.items()
-                }
-            else:
-                new_files = _write_data_files(data, path)
-            spark = df.sparkSession
-            if stats_cols:
-                added["stats"] = _index_new_files(
-                    _file_stats, new_files, stats_cols, mapping, spark=spark
-                )
-            if bloom_cols:
-                added["bloom"] = _index_new_files(
-                    _file_blooms, new_files, bloom_cols, mapping, fpp=fpp,
-                    spark=spark,
-                )
-        elif mapping != files_mapping:
+        marks: dict = {}
+        if batch_id is not None:
+            after = _stream_marks_after(path, pm, stream, batch_id)
+            if after is None:
+                return None  # a redelivered (or raced) batch is already in
+            marks = {"stream_marks": after}
+        if pm.get("constraints"):
+            _enforce_constraints(rows(), pm)  # before any data write
+        mapping, part_cols, reset = _append_layout(schema, pm, mode, partition_by)
+        if written is None:
+            written = (mapping, part_cols, *write_files(mapping, part_cols))
+        elif mapping != written[0]:
             raise CommitConflict(
                 f"concurrent writer changed the column mapping of {path}; "
                 "re-run the write against the new snapshot"
             )
-        elif part_cols != files_part_cols:
-            # our files were laid out (and their tuples recorded)
-            # under the pre-race layout — recording them under the
-            # winner's layout would mislabel partitions silently
+        elif part_cols != written[1]:
             raise CommitConflict(
                 f"concurrent writer repartitioned {path} "
-                f"({files_part_cols} → {part_cols}); re-run the write "
+                f"({written[1]} → {part_cols}); re-run the write "
                 "against the new snapshot"
             )
+        carried = pm["files"] if mode == "append" and pm else []
         try:
             return _compose(
-                path, prev, pm, carried + new_files, mode,
-                added=added,
+                path, prev, pm, carried + written[2], mode,
+                added=written[3],
                 extra=manifest_extra,
-                schema=df.schema.json(),
+                schema=schema.json(),
                 partition_by=list(part_cols) if part_cols else None,
                 batch_id=batch_id,
                 **reset,
+                **marks,
             )
         except CommitConflict:
             if attempt == retries:
@@ -2032,8 +2105,12 @@ def restore_table(path: str, version: int) -> int:
     if not 0 <= version <= prev:
         raise ValueError(f"cannot restore to v{version}; latest is v{prev}")
     src = _read_manifest(path, version)
+    # the delivered batches stay delivered: a restore rolls back rows,
+    # not the streams' redelivery marks
+    marks = _read_manifest_raw(path, prev).get("stream_marks")
     return _compose(
-        path, prev, src, src["files"], "restore", restored_from=version
+        path, prev, src, src["files"], "restore", restored_from=version,
+        stream_marks=marks,
     )
 
 
@@ -2063,6 +2140,7 @@ def clone_table(src_path: str, dst_path: str) -> int:
     return _compose(
         dst_path, None, src, src["files"], "clone",
         cloned_from={"path": src_path, "version": src_v},
+        stream_marks=None,  # no batch was delivered to the clone
     )
 
 
@@ -2686,11 +2764,80 @@ def write_stream_batch(
     no window where data is visible but the batch unrecorded. A lost
     commit race retries like ``write_table``'s; if the winner committed
     this same ``batch_id``, the loser returns None.
+
+    Redelivery is keyed by stream (see ``_stream_marks_after``): inside
+    a streaming query the key is the query's id, so two queries with
+    different checkpoints into one table each land their own batch 0,
+    1, …; the guard reads the head manifest only.
     """
     return _write(
         df, path, partition_by=partition_by, stats_cols=stats_cols,
         batch_id=batch_id,
     )
+
+
+def stream_layout(path: str, schema) -> dict[str, str] | None:
+    """The column mapping (logical → physical) that files appended to
+    the table at ``path`` with logical ``schema`` must be written
+    under, or None when the table's layout is partitioned (its
+    appends write their own partition-pure files). Raises
+    ``SchemaConflict`` as an append of ``schema`` would."""
+    prev = current_version(path)
+    if prev is None:
+        return {}
+    # top-level keys only: no metadata sidecar is read
+    head = _read_manifest_raw(path, prev)
+    if head.get("partition_by"):
+        return None
+    return _append_layout(schema, head, "append", None)[0]
+
+
+def commit_stream_files(
+    spark: SparkSession,
+    files: list[str],
+    schema,
+    mapping: dict[str, str],
+    batch_id: int,
+    path: str,
+) -> int | None:
+    """Commit data files that are already written as micro-batch
+    ``batch_id`` — the publish step of a split pipeline write, and
+    the commit half of ``write_stream_batch``: the same redelivery
+    guard, CHECK constraints, schema and layout checks, compose and
+    retry loop. ``files`` hold the rows of logical ``schema`` under
+    the physical names of ``mapping`` (from ``stream_layout``); they
+    are renamed into a fresh ``data/`` directory of the table first,
+    and removed again when nothing commits. Returns the committed
+    version, or None for a redelivered batch."""
+    import shutil
+
+    dest = os.path.join(path, "data", uuid.uuid4().hex)
+    if files:
+        os.makedirs(dest)
+    moved = [
+        shutil.move(fp, os.path.join(dest, os.path.basename(fp)))
+        for fp in files
+    ]
+
+    def written(head_mapping: dict[str, str], part_cols) -> tuple[list, dict]:
+        if head_mapping != mapping or part_cols:
+            raise CommitConflict(
+                f"the layout of {path} changed after the batch files were "
+                "written; re-run the batch against the new snapshot"
+            )
+        return moved, {}
+
+    version = None
+    try:
+        version = _commit_files(
+            spark, path, schema,
+            lambda: _read_snapshot_files(spark, moved, schema, mapping),
+            written, batch_id=batch_id,
+        )
+    finally:
+        if version is None:
+            shutil.rmtree(dest, ignore_errors=True)
+    return version
 
 
 def compact(

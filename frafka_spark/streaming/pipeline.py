@@ -21,7 +21,9 @@ Spark mapping (SURVEY.md §3.4):
 - Fail/FailSink  → the DLQ split inside ``foreachBatch``: rows whose
                    transform errored go to the fail sink, the rest to
                    the main sink, and the batch still commits
-                   [SURVEY.md §7 hard-list #4]
+                   [SURVEY.md §7 hard-list #4]. With file sinks on both
+                   sides this is one Spark job per micro-batch (see
+                   ``Pipeline``)
 - Events()       → ``PipelineListener`` (StreamingQueryListener)
                    exposing progress/error events as a drainable list
 
@@ -33,7 +35,10 @@ code runs against a 1000-executor Kafka topic set.
 
 from __future__ import annotations
 
+import glob
 import json
+import os
+import shutil
 import threading
 import traceback
 from collections.abc import Callable, Iterator
@@ -41,12 +46,21 @@ from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.types import StructType
 
-from frafka_spark.streaming.sink import FrSink
+from frafka_spark.streaming.sink import FrSink, StagedFiles
 from frafka_spark.streaming.source import FrSource
 
 ERROR_COL = "_fr_error"
+#: partition column of a split write's staging directory (Ack = true)
+OK_COL = "_fr_ok"
+
+
+def _acked(out: DataFrame) -> DataFrame:
+    """The rows whose transform succeeded, without the DLQ columns."""
+    return out.filter(out[ERROR_COL].isNull()).drop(ERROR_COL, "_fr_source")
 
 
 def _ddl_field_names(ddl: str) -> list[str]:
@@ -185,13 +199,32 @@ class PipelineListener(StreamingQueryListener):
 class Pipeline:
     """source → transform → sink with Ack/Fail/DLQ parity.
 
-    Each micro-batch writes the DLQ (``fail_sink``) before the main
-    sink. A batch redelivered after a crash between the two writes
-    reruns both with the same ``batch_id``. A plain ``FrSink.parquet``
-    fail sink appends again, so its DLQ is at-least-once;
-    ``FrSink.parquet_txn`` replaces the batch's own partition, which
-    makes the DLQ exactly-once beside an exactly-once main sink
-    (``FrSink.manifest`` or ``parquet_txn``).
+    Each micro-batch with a ``fail_sink`` is ONE Spark job: the
+    transformed batch is written once, partitioned on outcome
+    (``_fr_error IS NULL``), into a staging directory under the main
+    sink. Two metadata-only publish steps follow, the DLQ first and
+    the main sink second (``FrSink.publish``), so a crash between them
+    redelivers a batch whose DLQ rows already landed, as with two
+    writes. A crash before either publish leaves no visible row.
+
+    The main sink receives the transform's output columns;
+    ``read_table`` of a manifest sink returns exactly those. DLQ files
+    hold ``_fr_source`` and ``_fr_error`` beside the output columns,
+    which are NULL there (a manifest DLQ's table schema is
+    ``_fr_source, _fr_error``); parquet main-sink files likewise hold
+    the two DLQ columns as NULLs.
+
+    A sink that cannot publish staged files (``FrSink.split_layout``:
+    Kafka, per-row ``partition_by`` routing, writer options beyond the
+    path, a manifest table with a partitioned layout) keeps two
+    filtered writes over the persisted batch, DLQ first.
+
+    Redelivery: a batch is redelivered with the same ``batch_id``. A
+    plain ``FrSink.parquet`` fail sink appends again, so its DLQ is
+    at-least-once; ``FrSink.parquet_txn`` replaces the batch's own
+    partition and ``FrSink.manifest`` skips a batch its stream already
+    committed, which makes the DLQ exactly-once beside an exactly-once
+    main sink (``FrSink.manifest`` or ``parquet_txn``).
     """
 
     def __init__(
@@ -221,25 +254,63 @@ class Pipeline:
                 "got memory"
             )
 
-    # -- the foreachBatch body: transform, split, double-write, commit --
+    # -- the foreachBatch body: transform, split by outcome, publish --
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         out = self.transform(batch_df)
-        if ERROR_COL in out.columns:
-            out.persist()
-            try:
-                bad = out.filter(out[ERROR_COL].isNotNull()).select(
-                    "_fr_source", ERROR_COL
-                )
-                good = out.filter(out[ERROR_COL].isNull()).drop(
-                    ERROR_COL, "_fr_source"
-                )
-                if self.fail_sink is not None:
-                    self.fail_sink.write_batch(bad, batch_id)  # Fail → DLQ (A5/A7)
-                self.sink.write_batch(good, batch_id)  # Send+Ack (A10/A4)
-            finally:
-                out.unpersist()
-        else:
+        if ERROR_COL not in out.columns:
             self.sink.write_batch(out, batch_id)
+        elif self.fail_sink is None:
+            self.sink.write_batch(_acked(out), batch_id)
+        elif not self._split_once(out, batch_id):
+            self._split_twice(out, batch_id)
+
+    def _split_once(self, out: DataFrame, batch_id: int) -> bool:
+        """One Spark job: write ``out`` once under the main sink's
+        staging directory, partitioned on outcome, then publish the
+        Fail files to the DLQ and the Ack files to the sink. False,
+        with nothing written, when either sink must write its own
+        rows (see ``FrSink.split_layout``)."""
+        schema = out.schema
+        failed = StructType([schema["_fr_source"], schema[ERROR_COL]])
+        acked = StructType(
+            [f for f in schema.fields if f.name not in failed.names]
+        )
+        fail_map = self.fail_sink.split_layout(failed)
+        ack_map = self.sink.split_layout(acked)
+        if fail_map is None or ack_map is None:
+            return False
+        staged_df = out.withColumn(OK_COL, F.col(ERROR_COL).isNull())
+        names = {**fail_map, **ack_map}
+        if names:  # the files carry the tables' physical names
+            staged_df = staged_df.withColumnsRenamed(names)
+        staging = self.sink.staging_dir()
+        try:
+            staged_df.write.partitionBy(OK_COL).parquet(staging)
+
+            def staged(ok: bool, schema, mapping) -> StagedFiles:
+                d = os.path.join(staging, f"{OK_COL}={str(ok).lower()}")
+                files = sorted(glob.glob(os.path.join(d, "*.parquet")))
+                return StagedFiles(out.sparkSession, files, schema, mapping)
+
+            # Fail → DLQ before Send+Ack: a crash between the two
+            # publishes redelivers a batch whose DLQ rows already landed
+            self.fail_sink.publish(staged(False, failed, fail_map), batch_id)
+            self.sink.publish(staged(True, acked, ack_map), batch_id)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        return True
+
+    def _split_twice(self, out: DataFrame, batch_id: int) -> None:
+        """Two filtered writes over the persisted batch, DLQ first."""
+        out.persist()
+        try:
+            bad = out.filter(out[ERROR_COL].isNotNull()).select(
+                "_fr_source", ERROR_COL
+            )
+            self.fail_sink.write_batch(bad, batch_id)  # Fail → DLQ (A5/A7)
+            self.sink.write_batch(_acked(out), batch_id)  # Send+Ack (A10/A4)
+        finally:
+            out.unpersist()
 
     def start(self, available_now: bool = True):
         """Start the query (Trigger.AvailableNow for bounded replays)."""

@@ -15,16 +15,47 @@ InitSink/Send/Close — SURVEY.md §2 Tier A9-A12]. The Spark analogs:
 - delivery reports = StreamingQueryListener (see pipeline.py).
 
 File/memory variants exist for this broker-less test environment.
+
+File sinks also take part in the pipeline's one-job split: the
+pipeline writes a micro-batch once, partitioned on outcome, under the
+main sink's ``staging_dir``, and each sink then publishes its share of
+the files with ``publish``, a metadata-only step. ``split_layout``
+says whether a sink can (Kafka, memory, per-row ``partition_by``
+routing, writer options beyond the path and a manifest table with a
+partitioned layout cannot; they keep ``write_batch``).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
 from frafka_spark.streaming.config import sink_options_from_env
+
+
+@dataclass
+class StagedFiles:
+    """Parquet files a split write left for one sink to publish."""
+
+    spark: SparkSession
+    files: list[str]
+    #: the sink's logical columns; the files may hold more
+    schema: StructType
+    #: logical → physical column names in the files
+    mapping: dict[str, str]
+
+
+def _move(files: list[str], directory: str) -> None:
+    if files:
+        os.makedirs(directory, exist_ok=True)
+    for fp in files:
+        shutil.move(fp, os.path.join(directory, os.path.basename(fp)))
 
 
 @dataclass
@@ -79,6 +110,12 @@ class FrSink:
         time travel, file-skipping stats, and concurrent-reader
         snapshot isolation on the output. This is the sink that turns
         the frafka-parity pipeline into a lakehouse ingest path.
+
+        Redelivery is keyed by stream (the streaming query's id), so
+        pipelines with different checkpoints can share one table. In a
+        split pipeline write its ``publish`` is one manifest commit of
+        the staged files; a table with a partitioned layout is written
+        by ``write_batch`` instead.
         """
         return cls("manifest", {"path": path})
 
@@ -98,7 +135,8 @@ class FrSink:
         never touch each other's partitions. Readers see
         exactly-once output at the price of one partition column
         [public pattern: Structured Streaming foreachBatch docs'
-        idempotent-write guidance].
+        idempotent-write guidance]. In a split pipeline write its
+        ``publish`` replaces ``_batch_id=<id>/`` with the staged files.
         """
         return cls("parquet", {"path": path}, idempotent=True)
 
@@ -118,6 +156,56 @@ class FrSink:
             else:
                 writer = writer.option(k, v)
         return writer
+
+    def split_layout(self, schema: StructType) -> dict[str, str] | None:
+        """The column mapping (logical → physical) under which a split
+        write must lay out this sink's rows of logical ``schema`` for
+        ``publish``, or None when the sink writes its rows itself with
+        ``write_batch``: a Kafka or memory sink, per-row
+        ``partition_by`` routing, writer options beyond the path, or a
+        manifest table whose layout is partitioned."""
+        if (
+            self.fmt not in ("parquet", "manifest")
+            or self.partition_by
+            or set(self.options) != {"path"}
+        ):
+            return None
+        if self.fmt == "parquet":
+            return {}
+        from frafka_spark.sources import manifest_table as mt
+
+        return mt.stream_layout(self.options["path"], schema)
+
+    def staging_dir(self) -> str:
+        """A fresh directory under this sink for a split write. Its
+        ``_staging`` parent is hidden from Spark's file listing and is
+        no part of a manifest table, so staged rows are invisible."""
+        return os.path.join(self.options["path"], "_staging", uuid.uuid4().hex)
+
+    def publish(self, staged: StagedFiles, batch_id: int) -> None:
+        """Publish files a split write already wrote, metadata only:
+        ``parquet`` renames them into its directory; ``parquet_txn``
+        replaces the contents of ``_batch_id=<id>/`` with them;
+        ``manifest`` commits them as batch ``batch_id`` through the
+        table's one commit path (redelivery guard, schema and CHECK
+        constraints, retry loop), so a redelivered batch is skipped."""
+        path = self.options["path"]
+        if self.fmt == "manifest":
+            from frafka_spark.sources import manifest_table as mt
+
+            mt.commit_stream_files(
+                staged.spark, staged.files, staged.schema, staged.mapping,
+                batch_id, path,
+            )
+        elif self.idempotent:
+            part = os.path.join(path, f"_batch_id={batch_id}")
+            hidden = os.path.join(path, f".{uuid.uuid4().hex}")
+            _move(staged.files, hidden)
+            shutil.rmtree(part, ignore_errors=True)
+            if staged.files:
+                os.rename(hidden, part)
+        else:
+            _move(staged.files, path)
 
     def write_batch(self, df: DataFrame, batch_id: int | None = None) -> None:
         """Batch-mode write (used inside foreachBatch pipelines)."""

@@ -2684,6 +2684,62 @@ def test_committed_batch_ids_skip_meta_sidecars(spark, tmp_path, monkeypatch):
     assert mt.read_table(spark, path).count() == 30
 
 
+def test_stream_commit_reads_only_the_head_manifest(spark, tmp_path, monkeypatch):
+    """The redelivery guard is a per-stream high-water mark in the
+    head manifest: a stream commit on a 500-version table opens the
+    head manifest, not every version."""
+    from frafka_spark.sources import manifest_table as mt
+
+    path = str(tmp_path / "long")
+    df = spark.range(0, 3).withColumnRenamed("id", "k")
+    assert mt.write_stream_batch(df, 0, path) == 0
+    m = mt._read_manifest(path, 0)
+    for v in range(499):  # metadata-only commits
+        mt._compose(path, v, m, m["files"], "evolve")
+    assert mt.current_version(path) == 499
+
+    raw = mt._read_manifest_raw
+    reads: list[int] = []
+    monkeypatch.setattr(
+        mt, "_read_manifest_raw", lambda p, v: reads.append(v) or raw(p, v)
+    )
+    assert mt.write_stream_batch(df, 1, path) == 500
+    assert set(reads) == {499} and len(reads) <= 2  # the guard, the spill check
+    reads.clear()
+    assert mt.write_stream_batch(df, 1, path) is None  # redelivery
+    assert reads == [500]
+    monkeypatch.undo()
+    assert mt.read_table(spark, path).count() == 6
+    assert mt.committed_batch_ids(path) == {0, 1}
+
+
+def test_append_rejects_new_column_on_live_physical_name(spark, tmp_path):
+    """After RENAME a → b, the physical name ``a`` is still live in the
+    files: an append that brings a NEW column ``a`` must raise
+    ``SchemaConflict`` with the add_column remedy (not fail inside
+    Spark), and the remedy works."""
+    from frafka_spark.sources import manifest_table as mt
+
+    path = str(tmp_path / "t")
+    mt.write_table(spark.range(0, 3).select(F.col("id").alias("a")), path)
+    mt.rename_column(path, "a", "b")
+    df = spark.range(3, 5).select(
+        F.col("id").alias("b"), F.lit(1).alias("x"), F.col("id").alias("a")
+    )
+    with pytest.raises(mt.SchemaConflict, match="add_column"):
+        mt.write_table(df, path)
+    assert mt.current_version(path) == 1  # nothing committed
+
+    mt.add_column(path, "a", "bigint")
+    mt.write_table(df, path)
+    rows = sorted(
+        (r.b, r.a, r.x) for r in mt.read_table(spark, path).collect()
+    )
+    assert rows == [
+        (0, None, None), (1, None, None), (2, None, None), (3, 3, 1), (4, 4, 1),
+    ]
+
+
 def test_meta_sidecar_distributed_prune_and_probe(spark, tmp_path, monkeypatch):
     """read_table_pruned over a sidecar-mode table plans the prune as
     a Spark metadata scan (probe records distributed=True) and skips

@@ -570,12 +570,12 @@ def test_dlq_exactly_once_under_batch_redelivery(spark, events_dir, tmp_path):
     good = sorted(i for i, bad in ids.items() if not bad)
     assert poison and good
 
-    def crash(df, batch_id):
+    def crash(staged, batch_id):
         raise RuntimeError("crash after the DLQ write")
 
     main = pipe.sink
     pipe.sink = FrSink.manifest(tbl)
-    pipe.sink.write_batch = crash
+    pipe.sink.publish = crash
     with pytest.raises(RuntimeError, match="crash after the DLQ write"):
         pipe._process_batch(batch, 7)
     pipe.sink = main
@@ -591,6 +591,144 @@ def test_dlq_exactly_once_under_batch_redelivery(spark, events_dir, tmp_path):
     assert sorted(dlq_ids) == poison
     assert sorted(r.event_id for r in mt.read_table(spark, tbl).collect()) == good
     assert mt.committed_batch_ids(tbl) == {7}
+
+
+def _poison_pipeline(spark, events_dir, tbl, dlq, checkpoint=None):
+    """Manifest sink + parquet DLQ; ``value > 195`` is poison."""
+
+    def per_record(rec: dict) -> dict:
+        if rec["value"] > 195.0:
+            raise ValueError(f"poison value {rec['value']:.1f}")
+        return {"event_id": rec["event_id"], "score": rec["value"] * 2.0}
+
+    return Pipeline(
+        source=FrSource.files(spark, events_dir, EVENTS_DDL),
+        transform=record_transform(per_record, "event_id bigint, score double"),
+        sink=FrSink.manifest(tbl),
+        fail_sink=FrSink.parquet(dlq),
+        checkpoint=checkpoint,
+    )
+
+
+def test_split_batch_runs_one_spark_job(spark, events_dir, tmp_path):
+    """A micro-batch into a manifest sink with a parquet DLQ is written
+    by ONE Spark job, split by outcome; both sides land, and the table
+    holds exactly the transform's output columns."""
+    from frafka_spark.sources import manifest_table as mt
+
+    tbl, dlq = str(tmp_path / "tbl"), str(tmp_path / "dlq")
+    pipe = _poison_pipeline(spark, events_dir, tbl, dlq)
+    batch = table(spark, SF_DIR, "events").filter(F.col("event_id") < 1000)
+    n_poison = batch.filter(F.col("value") > 195.0).count()
+    assert 0 < n_poison < batch.count()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("one-job-split", "split batch")
+    try:
+        pipe._process_batch(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("one-job-split")) == 1
+
+    got = mt.read_table(spark, tbl)
+    assert got.columns == ["event_id", "score"]
+    assert got.count() == batch.count() - n_poison
+    bad = spark.read.parquet(dlq)
+    assert bad.count() == n_poison
+    assert bad.filter(F.col("_fr_source").isNull()).count() == 0
+    assert bad.filter(F.col("event_id").isNotNull()).count() == 0  # NULL output
+    assert os.listdir(os.path.join(tbl, "_staging")) == []
+
+
+def test_split_commits_batches_with_one_empty_side(spark, events_dir, tmp_path):
+    """An all-poison batch still commits its batch id (with no table
+    rows); a poison-free batch adds no DLQ file."""
+    import glob
+
+    from frafka_spark.sources import manifest_table as mt
+
+    tbl, dlq = str(tmp_path / "tbl"), str(tmp_path / "dlq")
+    pipe = _poison_pipeline(spark, events_dir, tbl, dlq)
+    batch = table(spark, SF_DIR, "events").filter(F.col("event_id") < 1000)
+    poison = batch.filter(F.col("value") > 195.0)
+    clean = batch.filter(F.col("value") <= 195.0)
+
+    pipe._process_batch(poison, 0)
+    assert mt.committed_batch_ids(tbl) == {0}
+    assert mt.read_table(spark, tbl).count() == 0
+    dlq_files = sorted(glob.glob(f"{dlq}/*.parquet"))
+    assert dlq_files and spark.read.parquet(dlq).count() == poison.count()
+
+    pipe._process_batch(clean, 1)
+    assert mt.committed_batch_ids(tbl) == {0, 1}
+    assert mt.read_table(spark, tbl).count() == clean.count()
+    assert sorted(glob.glob(f"{dlq}/*.parquet")) == dlq_files
+
+
+def test_split_crash_before_publish_leaves_nothing_visible(
+    spark, events_dir, tmp_path
+):
+    """A crash after the staged write and before either publish leaves
+    no row in the DLQ or the table; the redelivery commits once."""
+    import glob
+
+    from frafka_spark.sources import manifest_table as mt
+
+    tbl, dlq = str(tmp_path / "tbl"), str(tmp_path / "dlq")
+    pipe = _poison_pipeline(spark, events_dir, tbl, dlq)
+    batch = table(spark, SF_DIR, "events").filter(F.col("event_id") < 1000)
+    n_poison = batch.filter(F.col("value") > 195.0).count()
+
+    def crash(staged, batch_id):
+        assert staged.files  # the staged write happened
+        raise RuntimeError("crash before the DLQ publish")
+
+    dlq_sink = pipe.fail_sink
+    pipe.fail_sink = FrSink.parquet(dlq)
+    pipe.fail_sink.publish = crash
+    with pytest.raises(RuntimeError, match="crash before the DLQ publish"):
+        pipe._process_batch(batch, 3)
+    assert glob.glob(f"{dlq}/**/*.parquet", recursive=True) == []
+    assert mt.current_version(tbl) is None
+    assert os.listdir(os.path.join(tbl, "_staging")) == []
+
+    pipe.fail_sink = dlq_sink
+    pipe._process_batch(batch, 3)  # the redelivery
+    assert mt.committed_batch_ids(tbl) == {3}
+    assert mt.current_version(tbl) == 0
+    got = mt.read_table(spark, tbl)
+    assert got.count() == batch.count() - n_poison
+    assert got.select("event_id").distinct().count() == got.count()
+    assert spark.read.parquet(dlq).count() == n_poison
+
+
+def test_two_pipelines_into_one_manifest_table(spark, tmp_path):
+    """Redelivery is keyed by stream: two pipelines with different
+    checkpoints each commit their own batch 0, 1, … into one table,
+    and every row of both lands."""
+    from frafka_spark.sources import manifest_table as mt
+
+    tbl = str(tmp_path / "tbl")
+    e = table(spark, SF_DIR, "events").filter(F.col("event_id") < 1000)
+    n = {}
+    for name, cond in (("a", F.col("event_id") % 2 == 0), ("b", F.col("event_id") % 2 == 1)):
+        src = str(tmp_path / f"src_{name}")
+        part = e.filter(cond)
+        n[name] = part.count()
+        part.repartition(2).write.parquet(src)
+        pipe = Pipeline(
+            source=FrSource.files(spark, src, EVENTS_DDL, max_files_per_trigger=1),
+            transform=lambda df: df.select("event_id", "value"),
+            sink=FrSink.manifest(tbl),
+            checkpoint=str(tmp_path / f"ckpt_{name}"),
+        )
+        pipe.run_to_completion()
+        pipe.close()
+    got = mt.read_table(spark, tbl)
+    assert got.count() == n["a"] + n["b"]
+    assert got.select("event_id").distinct().count() == got.count()
+    # a direct call is guarded against every stream's batches
+    assert mt.write_stream_batch(got.limit(3), 0, tbl) is None
 
 
 def test_kafka_recipe_loads_when_jar_present(spark):
