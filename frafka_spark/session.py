@@ -65,6 +65,15 @@ def get_spark(
         # rescan of unchanged zip archives (worker_daemon.py): ~130-180
         # ms of fixed cost off every pandas_udf / mapInPandas / udf task.
         "spark.python.daemon.module": "frafka_spark.worker_daemon",
+        # Checkpoint logs through FileSystem.rename, not FileContext's:
+        # the same exists-check-then-rename, minus the readlink process
+        # the local filesystem spawns per rename without libhadoop (24
+        # spawns per micro-batch; README "Checkpoint logs without
+        # process spawns").
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
         # 32 MiB broadcast threshold: every dim table in the fixture star
         # schema broadcasts; at 100 TB the dims are still ≤ GBs vs a
         # multi-TB fact table, so broadcasting dims remains correct.

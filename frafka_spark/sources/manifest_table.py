@@ -130,7 +130,13 @@ def _read_manifest(path: str, version: int) -> dict:
     every consumer keeps reading ``files``/``stats``/``partitions``
     as plain keys. The ``meta`` key is consumed here and removed —
     no caller can accidentally carry a stale sidecar list forward."""
-    manifest = _read_manifest_raw(path, version)
+    return _hydrate(_read_manifest_raw(path, version))
+
+
+def _hydrate(raw: dict) -> dict:
+    """``raw`` (a committed manifest) with its sidecar metadata inline
+    and without ``meta``; ``raw`` itself is left as it was."""
+    manifest = dict(raw)
     meta = manifest.pop("meta", None)
     if meta is None:
         return manifest
@@ -232,7 +238,7 @@ def _write_meta_sidecar(path: str, rows) -> str:
     return sc_path
 
 
-def _spill_meta(path: str, manifest: dict) -> None:
+def _spill_meta(path: str, manifest: dict, parent_raw: dict | None = None) -> None:
     """Move per-file metadata out of the manifest JSON into parquet
     sidecars when the snapshot is large (or its parent already spilled
     — sidecar mode is sticky except across ``overwrite``, which
@@ -243,14 +249,18 @@ def _spill_meta(path: str, manifest: dict) -> None:
     go to a ``removed`` list folded back by the compaction trigger.
     At 100 TB this is what keeps commit metadata O(delta): a
     million-file table's ingest commit writes a few KB of new
-    parquet + an O(1) JSON, never a 100 MB file list."""
+    parquet + an O(1) JSON, never a 100 MB file list.
+
+    ``parent_raw`` is the parent manifest as committed, when the caller
+    has already read it; otherwise it is read here."""
     manifest.pop("meta", None)  # always recomputed from the parent
     files = manifest.get("files")
     if files is None:
         return
     parent = manifest.get("parent")
-    parent_raw = None
-    if parent is not None and os.path.exists(_manifest_path(path, parent)):
+    if parent_raw is None and parent is not None and os.path.exists(
+        _manifest_path(path, parent)
+    ):
         parent_raw = _read_manifest_raw(path, parent)
     parent_meta = (parent_raw or {}).get("meta")
     if manifest.get("mode") == "overwrite":
@@ -495,11 +505,11 @@ def _span_keep_files_distributed(
 
 def _commit(path: str, version: int, manifest: dict) -> None:
     """Atomically create manifest version N — O_EXCL makes the create
-    the commit point: exactly one writer wins a version."""
+    the commit point: exactly one writer wins a version. ``manifest``
+    is written as given (``_compose`` has spilled its metadata)."""
     import time
 
     os.makedirs(_manifest_dir(path), exist_ok=True)
-    _spill_meta(path, manifest)  # large snapshots: metadata → sidecars
     target = _manifest_path(path, version)
     try:
         fd = os.open(target, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
@@ -530,6 +540,7 @@ def _compose(
     mode: str,
     added: dict | None = None,
     extra: dict | None = None,
+    parent_raw: dict | None = None,
     **changes,
 ) -> int:
     """Commit the snapshot after ``prev`` (v0 when ``prev`` is None)
@@ -538,7 +549,9 @@ def _compose(
     replace a key (None or an empty value drops it), ``added`` merges
     per-file entries for the new files into the carried maps, and
     ``extra`` adds caller marker keys that never shadow a protocol
-    key. Raises ``CommitConflict`` if ``prev + 1`` is taken."""
+    key. ``parent_raw`` is manifest ``prev`` as committed, when the
+    caller already read it. Raises ``CommitConflict`` if ``prev + 1``
+    is taken."""
     version = 0 if prev is None else prev + 1
     manifest = {k: base[k] for k in _TABLE_KEYS + _FILE_MAPS if base.get(k)}
     manifest.update(changes)
@@ -554,6 +567,7 @@ def _compose(
     manifest.update(version=version, mode=mode, parent=prev, files=files)
     for k, v in (extra or {}).items():
         manifest.setdefault(k, v)
+    _spill_meta(path, manifest, parent_raw)  # large snapshots: metadata → sidecars
     _commit(path, version, manifest)
     return version
 
@@ -724,7 +738,8 @@ def _commit_files(
     written = None
     for attempt in range(retries + 1):
         prev = current_version(path)
-        pm = {} if prev is None else _read_manifest(path, prev)
+        head = {} if prev is None else _read_manifest_raw(path, prev)
+        pm = _hydrate(head)
         marks: dict = {}
         if batch_id is not None:
             after = _stream_marks_after(path, pm, stream, batch_id)
@@ -753,6 +768,7 @@ def _commit_files(
                 path, prev, pm, carried + written[2], mode,
                 added=written[3],
                 extra=manifest_extra,
+                parent_raw=head,
                 schema=schema.json(),
                 partition_by=list(part_cols) if part_cols else None,
                 batch_id=batch_id,

@@ -63,25 +63,28 @@ def _acked(out: DataFrame) -> DataFrame:
     return out.filter(out[ERROR_COL].isNull()).drop(ERROR_COL, "_fr_source")
 
 
-def _ddl_field_names(ddl: str) -> list[str]:
-    """Top-level field names of a DDL schema string.
+def _record_mapper(fn: Callable[[dict], dict | None], out_names: list[str]):
+    """The ``mapInPandas`` function of ``record_transform``: ``fn`` per
+    record, its ``out_names`` keys, then the two Fail columns."""
+    columns = [*out_names, ERROR_COL, "_fr_source"]
 
-    A naive ``split(',')`` breaks on parameterized types
-    (``map<string,string>``, ``decimal(18,2)``) — only commas at
-    bracket depth 0 separate fields.
-    """
-    names, depth, start = [], 0, 0
-    for i, ch in enumerate(ddl + ","):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            field = ddl[start:i].strip()
-            if field:
-                names.append(field.split()[0].strip("`"))
-            start = i + 1
-    return names
+    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for rec in pdf.to_dict("records"):
+                try:
+                    out = fn(rec) or {}
+                    out = {k: out.get(k) for k in out_names}
+                    out[ERROR_COL] = None
+                    out["_fr_source"] = None
+                except Exception as exc:  # per-record Fail path
+                    out = dict.fromkeys(out_names)
+                    out[ERROR_COL] = f"{type(exc).__name__}: {exc}"
+                    out["_fr_source"] = json.dumps(rec, default=str)
+                rows.append(out)
+            yield pd.DataFrame(rows, columns=columns)
+
+    return mapper
 
 
 def record_transform(
@@ -100,27 +103,14 @@ def record_transform(
     ``"event_id bigint, score double"``.
     """
     full_schema = f"{output_schema}, {ERROR_COL} string, _fr_source string"
+    built: list = []  # (schema, mapper): the DDL parses through the JVM once
 
     def apply(df: DataFrame) -> DataFrame:
-        out_names = _ddl_field_names(output_schema)
-
-        def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for rec in pdf.to_dict("records"):
-                    try:
-                        out = fn(rec) or {}
-                        out = {k: out.get(k) for k in out_names}
-                        out[ERROR_COL] = None
-                        out["_fr_source"] = None
-                    except Exception as exc:  # per-record Fail path
-                        out = dict.fromkeys(out_names)
-                        out[ERROR_COL] = f"{type(exc).__name__}: {exc}"
-                        out["_fr_source"] = json.dumps(rec, default=str)
-                    rows.append(out)
-                yield pd.DataFrame(rows, columns=[*out_names, ERROR_COL, "_fr_source"])
-
-        return df.mapInPandas(mapper, full_schema)
+        if not built:
+            schema = StructType.fromDDL(full_schema)
+            built.append((schema, _record_mapper(fn, schema.names[:-2])))
+        schema, mapper = built[0]
+        return df.mapInPandas(mapper, schema)
 
     return apply
 
@@ -285,7 +275,11 @@ class Pipeline:
             staged_df = staged_df.withColumnsRenamed(names)
         staging = self.sink.staging_dir()
         try:
-            staged_df.write.partitionBy(OK_COL).parquet(staging)
+            # the staging directory is private and removed after the
+            # publish, so the job's _SUCCESS marker would have no reader
+            staged_df.write.option(
+                "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+            ).partitionBy(OK_COL).parquet(staging)
 
             def staged(ok: bool, schema, mapping) -> StagedFiles:
                 d = os.path.join(staging, f"{OK_COL}={str(ok).lower()}")

@@ -2704,7 +2704,7 @@ def test_stream_commit_reads_only_the_head_manifest(spark, tmp_path, monkeypatch
         mt, "_read_manifest_raw", lambda p, v: reads.append(v) or raw(p, v)
     )
     assert mt.write_stream_batch(df, 1, path) == 500
-    assert set(reads) == {499} and len(reads) <= 2  # the guard, the spill check
+    assert reads == [499]  # the guard and the spill check share one read
     reads.clear()
     assert mt.write_stream_batch(df, 1, path) is None  # redelivery
     assert reads == [500]

@@ -702,6 +702,84 @@ def test_split_crash_before_publish_leaves_nothing_visible(
     assert spark.read.parquet(dlq).count() == n_poison
 
 
+def test_split_staging_holds_no_success_marker(spark, events_dir, tmp_path):
+    """The staged write leaves no ``_SUCCESS`` marker for publish to
+    find (the staging directory has no reader), and still writes a
+    ``.crc`` beside each data file."""
+    from frafka_spark.sources import manifest_table as mt
+
+    tbl, dlq = str(tmp_path / "tbl"), str(tmp_path / "dlq")
+    pipe = _poison_pipeline(spark, events_dir, tbl, dlq)
+    batch = table(spark, SF_DIR, "events").filter(F.col("event_id") < 1000)
+    n_poison = batch.filter(F.col("value") > 195.0).count()
+
+    listed = []
+    publish = pipe.fail_sink.publish
+
+    def spy(staged, batch_id):
+        part_dir = os.path.dirname(staged.files[0])
+        listed.append(sorted(os.listdir(os.path.dirname(part_dir))))
+        listed.append(sorted(os.listdir(part_dir)))
+        publish(staged, batch_id)
+
+    pipe.fail_sink.publish = spy
+    pipe._process_batch(batch, 0)
+    staging, part = listed
+    assert staging == ["_fr_ok=false", "_fr_ok=true"]
+    data = [f for f in part if f.endswith(".parquet")]
+    assert data and all(f".{f}.crc" in part for f in data)
+    assert spark.read.parquet(dlq).count() == n_poison
+    assert mt.committed_batch_ids(tbl) == {0}
+
+
+def _checkpoint_file_manager(spark, path: str):
+    """The manager Spark's checkpoint logs would use for ``path``."""
+    jvm = spark.sparkContext._jvm
+    cfm = getattr(
+        jvm,
+        "org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager",
+    )
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return cfm.create(jvm.org.apache.hadoop.fs.Path(path), hadoop_conf), jvm
+
+
+def test_checkpoint_logs_use_the_filesystem_manager(spark, tmp_path):
+    """Checkpoint logs on ``file:`` go through ``FileSystem.rename``,
+    whose check-then-rename spawns no ``readlink`` process per file."""
+    fm, _ = _checkpoint_file_manager(spark, tmp_path.as_uri())
+    assert fm.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_checkpoint_batch_file_is_never_overwritten(spark, tmp_path):
+    """``HDFSMetadataLog`` writes each batch file with
+    ``createAtomic(overwriteIfPossible=false)`` and relies on a second
+    write of the same batch failing with ``FileAlreadyExistsException``
+    and leaving the first file's bytes, and its ``.crc``, in place."""
+    from py4j.protocol import Py4JJavaError
+
+    offsets = tmp_path / "offsets"
+    fm, jvm = _checkpoint_file_manager(spark, tmp_path.as_uri())
+    fm.mkdirs(jvm.org.apache.hadoop.fs.Path(offsets.as_uri()))
+    batch = jvm.org.apache.hadoop.fs.Path((offsets / "0").as_uri())
+    out = fm.createAtomic(batch, False)
+    out.write(bytearray(b"first writer"))
+    out.close()
+
+    out = fm.createAtomic(batch, False)
+    out.write(bytearray(b"second writer"))
+    with pytest.raises(Py4JJavaError) as err:
+        out.close()
+    exists = jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException"
+    )
+    assert exists.isInstance(err.value.java_exception)
+    assert (offsets / "0").read_bytes() == b"first writer"
+    assert (offsets / ".0.crc").exists()
+
+
 def test_two_pipelines_into_one_manifest_table(spark, tmp_path):
     """Redelivery is keyed by stream: two pipelines with different
     checkpoints each commit their own batch 0, 1, … into one table,

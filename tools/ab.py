@@ -6,11 +6,13 @@ Usage (from the root of a checkout)::
     python3 tools/ab.py --workload stream_ingest --base HEAD~1 \\
         --pairs 10 --seconds 10 --seed 101
 
-The base side runs from a ``git worktree`` of ``--base`` (removed at the
-end), or from ``--base-dir``, an existing checkout. Pair ``i`` runs both
-sides on seed ``--seed + i``; the side that runs first alternates from
-pair to pair, so a drift in host load falls on both sides. Each run is
-one untraced ``perfbench/run.py`` process.
+The base side runs from the committed files of ``--base``, unpacked
+with ``git archive`` into a temporary directory (removed at the end;
+``TMPDIR`` chooses where), or from ``--base-dir``, an existing
+checkout. Pair ``i`` runs both sides on seed ``--seed + i``; the side
+that runs first alternates from pair to pair, so a drift in host load
+falls on both sides. Each run is one untraced ``perfbench/run.py``
+process.
 
 Printed per end-to-end metric: each side's median and quartiles, how
 many pairs the change won (by the metric's ``better`` direction in
@@ -23,11 +25,14 @@ the raw runs and the summary.
 from __future__ import annotations
 
 import argparse
+import io
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tarfile
 import tempfile
 from pathlib import Path
 
@@ -65,6 +70,18 @@ def run_once(tree: Path, workload: str, seed: int, seconds: float) -> dict:
     }
 
 
+def unpack(rev: str) -> Path:
+    """The committed files of ``rev`` in a new temporary directory."""
+    tree = Path(tempfile.mkdtemp(prefix="ab-base-"))
+    archive = subprocess.run(
+        ["git", "archive", "--format=tar", rev],
+        cwd=ROOT, check=True, capture_output=True,
+    ).stdout
+    with tarfile.open(fileobj=io.BytesIO(archive)) as tar:
+        tar.extractall(tree, filter="data")
+    return tree
+
+
 def directions(tree: Path) -> dict[str, str]:
     spec = json.loads((tree / "BENCHMARK.json").read_text())
     return {m["name"]: m["better"] for m in spec["end_to_end"]}
@@ -100,15 +117,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--json", type=Path, help="write the runs and summary here")
     args = ap.parse_args(argv)
 
-    worktree = None
-    base_dir = args.base_dir
-    if base_dir is None:
-        worktree = Path(tempfile.mkdtemp(prefix="ab-base-"))
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", str(worktree), args.base],
-            cwd=ROOT, check=True, capture_output=True,
-        )
-        base_dir = worktree
+    unpacked = None if args.base_dir else unpack(args.base)
+    base_dir = args.base_dir or unpacked
     sides = {"base": base_dir.resolve(), "change": ROOT}
     pairs: list[dict] = []
     try:
@@ -129,11 +139,8 @@ def main(argv: list[str] | None = None) -> int:
                 flush=True,
             )
     finally:
-        if worktree is not None:
-            subprocess.run(
-                ["git", "worktree", "remove", "--force", str(worktree)],
-                cwd=ROOT, capture_output=True,
-            )
+        if unpacked is not None:
+            shutil.rmtree(unpacked, ignore_errors=True)
 
     summary = summarize(pairs, directions(ROOT))
     print(f"\n{args.workload}: {len(pairs)} interleaved pairs, base {args.base}")
