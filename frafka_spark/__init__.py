@@ -109,8 +109,4 @@ def load_all() -> None:
     # Round-12 additions: trained IVF-PQ at-rest index.
     from frafka_spark.llm import ann_trained  # noqa: F401
 
-    # Round-12 continuation wave: registered with defer_round=12 —
-    # the r12 window was already exactly 9 new + 41 stalest (VERDICT
-    # r11 ask #5), so these sort BEHIND the graded cohort until
-    # CORRECTNESS_r12.json lands, then lead the r13 window.
     from frafka_spark.llm import importance  # noqa: F401

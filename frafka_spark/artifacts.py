@@ -1,5 +1,7 @@
 """The artifact store: every derived on-disk layout and every
-per-session memo goes through one of two functions.
+per-session memo goes through one of two functions (the one exception
+is ``io.py``'s table and view memos, which key per SparkSession
+object, not per application).
 
 ``disk_artifact`` owns the layout root ``<repo>/spark-warehouse/``.
 Each artifact lives at ``<tag>/<sf name>/<gen>/``, where ``<gen>``
@@ -15,7 +17,13 @@ the rebuild. Stale generations stay on disk and are never read again.
 
 ``session_artifact`` memoizes a value per ``(applicationId, sf_dir,
 tag)``. A per-key lock runs each build once per session without
-blocking builds of other keys.
+blocking builds of other keys, and every caller gets the first-built
+object back, so plans composed over a cached or checkpointed relation
+share one plan object (an identity cache hit, and a truncated lineage
+that is not re-expanded per construction). The lock is not
+re-entrant: a build must never ask for its own tag. A build should
+have no session side effect (temp view, ``spark.conf.set``), since
+later callers skip it.
 """
 
 from __future__ import annotations

@@ -35,8 +35,10 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 # never invalidates, so a fixture parquet rewritten in-place mid-
 # application would leave a stale file listing behind (FileNotFound or
 # stale rows) — rewrite under a new sf_dir instead; entries live for
-# the application lifetime; and the dict is not locked (driver-side
-# single-threaded use assumed, as everywhere in this repo).
+# the application lifetime; and the dict is not locked. Queries may be
+# constructed from several driver threads at once (bench.py's FAIR
+# pass uses 8); each dict get and set is atomic, so a race costs one
+# extra footer read, never a wrong frame.
 _TABLE_MEMO: dict[tuple[str, int, str, str], DataFrame] = {}
 
 

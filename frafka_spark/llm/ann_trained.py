@@ -37,6 +37,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.functions.determinism import half_up, sql_half_up
 from frafka_spark.llm.index_store import CRAWL_MOD
 from frafka_spark.llm.pq import PQ_CODES, PQ_M, PQ_QUERY_N, PQ_SUBDIM
@@ -366,7 +367,6 @@ def q_llm_sim_ann_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from frafka_spark.llm.dedup import memoized_result
     from frafka_spark.sources.manifest_table import read_table
 
     path = _ensure_table(spark, sf_dir, "embeddings_ann_trained")
@@ -404,7 +404,7 @@ def q_llm_sim_ann_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return memoized_result(spark, sf_dir, "sim_ann_trained", build)
+    return session_artifact(spark, sf_dir, "sim_ann_trained", lambda: build().cache())
 
 
 def _pq_at_rest_oracle() -> str:
@@ -606,7 +606,6 @@ def q_llm_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the codebook discipline. nprobe>1 is the same plan with a top-p
     centroid probe instead of top-1 (q_llm_sim_ann_probe2's shape).
     """
-    from frafka_spark.llm.dedup import memoized_result
     from frafka_spark.sources.manifest_table import read_table
 
     path = _ensure_table(spark, sf_dir, "embeddings_ann_trained")
@@ -716,7 +715,7 @@ def q_llm_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             half_up(F.col("d_true"), 6).alias("exact_d"),
         )
 
-    return memoized_result(spark, sf_dir, "ivfpq_search", build)
+    return session_artifact(spark, sf_dir, "ivfpq_search", lambda: build().cache())
 
 
 DRIFT_FACTOR = 1.5  # crawl distortion > 1.5× base distortion ⇒ stale
@@ -763,7 +762,6 @@ DRIFT_FACTOR = 1.5  # crawl distortion > 1.5× base distortion ⇒ stale
         h_crawl="floor(avg(d2) FILTER (WHERE is_crawl) * 10000.0 + 0.5)"
         " / 10000.0",
     ),
-    defer_round=12,
 )
 def q_llm_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Codebook DRIFT monitor — the operational answer to "when must
@@ -795,7 +793,6 @@ def q_llm_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs after every ingest window: cells are only
     re-trained when THIS report says so, never on a timer.
     """
-    from frafka_spark.llm.dedup import memoized_result
     from frafka_spark.sources.manifest_table import read_table
 
     path = _ensure_table(spark, sf_dir, "embeddings_ann_trained")
@@ -843,4 +840,4 @@ def q_llm_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("stale"),
         )
 
-    return memoized_result(spark, sf_dir, "codebook_drift", build)
+    return session_artifact(spark, sf_dir, "codebook_drift", lambda: build().cache())

@@ -27,6 +27,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.functions.determinism import half_up, sql_half_up
 from frafka_spark.io import table
 from frafka_spark.registry import query
@@ -161,17 +162,20 @@ def _sparse_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Three consumers inside ``q_llm_sparse_cosine`` alone (norms + both
     self-join sides), and repeated suite runs re-invoke the query
-    constructor — routing the cached relation through the
-    ``materialize_once`` session memo means ONE InMemoryRelation per
-    (session, sf_dir), warmed sequentially by
-    ``warm_shared_projections`` and never leaked per-invocation (a raw
-    ``.cache()`` here accumulated a fresh cache entry per construction
-    across the 300-query suite)."""
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
+    constructor — building the cached relation through
+    ``session_artifact`` means ONE InMemoryRelation per (session,
+    sf_dir), never leaked per-invocation (a raw ``.cache()`` here
+    accumulated a fresh cache entry per construction across the
+    300-query suite)."""
+    return session_artifact(
+        spark,
+        sf_dir,
+        "sparse_postings",
+        lambda: _sparse_postings_plan(spark, sf_dir),
+    )
 
-    hit = shared_lookup(spark, sf_dir, "sparse_postings")
-    if hit is not None:
-        return hit
+
+def _sparse_postings_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
@@ -183,14 +187,13 @@ def _sparse_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("df")
     )
     nn = docs.agg(F.count("*").cast("bigint").alias("n_docs"))
-    kept = (
+    return (
         tf.join(dfreq, "word")
         .crossJoin(F.broadcast(nn))
         .filter(F.col("df") * SPARSE_DF_DEN <= F.col("n_docs"))
         .select("doc_id", "word", "tf")
         .cache()
     )
-    return materialize_once(kept, spark, sf_dir, "sparse_postings")
 
 
 @query(

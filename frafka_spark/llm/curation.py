@@ -273,7 +273,7 @@ def _ppl_bucket_oracle() -> str:
     """
 
 
-@query("q_llm_ppl_bucket", oracle=_ppl_bucket_oracle(), defer_round=12)
+@query("q_llm_ppl_bucket", oracle=_ppl_bucket_oracle())
 def q_llm_ppl_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style language-model bucketing: rank every document by
     its in-engine bigram NLL (``q_llm_doc_nll`` — lower = more

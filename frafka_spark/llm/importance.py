@@ -49,6 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.functions.determinism import half_up
 from frafka_spark.io import table
 from frafka_spark.registry import query
@@ -110,13 +111,12 @@ def _dsir_log_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy of the bucket-model subtree per reference; eager=False keeps
     plan construction job-free (the queries() contract). O(n_docs)
     rows of three scalars — cache-safe at corpus scale."""
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
-
-    memo = shared_lookup(spark, sf_dir, "dsir_log_weights")
-    if memo is not None:
-        return memo
-    leg = _dsir_log_weights_plan(spark, sf_dir).localCheckpoint(eager=False)
-    return materialize_once(leg, spark, sf_dir, "dsir_log_weights")
+    return session_artifact(
+        spark,
+        sf_dir,
+        "dsir_log_weights",
+        lambda: _dsir_log_weights_plan(spark, sf_dir).localCheckpoint(eager=False),
+    )
 
 
 # Shared oracle CTE: per-doc DSIR log-weights (mirrors _dsir_log_weights).
@@ -164,7 +164,6 @@ _DSIR_W_SQL = f"""
     ORDER BY w.log_w DESC, d.doc_id
     LIMIT {DSIR_TOP}
     """,
-    defer_round=12,
 )
 def q_llm_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{DSIR_TOP} most target-like documents by DSIR log importance
@@ -215,7 +214,6 @@ def q_llm_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked
     GROUP BY source
     """,
-    defer_round=12,
 )
 def q_llm_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR selection stage: within each source keep the top half of
@@ -376,7 +374,6 @@ def _make_mmr(k: int, lam: float, mu: float):
         UNION ALL SELECT label, 4, vec_id, score4 FROM s4
     )
     """,
-    defer_round=12,
 )
 def q_llm_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diverse top-{MMR_K} per label: rank 1 is the label's anchor
@@ -462,13 +459,12 @@ def _lr_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottleneck; materialise/truncate). localCheckpoint collapses the
     leg to one leaf; eager=False keeps construction job-free. Rows
     are (lang, y, x0, x1, x2) per doc — O(n_docs) scalars."""
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
-
-    memo = shared_lookup(spark, sf_dir, "lr_feats")
-    if memo is not None:
-        return memo
-    leg = _lr_feats_plan(spark, sf_dir).localCheckpoint(eager=False)
-    return materialize_once(leg, spark, sf_dir, "lr_feats")
+    return session_artifact(
+        spark,
+        sf_dir,
+        "lr_feats",
+        lambda: _lr_feats_plan(spark, sf_dir).localCheckpoint(eager=False),
+    )
 
 
 _LR_FEATS_SQL = f"""
@@ -625,7 +621,6 @@ _LR_SPARK_SQL = _lr_train_spark_sql()
     FROM feats, {_LR_FINAL}
     GROUP BY lang
     """,
-    defer_round=12,
 )
 def q_llm_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A quality/domain classifier TRAINED IN-ENGINE: full-batch

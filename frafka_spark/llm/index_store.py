@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.io import table
 from frafka_spark.operators.lakehouse import _ensure_table, _register_builder
 from frafka_spark.registry import query
@@ -496,17 +497,17 @@ def q_llm_dedup_near_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     like any other manifest table, so dedup runs pin a consistent
     index version while ingest keeps appending.
     """
-    from frafka_spark.llm.dedup import _minhash_lsh_pairs, memoized_result
+    from frafka_spark.llm.dedup import _minhash_lsh_pairs
     from frafka_spark.sources.manifest_table import read_table
 
     path = _ensure_table(spark, sf_dir, "documents_near_indexed")
     sh = read_table(spark, str(Path(path) / "shingles"))
     mh = read_table(spark, str(Path(path) / "signatures"))
-    return memoized_result(
+    return session_artifact(
         spark,
         sf_dir,
         "near_pairs_at_rest",
-        lambda: _minhash_lsh_pairs(sh, minhash=mh),
+        lambda: _minhash_lsh_pairs(sh, minhash=mh).cache(),
     )
 
 
@@ -682,40 +683,34 @@ def _build_streamed_index_tables(
     """Documents replayed as ``foreachBatch`` micro-batches: batch b =
     docs with doc_id % N_INDEX_BATCHES == b, committed to the corpus
     AND (as digest rows) to the index under the same batch_id via the
-    exactly-once sink; batch 1 is then REDELIVERED to both tables and
-    must be a no-op, and a third table simulates the crash-between-
-    writes shape — corpus committed, index write lost, redelivery
-    completes the index without duplicating the corpus."""
+    exactly-once sink. Batch 2 takes the crash-between-writes shape —
+    corpus committed, index write lost — and is redelivered before
+    batch 3 runs (a stream does not start batch 3 until batch 2 has
+    completed): the corpus write is a no-op and the index completes.
+    Batch 1 is then REDELIVERED to both tables and must be a no-op."""
     from frafka_spark.sources.manifest_table import write_stream_batch
 
     d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     corpus, index = dest / "corpus", dest / "digest_index"
+
+    def write(df: DataFrame, bid: int, path: Path, redelivered: bool) -> None:
+        # a raise, not an assert: the write must also run under -O
+        got = write_stream_batch(df, bid, str(path), ["doc_id"])
+        if (got is None) != redelivered:
+            raise RuntimeError(f"{path.name}: batch {bid} guard misjudged")
+
     for bid in range(N_INDEX_BATCHES):
         part = d.filter(F.col("doc_id") % N_INDEX_BATCHES == bid)
+        write(part, bid, corpus, redelivered=False)
         if bid == 2:
-            # crash shape: corpus committed, index write lost...
-            assert write_stream_batch(
-                part, bid, str(corpus), ["doc_id"]
-            ) is not None
-        else:
-            assert write_stream_batch(
-                part, bid, str(corpus), ["doc_id"]
-            ) is not None
-            assert write_stream_batch(
-                digest_rows(part), bid, str(index), ["doc_id"]
-            ) is not None
-    # ...redelivery of batch 2: corpus no-op, index completes
-    part2 = d.filter(F.col("doc_id") % N_INDEX_BATCHES == 2)
-    assert write_stream_batch(part2, 2, str(corpus), ["doc_id"]) is None
-    assert write_stream_batch(
-        digest_rows(part2), 2, str(index), ["doc_id"]
-    ) is not None
-    # and a full redelivery of batch 1 to BOTH tables is a no-op
+            # crash shape: the index write is lost; the redelivery
+            # finds the batch in the corpus and completes the index
+            write(part, bid, corpus, redelivered=True)
+        write(digest_rows(part), bid, index, redelivered=False)
+    # a full redelivery of batch 1 to BOTH tables is a no-op
     part1 = d.filter(F.col("doc_id") % N_INDEX_BATCHES == 1)
-    assert write_stream_batch(part1, 1, str(corpus), ["doc_id"]) is None
-    assert write_stream_batch(
-        digest_rows(part1), 1, str(index), ["doc_id"]
-    ) is None
+    write(part1, 1, corpus, redelivered=True)
+    write(digest_rows(part1), 1, index, redelivered=True)
 
 
 @query(
@@ -895,7 +890,6 @@ def q_llm_sim_ann_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from frafka_spark.functions.determinism import half_up
-    from frafka_spark.llm.dedup import memoized_result
     from frafka_spark.llm.similarity import _dot
     from frafka_spark.sources.manifest_table import read_table
 
@@ -934,7 +928,9 @@ def q_llm_sim_ann_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return memoized_result(spark, sf_dir, "sim_ann_topk_at_rest", build)
+    return session_artifact(
+        spark, sf_dir, "sim_ann_topk_at_rest", lambda: build().cache()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1155,11 +1151,7 @@ def q_llm_dedup_ppjoin_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     amortized into the table, which is the entire point of keeping
     it at rest.
     """
-    from frafka_spark.llm.dedup import (
-        memoized_result,
-        ppjoin_pairs_over,
-        ppjoin_prefix_of,
-    )
+    from frafka_spark.llm.dedup import ppjoin_pairs_over, ppjoin_prefix_of
     from frafka_spark.sources.manifest_table import read_table
 
     path = _ensure_table(spark, sf_dir, "documents_near_indexed")
@@ -1175,23 +1167,25 @@ def q_llm_dedup_ppjoin_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the ONLY difference was these legs). One cached build of
         # each leg serves every reference, exactly like
         # ``_prefix_shingles``/``ppjoin_docsets`` do from scratch.
-        pre = memoized_result(
+        pre = session_artifact(
             spark,
             sf_dir,
             "ppjoin_prefix_index_at_rest",
-            lambda: ppjoin_prefix_of(sh),
+            lambda: ppjoin_prefix_of(sh).cache(),
         )
-        docsets = memoized_result(
+        docsets = session_artifact(
             spark,
             sf_dir,
             "ppjoin_docsets_at_rest",
-            lambda: sh.groupBy("doc_id").agg(
-                F.sort_array(F.collect_set("sh")).alias("shs")
-            ),
+            lambda: sh.groupBy("doc_id")
+            .agg(F.sort_array(F.collect_set("sh")).alias("shs"))
+            .cache(),
         )
         return ppjoin_pairs_over(pre, docsets)
 
-    return memoized_result(spark, sf_dir, "ppjoin_pairs_at_rest", build)
+    return session_artifact(
+        spark, sf_dir, "ppjoin_pairs_at_rest", lambda: build().cache()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1626,7 +1620,7 @@ def _segfreq_oracle() -> str:
     """
 
 
-@query("q_llm_dedup_lines_at_rest", oracle=_segfreq_oracle(), defer_round=12)
+@query("q_llm_dedup_lines_at_rest", oracle=_segfreq_oracle())
 def q_llm_dedup_lines_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-line (boilerplate-segment) accounting answered from
     the AT-REST segment index: per source, how many documents, total

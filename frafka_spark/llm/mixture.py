@@ -445,7 +445,7 @@ def _doremi_oracle() -> str:
     """
 
 
-@query("q_llm_doremi_step", oracle=_doremi_oracle(), defer_round=12)
+@query("q_llm_doremi_step", oracle=_doremi_oracle())
 def q_llm_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One DoReMi domain-reweighting step: per-source excess bigram
     NLL over the easiest source, exponentiated-gradient update

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.functions.determinism import half_up, sql_half_up
 from frafka_spark.io import table
 from frafka_spark.registry import query
@@ -78,15 +79,9 @@ def _subs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The slice relation CACHED and session-memoized: the encode pass
     and the ADC search pass (plus repeated suite invocations of each)
     all read one InMemoryRelation per (session, sf_dir) instead of
-    leaking a fresh cache entry per query construction; warming rides
-    ``warm_shared_projections`` like every other shared projection."""
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
-
-    hit = shared_lookup(spark, sf_dir, "pq_subs")
-    if hit is not None:
-        return hit
-    return materialize_once(
-        _subs(spark, sf_dir).cache(), spark, sf_dir, "pq_subs"
+    leaking a fresh cache entry per query construction."""
+    return session_artifact(
+        spark, sf_dir, "pq_subs", lambda: _subs(spark, sf_dir).cache()
     )
 
 
@@ -95,14 +90,15 @@ def _assignments_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode pass and the ADC search pass both consume it (wide pivot +
     the declared encode relation), so the per-vector M·K distance
     arithmetic runs once per session instead of once per consumer."""
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
-
-    hit = shared_lookup(spark, sf_dir, "pq_assign")
-    if hit is not None:
-        return hit
     subs = _subs_shared(spark, sf_dir)
-    leg = _assignments(spark, sf_dir, subs=subs, codes=_codebook(subs))
-    return materialize_once(leg.cache(), spark, sf_dir, "pq_assign")
+    return session_artifact(
+        spark,
+        sf_dir,
+        "pq_assign",
+        lambda: _assignments(
+            spark, sf_dir, subs=subs, codes=_codebook(subs)
+        ).cache(),
+    )
 
 
 def _codebook(subs: DataFrame) -> DataFrame:

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.functions.determinism import half_up, sql_half_up
 from frafka_spark.io import table
 from frafka_spark.llm.similarity import (
@@ -81,7 +82,7 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     work happens INSIDE coarse cells (Σ|cell|² not n², cent_id is the
     shuffle key), the codebook crossJoin in `_cells` broadcasts a
     bounded centroid set, and the verdict join is key-equi on vec_id.
-    The cell assignment is session-cached (`materialize_once`), so the
+    The cell assignment is session-cached (`session_artifact`), so the
     three consumers here (both self-join sides + the verdict spine)
     read one materialization.
     """
@@ -93,7 +94,12 @@ def _verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers: the verdict emit and the by-source curation report).
     Corpus-row-sized but column-narrow; at scale this is the relation
     a curation run would persist anyway."""
-    from frafka_spark.llm.dedup import materialize_once
+    return session_artifact(
+        spark, sf_dir, "semdedup_verdicts", lambda: _verdicts_plan(spark, sf_dir)
+    )
+
+
+def _verdicts_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frafka_spark.llm.similarity import _dot
 
     cells = _cells(spark, sf_dir)
@@ -122,7 +128,7 @@ def _verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("b_id").alias("vec_id"))
         .agg(F.count("*").cast("bigint").alias("n_dups_lower"))
     )
-    out = (
+    return (
         cells.select("vec_id", "cent_id", "label")
         .join(dups, "vec_id", "left")
         .select(
@@ -136,7 +142,6 @@ def _verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    return materialize_once(out, spark, sf_dir, "semdedup_verdicts")
 
 
 @query(

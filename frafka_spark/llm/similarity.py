@@ -138,15 +138,16 @@ def q_llm_sim_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     BLAS sum reordering vs the oracle's sequential sums is absorbed
     by the 6-digit round (divergence window ~1e-16 vs 1e-6).
 
-    The result relation is session-memoized (``memoized_result``):
+    The result relation is session-memoized (``session_artifact``):
     the ANN recall audit consumes it as its exact-baseline leg, and
-    the shared_lookup-first guard also keeps the eager broadcast
-    build (count + bounded collect) to one per session.
+    building it only on a miss also keeps the eager broadcast build
+    (count + bounded collect) to one per session.
     """
-    from frafka_spark.llm.dedup import memoized_result
-
-    return memoized_result(
-        spark, sf_dir, "sim_cosine_topk", lambda: _sim_cosine_plan(spark, sf_dir)
+    return session_artifact(
+        spark,
+        sf_dir,
+        "sim_cosine_topk",
+        lambda: _sim_cosine_plan(spark, sf_dir).cache(),
     )
 
 
@@ -217,6 +218,13 @@ def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical assignment (and each uses it on BOTH sides of its
     self-join), so the centroid scan runs once per session+sf_dir.
     """
+    # both self-join sides would otherwise race the cold cache build
+    return session_artifact(
+        spark, sf_dir, "ivf_cells", lambda: _cells_plan(spark, sf_dir)
+    )
+
+
+def _cells_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan the dot-product-heavy assignment past the file-split width
     v = fan_out(_vectors(spark, sf_dir), "vec_id")
     cents = v.filter((F.col("vec_id") % CENTROID_MOD) == 0).select(
@@ -228,9 +236,7 @@ def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_assign = Window.partitionBy("vec_id").orderBy(
         F.col("ccos").desc(), F.col("cent_id").asc()
     )
-    from frafka_spark.llm.dedup import materialize_once
-
-    cells = (
+    return (
         v.crossJoin(F.broadcast(cents))
         .withColumn("ccos", ccos)
         .withColumn("rn", F.row_number().over(w_assign))
@@ -238,8 +244,6 @@ def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "label", "emb", "norm", "cent_id")
         .cache()
     )
-    # both self-join sides would otherwise race the cold cache build
-    return materialize_once(cells, spark, sf_dir, "ivf_cells")
 
 
 @query(
@@ -275,10 +279,8 @@ def q_llm_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     The result relation is session-memoized — the recall audit's ANN
     leg and repeat suite passes read one InMemoryRelation.
     """
-    from frafka_spark.llm.dedup import memoized_result
-
-    return memoized_result(
-        spark, sf_dir, "sim_ann_topk", lambda: _sim_ann_plan(spark, sf_dir)
+    return session_artifact(
+        spark, sf_dir, "sim_ann_topk", lambda: _sim_ann_plan(spark, sf_dir).cache()
     )
 
 
@@ -656,22 +658,20 @@ def q_llm_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both sides.
     """
     from frafka_spark.io import fan_out
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
 
     # Session-memoized cached signatures: BOTH self-join sides consume
     # this relation, and Catalyst re-expands (and re-executes) the
     # 8-plane integer-fold signature projection per reference without
     # the shared cache — the per-row signature is the expensive leg
     # here, not the bucket join.
-    sig = shared_lookup(spark, sf_dir, "lsh_vec_sigs")
-    if sig is None:
-        v = fan_out(_vectors(spark, sf_dir), "vec_id")
-        sig = materialize_once(
-            v.withColumn("bucket", _lsh_bucket()).cache(),
-            spark,
-            sf_dir,
-            "lsh_vec_sigs",
-        )
+    sig = session_artifact(
+        spark,
+        sf_dir,
+        "lsh_vec_sigs",
+        lambda: fan_out(_vectors(spark, sf_dir), "vec_id")
+        .withColumn("bucket", _lsh_bucket())
+        .cache(),
+    )
     a = sig.select(
         "vec_id",
         "bucket",

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.functions.determinism import half_up, sql_dec_avg
 from frafka_spark.io import fan_out, table
 from frafka_spark.registry import query
@@ -396,10 +397,8 @@ def _tfidf_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized TF-IDF relation for COMPOSING consumers
     (``q_llm_keywords``) — the shared-leg discipline; the declared
     ``q_llm_tfidf`` itself executes ``_tfidf_plan`` fresh."""
-    from frafka_spark.llm.dedup import memoized_result
-
-    return memoized_result(
-        spark, sf_dir, "tfidf_rel", lambda: _tfidf_plan(spark, sf_dir)
+    return session_artifact(
+        spark, sf_dir, "tfidf_rel", lambda: _tfidf_plan(spark, sf_dir).cache()
     )
 
 
@@ -583,26 +582,23 @@ def _bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     on TWO branches: corpus statistics and per-doc lookups). Same
     discipline as ``_shingles``/``_words``: fan out past the
     single-row-group file split, build each pair with one ``slice``,
-    cache, and register for sequential warming.
+    cache, and warm in ``warm_shared_projections``.
     """
-    from frafka_spark.llm.dedup import materialize_once
-
-    d = table(spark, sf_dir, "documents")
-    w = (
-        fan_out(d, "doc_id")
-        .select("doc_id", F.split("text", " ").alias("w"))
-        .filter(F.size("w") >= 2)
-    )
     pairs = F.transform(
         F.sequence(F.lit(1), F.size("w") - 1),
         lambda i: F.slice("w", i, 2),
     )
-    bi = (
-        w.select("doc_id", F.explode(pairs).alias("p"))
+    return session_artifact(
+        spark,
+        sf_dir,
+        "bigrams",
+        lambda: fan_out(table(spark, sf_dir, "documents"), "doc_id")
+        .select("doc_id", F.split("text", " ").alias("w"))
+        .filter(F.size("w") >= 2)
+        .select("doc_id", F.explode(pairs).alias("p"))
         .select("doc_id", F.col("p")[0].alias("w1"), F.col("p")[1].alias("w2"))
-        .cache()
+        .cache(),
     )
-    return materialize_once(bi, spark, sf_dir, "bigrams")
 
 
 CHUNK_WORDS = 40  # window size (words) per training/RAG chunk
@@ -760,13 +756,12 @@ def _doc_nll_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans O(rows-out)-sized. eager=False keeps plan construction
     job-free (the queries() contract). O(n_docs) rows of three longs:
     cache-safe at any corpus scale the per-doc report itself is."""
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
-
-    memo = shared_lookup(spark, sf_dir, "doc_nll_agg")
-    if memo is not None:
-        return memo
-    leg = _doc_nll_agg_plan(spark, sf_dir).localCheckpoint(eager=False)
-    return materialize_once(leg, spark, sf_dir, "doc_nll_agg")
+    return session_artifact(
+        spark,
+        sf_dir,
+        "doc_nll_agg",
+        lambda: _doc_nll_agg_plan(spark, sf_dir).localCheckpoint(eager=False),
+    )
 
 
 @query(
@@ -1163,8 +1158,6 @@ def q_llm_cooccur_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus exchange for the join itself on top of that. df columns
     rejoin from the broadcast vocab on the 435-row pair output.
     """
-    from frafka_spark.llm.dedup import memoized_result
-
     d = table(spark, sf_dir, "documents")
 
     # Per-doc distinct INSIDE the projection (array_distinct, no
@@ -1182,7 +1175,9 @@ def q_llm_cooccur_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         dfreq = words.groupBy("word").agg(F.count("*").alias("df"))
         return dfreq.orderBy(F.col("df").desc(), F.col("word").asc()).limit(30)
 
-    vocab = memoized_result(spark, sf_dir, "pmi_vocab", build_vocab)
+    vocab = session_artifact(
+        spark, sf_dir, "pmi_vocab", lambda: build_vocab().cache()
+    )
     vlist = vocab.agg(F.sort_array(F.collect_list("word")).alias("vws"))
     ws = F.sort_array(
         F.array_intersect(F.array_distinct(F.split("text", " ")), F.col("vws"))
@@ -1744,7 +1739,7 @@ def q_llm_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast bounds the join fan-out exactly like
     ``q_llm_cooccur_pmi``.
     """
-    from frafka_spark.llm.dedup import _words, memoized_result
+    from frafka_spark.llm.dedup import _words
 
     tf = (
         _words(spark, sf_dir)
@@ -1765,7 +1760,9 @@ def q_llm_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(20)
         )
 
-    vocab = memoized_result(spark, sf_dir, "burstiness_vocab", build_vocab)
+    vocab = session_artifact(
+        spark, sf_dir, "burstiness_vocab", lambda: build_vocab().cache()
+    )
     j = tf.join(F.broadcast(vocab), "word")
     stats = j.groupBy("word", "df").agg(
         F.sum("tf").alias("s"),
@@ -1812,20 +1809,22 @@ def q_llm_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise split ties engine-specifically (the q_ts_gapfill class).
     """
     from frafka_spark.functions.determinism import half_up
-    from frafka_spark.llm.dedup import memoized_result
 
     # The three per-doc signal legs are session-memoized: each is a
     # declared query that ALSO runs standalone in the suite, and
     # Spark's cache manager matches on analyzed-plan equality, so the
     # standalone constructions read the same materialized blocks.
-    q = memoized_result(
-        spark, sf_dir, "quality_doc", lambda: q_llm_quality(spark, sf_dir)
+    q = session_artifact(
+        spark, sf_dir, "quality_doc", lambda: q_llm_quality(spark, sf_dir).cache()
     ).select("doc_id", "stopword_ratio", "uniq_ratio")
-    e = memoized_result(
-        spark, sf_dir, "entropy_doc", lambda: q_llm_entropy(spark, sf_dir)
+    e = session_artifact(
+        spark, sf_dir, "entropy_doc", lambda: q_llm_entropy(spark, sf_dir).cache()
     ).select("doc_id", "entropy_norm")
-    r = memoized_result(
-        spark, sf_dir, "repetition_doc", lambda: q_llm_repetition(spark, sf_dir)
+    r = session_artifact(
+        spark,
+        sf_dir,
+        "repetition_doc",
+        lambda: q_llm_repetition(spark, sf_dir).cache(),
     ).select("doc_id", "repetition_ratio")
     z = (
         F.lit(-2.0)
@@ -2280,10 +2279,8 @@ def _bm25_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized BM25 page for COMPOSING consumers
     (``q_llm_ndcg``) — the shared-leg discipline; the declared
     ``q_llm_bm25`` itself executes ``_bm25_plan`` fresh."""
-    from frafka_spark.llm.dedup import memoized_result
-
-    return memoized_result(
-        spark, sf_dir, "bm25_top", lambda: _bm25_plan(spark, sf_dir)
+    return session_artifact(
+        spark, sf_dir, "bm25_top", lambda: _bm25_plan(spark, sf_dir).cache()
     )
 
 
@@ -2981,7 +2978,7 @@ def _bpe_train_oracle() -> str:
     """
 
 
-@query("q_llm_bpe_train", oracle=_bpe_train_oracle(), defer_round=12)
+@query("q_llm_bpe_train", oracle=_bpe_train_oracle())
 def q_llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING, {BPE_MERGES} merges end-to-end: count
     adjacent symbol pairs over the frequency-weighted vocabulary, merge
@@ -3012,22 +3009,25 @@ def q_llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runs the K winner aggregates + K pair aggregates over the
     cached rounds, the honest serve cost of the declared artifact.
     """
-    from frafka_spark.llm.dedup import _words, materialize_once
+    from frafka_spark.llm.dedup import _words
 
     def build() -> DataFrame:
-        vocab = (
-            _words(spark, sf_dir)
-            .filter(F.length("word") > 0)
-            .groupBy("word")
-            .agg(F.count("*").alias("freq"))
-        )
         enc = F.concat(
             F.lit("|"),
             F.concat_ws("|", F.split("word", "")),
             F.lit("|$|"),
         )
-        cur = vocab.select(enc.alias("enc"), "freq")
-        cur = materialize_once(cur.cache(), spark, sf_dir, "bpe_v0")
+        cur = session_artifact(
+            spark,
+            sf_dir,
+            "bpe_v0",
+            lambda: _words(spark, sf_dir)
+            .filter(F.length("word") > 0)
+            .groupBy("word")
+            .agg(F.count("*").alias("freq"))
+            .select(enc.alias("enc"), "freq")
+            .cache(),
+        )
         merges = []
         for k in range(1, BPE_MERGES + 1):
             syms = F.filter(F.split("enc", "[|]"), lambda x: x != F.lit(""))
@@ -3050,15 +3050,21 @@ def q_llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             merges.append(
                 tk.select(F.lit(k).alias("step"), "l", "r", "pair_count")
             )
-            nxt = cur.crossJoin(F.broadcast(tk.select("l", "r"))).select(
-                F.replace(
-                    F.col("enc"),
-                    F.concat(F.lit("|"), "l", F.lit("|"), "r", F.lit("|")),
-                    F.concat(F.lit("|"), "l", F.col("r"), F.lit("|")),
-                ).alias("enc"),
-                "freq",
+            cur = session_artifact(
+                spark,
+                sf_dir,
+                f"bpe_v{k}",
+                lambda: cur.crossJoin(F.broadcast(tk.select("l", "r")))
+                .select(
+                    F.replace(
+                        F.col("enc"),
+                        F.concat(F.lit("|"), "l", F.lit("|"), "r", F.lit("|")),
+                        F.concat(F.lit("|"), "l", F.col("r"), F.lit("|")),
+                    ).alias("enc"),
+                    "freq",
+                )
+                .cache(),
             )
-            cur = materialize_once(nxt.cache(), spark, sf_dir, f"bpe_v{k}")
         out = merges[0]
         for m in merges[1:]:
             out = out.unionAll(m)
@@ -3138,7 +3144,7 @@ def _bpe_encode_oracle() -> str:
     """
 
 
-@query("q_llm_bpe_encode", oracle=_bpe_encode_oracle(), defer_round=12)
+@query("q_llm_bpe_encode", oracle=_bpe_encode_oracle())
 def q_llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus ENCODING with the TRAINED tokenizer — the consumption
     half of ``q_llm_bpe_train``'s loop: apply the learned merge table
@@ -3174,7 +3180,7 @@ def q_llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-step word relations are cached and session-shared, so
     train + encode in one suite replay training once.
     """
-    from frafka_spark.llm.dedup import _words, materialize_once, memoized_result
+    from frafka_spark.llm.dedup import _words
 
     def build_wstats() -> DataFrame:
         vocab = (
@@ -3188,23 +3194,31 @@ def q_llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws("|", F.split("word", "")),
             F.lit("|$|"),
         )
-        cur = vocab.select("word", enc.alias("enc"), "freq")
-        cur = materialize_once(cur.cache(), spark, sf_dir, "bpe_w0")
+        cur = session_artifact(
+            spark,
+            sf_dir,
+            "bpe_w0",
+            lambda: vocab.select("word", enc.alias("enc"), "freq").cache(),
+        )
         merge_rows = sorted(
             q_llm_bpe_train(spark, sf_dir).select("step", "l", "r").collect()
         )
         assert len(merge_rows) == BPE_MERGES
         for step, left, right in merge_rows:
-            nxt = cur.select(
-                "word",
-                F.replace(
-                    F.col("enc"),
-                    F.lit(f"|{left}|{right}|"),
-                    F.lit(f"|{left}{right}|"),
-                ).alias("enc"),
-                "freq",
+            cur = session_artifact(
+                spark,
+                sf_dir,
+                f"bpe_w{step}",
+                lambda: cur.select(
+                    "word",
+                    F.replace(
+                        F.col("enc"),
+                        F.lit(f"|{left}|{right}|"),
+                        F.lit(f"|{left}{right}|"),
+                    ).alias("enc"),
+                    "freq",
+                ).cache(),
             )
-            cur = materialize_once(nxt.cache(), spark, sf_dir, f"bpe_w{step}")
         syms = F.filter(F.split("enc", "[|]"), lambda x: x != F.lit(""))
         return cur.select(
             "word",
@@ -3214,7 +3228,9 @@ def q_llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_merged"),
         )
 
-    wstats = memoized_result(spark, sf_dir, "bpe_wstats", build_wstats)
+    wstats = session_artifact(
+        spark, sf_dir, "bpe_wstats", lambda: build_wstats().cache()
+    )
     docw = _words(spark, sf_dir).filter(F.length("word") > 0)
     return (
         docw.join(wstats, "word")
@@ -3289,7 +3305,7 @@ def _heldout_oracle() -> str:
     """
 
 
-@query("q_llm_heldout_nll", oracle=_heldout_oracle(), defer_round=12)
+@query("q_llm_heldout_nll", oracle=_heldout_oracle())
 def q_llm_heldout_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out bigram NLL: the model's counts come from the TRAIN
     split only (q_llm_split's stable hash rule), scoring runs on the
@@ -3320,8 +3336,6 @@ def q_llm_heldout_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     V — the doc_nll plan with a split predicate pushed into each
     side. Nothing new shuffles at 100 TB.
     """
-    from frafka_spark.llm.dedup import memoized_result
-
     bi = _bigrams(spark, sf_dir)
     hk = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4)
     split = (
@@ -3339,7 +3353,9 @@ def q_llm_heldout_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("c")
         )
 
-    counts = memoized_result(spark, sf_dir, "heldout_counts", build_counts)
+    counts = session_artifact(
+        spark, sf_dir, "heldout_counts", lambda: build_counts().cache()
+    )
     firsts = counts.groupBy("w1").agg(
         F.sum("c").cast("bigint").alias("n_first")
     )

@@ -78,30 +78,31 @@ def _hour_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     the co-activity edge build and ``q_events_triangles`` (r13: both
     previously derived it independently; the events scan + distinct
     ran once per consumer)."""
-    from frafka_spark.llm.dedup import memoized_result
-
-    def build() -> DataFrame:
-        e = table(spark, sf_dir, "events")
-        return e.select(
+    e = table(spark, sf_dir, "events")
+    return session_artifact(
+        spark,
+        sf_dir,
+        "graph_hour_user",
+        lambda: e.select(
             F.date_trunc("hour", F.col("ts")).alias("hr"), "user_id"
-        ).distinct()
-
-    return memoized_result(spark, sf_dir, "graph_hour_user", build)
+        )
+        .distinct()
+        .cache(),
+    )
 
 
 def _user_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user distinct-hour counts over the shared incidence —
     cached leg (consumed by the block-cap rank and, in triangles, by
     both lift-join sides)."""
-    from frafka_spark.llm.dedup import memoized_result
-
-    return memoized_result(
+    return session_artifact(
         spark,
         sf_dir,
         "graph_user_hours",
         lambda: _hour_user(spark, sf_dir)
         .groupBy("user_id")
-        .agg(F.count("*").alias("h")),
+        .agg(F.count("*").alias("h"))
+        .cache(),
     )
 
 
@@ -131,7 +132,6 @@ def _copair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     window's, that cluster-width repartition, and the (u1, u2)
     aggregate's."""
     from frafka_spark.io import fan_wide
-    from frafka_spark.llm.dedup import memoized_result
 
     def build() -> DataFrame:
         hu = _hour_user(spark, sf_dir)
@@ -169,7 +169,9 @@ def _copair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("co"))
         )
 
-    return memoized_result(spark, sf_dir, "graph_copair_counts", build)
+    return session_artifact(
+        spark, sf_dir, "graph_copair_counts", lambda: build().cache()
+    )
 
 
 def _coactivity_edges_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,18 +194,17 @@ def _coactivity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     modularity, PageRank; plus both sides of every symmetric use).
     Bounded at EDGE_TOP_K rows by TakeOrdered, so caching it costs a
     code constant at any corpus scale."""
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
-
-    memo = shared_lookup(spark, sf_dir, "coactivity_edges")
-    if memo is not None:
-        return memo
     # localCheckpoint, not cache: three downstream operators each
     # reference this relation several times, and Catalyst expands
     # every reference into a full copy of the build subtree —
     # truncating the lineage here keeps their logical plans
     # edge-list-sized (the dedup-CC pointer-jumping discipline).
-    edges = _coactivity_edges_plan(spark, sf_dir).localCheckpoint()
-    return materialize_once(edges, spark, sf_dir, "coactivity_edges")
+    return session_artifact(
+        spark,
+        sf_dir,
+        "coactivity_edges",
+        lambda: _coactivity_edges_plan(spark, sf_dir).localCheckpoint(),
+    )
 
 
 # Label-propagation CTE chain ending in the `lp` verdict relation —
@@ -288,11 +289,17 @@ def q_events_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing iterated to a data-dependent depth (contrast the CC
     resolver in llm/dedup.py, which documents the log-diameter loop).
     """
-    from frafka_spark.llm.dedup import shared_lookup
+    # User-sized verdict relation, two consumers in this module (the
+    # emit + modularity's partition) — session-memoized like the
+    # near-dup cluster relation so the propagation rounds run once.
+    return session_artifact(
+        spark, sf_dir, "lp_labels", lambda: _label_prop_plan(spark, sf_dir)
+    )
 
-    memo = shared_lookup(spark, sf_dir, "lp_labels")
-    if memo is not None:
-        return memo
+
+def _label_prop_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The two propagation rounds of ``q_events_label_prop``,
+    checkpointed."""
     e = table(spark, sf_dir, "events")
     edges = _coactivity_edges(spark, sf_dir)
     sym = edges.select(
@@ -337,7 +344,7 @@ def q_events_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     known = seeds.unionAll(r1)
     r2 = propagate(known)
     users = e.select("user_id").distinct()
-    out = (
+    return (
         users.join(
             seeds.select("user_id", F.col("label").alias("l0")),
             "user_id",
@@ -367,12 +374,6 @@ def q_events_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # modularity references it through several arms — truncate.
         .localCheckpoint()
     )
-    # User-sized verdict relation, two consumers in this module (the
-    # emit + modularity's partition) — session-memoize like the
-    # near-dup cluster relation so the propagation rounds run once.
-    from frafka_spark.llm.dedup import materialize_once
-
-    return materialize_once(out, spark, sf_dir, "lp_labels")
 
 
 def _markov_sql() -> str:
@@ -761,13 +762,12 @@ def q_events_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     and damping (no dangling redistribution), which is fine for a
     RANKING: order, not mass, is the contract.
     """
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
-
-    memo = shared_lookup(spark, sf_dir, "pagerank_top")
-    if memo is not None:
-        return memo
-    out = _pagerank_plan(spark, sf_dir).localCheckpoint()
-    return materialize_once(out, spark, sf_dir, "pagerank_top")
+    return session_artifact(
+        spark,
+        sf_dir,
+        "pagerank_top",
+        lambda: _pagerank_plan(spark, sf_dir).localCheckpoint(),
+    )
 
 
 def _pagerank_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -914,11 +914,13 @@ def q_events_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only full shuffle per round; monotone shrinkage means cost
     falls every round.
     """
-    from frafka_spark.llm.dedup import materialize_once, shared_lookup
+    return session_artifact(
+        spark, sf_dir, "kcore_audit", lambda: _kcore_plan(spark, sf_dir)
+    )
 
-    memo = shared_lookup(spark, sf_dir, "kcore_audit")
-    if memo is not None:
-        return memo
+
+def _kcore_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The peeling rounds of ``q_events_kcore``, checkpointed."""
     edges = _coactivity_edges(spark, sf_dir)
     sym = edges.select(
         F.col("u1").alias("u"), F.col("u2").alias("v")
@@ -960,4 +962,4 @@ def q_events_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = out.unionAll(audit(r, alive, ecur))
     # The 7-row audit is session state like the PageRank vector:
     # checkpoint the result so repeat consumers skip the peel chain.
-    return materialize_once(out.localCheckpoint(), spark, sf_dir, "kcore_audit")
+    return out.localCheckpoint()

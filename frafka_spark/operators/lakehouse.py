@@ -1222,7 +1222,7 @@ def q_llm_curate_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the only work proportional to the CORPUS is one
     fingerprint projection for the anti-join build side (a real
-    pipeline materializes that index once — ``memoized_result``
+    pipeline materializes that index once — the ``session_artifact``
     pattern); everything else is O(crawl): the CDF delta is the new
     files, the dedup joins key on fingerprints, the curated append
     is one commit. Running this daily on a 100 TB corpus costs a
@@ -1580,7 +1580,6 @@ def _build_meta_sidecar_table(
       AND o_orderkey NOT BETWEEN {MS_DEL_LO} AND {MS_DEL_HI}
     GROUP BY o_orderpriority
     """,
-    defer_round=12,
 )
 def q_scan_meta_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """METADATA SIDECARS graded end-to-end: a {MS_N_FILES}-file
@@ -1665,7 +1664,6 @@ def _build_partition_evolved_table(
     WHERE o_orderstatus = '{PE_STATUS}'
     GROUP BY o_orderpriority
     """,
-    defer_round=12,
 )
 def q_scan_partition_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PARTITION EVOLUTION graded end-to-end: the table switched specs
@@ -1771,7 +1769,6 @@ def _build_vacuumed_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
                                 // {VAC_FRAC_DEN} FROM orders)
     GROUP BY o_orderpriority
     """,
-    defer_round=12,
 )
 def q_scan_vacuumed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SNAPSHOT RETENTION graded end-to-end: after a copy-on-write

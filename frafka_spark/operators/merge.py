@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.io import table
 from frafka_spark.registry import query
 
@@ -210,10 +211,8 @@ def q_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     number of attribute changes, not the feed size. The date render
     is string-typed (the house rule: no timestamp-typed output).
     """
-    from frafka_spark.llm.dedup import memoized_result
-
-    return memoized_result(
-        spark, sf_dir, "scd2_dim", lambda: _scd2_plan(spark, sf_dir)
+    return session_artifact(
+        spark, sf_dir, "scd2_dim", lambda: _scd2_plan(spark, sf_dir).cache()
     )
 
 

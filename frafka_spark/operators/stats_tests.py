@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.functions.determinism import half_up, sql_half_up
 from frafka_spark.io import table
 from frafka_spark.registry import query
@@ -42,8 +43,8 @@ def range_partitioned_cumsum(
     ``memo``: optional ``(spark, sf_dir, tag)`` — same contract as
     ``range_partitioned_row_number``: the lazy localCheckpoint pays
     physical planning per CONSTRUCTION, so deterministic callers
-    register the built frame in the shared-projection memo and pay
-    it once per session.
+    build the frame through ``session_artifact`` and pay it once per
+    session.
 
     The cumulative-aggregate twin of
     ``windows.range_partitioned_row_number`` (same mechanics, same
@@ -61,11 +62,9 @@ def range_partitioned_cumsum(
     from frafka_spark.io import shuffle_width
 
     if memo is not None:
-        from frafka_spark.llm.dedup import shared_lookup
-
-        hit = shared_lookup(*memo)
-        if hit is not None:
-            return hit
+        return session_artifact(
+            *memo, lambda: range_partitioned_cumsum(df, order_by, cols)
+        )
 
     ranged = df.repartitionByRange(shuffle_width(df), *order_by).withColumn(
         "_pid", F.spark_partition_id()
@@ -97,15 +96,9 @@ def range_partitioned_cumsum(
     out = local.join(F.broadcast(offsets), "_pid")
     for c in cols:
         out = out.withColumn(f"cum_{c}", F.col(f"_cum_{c}") + F.col(f"_off_{c}"))
-    out = out.drop(
+    return out.drop(
         "_pid", *[f"_cum_{c}" for c in cols], *[f"_off_{c}" for c in cols]
     )
-    if memo is not None:
-        from frafka_spark.llm.dedup import materialize_once
-
-        spark, sf_dir, tag = memo
-        return materialize_once(out, spark, sf_dir, tag)
-    return out
 
 
 @query(

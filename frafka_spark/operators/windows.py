@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frafka_spark.artifacts import session_artifact
 from frafka_spark.functions.determinism import DEC, half_up
 from frafka_spark.io import table
 from frafka_spark.registry import query
@@ -289,10 +290,9 @@ def range_partitioned_row_number(
 ) -> DataFrame:
     """Global row_number WITHOUT the single-task global sort.
 
-    ``memo``: optional ``(spark, sf_dir, tag)`` — register the ranked
-    relation in the session's shared-projection memo
-    (``shared_lookup`` / ``materialize_once``) so reconstruction
-    returns the first-built frame. Even a LAZY localCheckpoint pays
+    ``memo``: optional ``(spark, sf_dir, tag)`` — build the ranked
+    relation through ``session_artifact`` so reconstruction returns
+    the first-built frame. Even a LAZY localCheckpoint pays
     full analysis + physical planning of its subtree at CONSTRUCTION
     time (measured ~0.3-0.4 s driver CPU per call at sf0.1 — the
     ``_lr_feats`` lesson, guide §3.3 planning-cost note), so callers
@@ -319,11 +319,9 @@ def range_partitioned_row_number(
     from frafka_spark.io import shuffle_width
 
     if memo is not None:
-        from frafka_spark.llm.dedup import shared_lookup
-
-        hit = shared_lookup(*memo)
-        if hit is not None:
-            return hit
+        return session_artifact(
+            *memo, lambda: range_partitioned_row_number(df, order_by, out, total)
+        )
 
     ranged = df.repartitionByRange(shuffle_width(df), *order_by).withColumn(
         "_pid", F.spark_partition_id()
@@ -362,19 +360,13 @@ def range_partitioned_row_number(
         )
         offsets = offsets.withColumn(total, F.sum("_cnt").over(w_all))
     offsets = offsets.drop("_cnt")
-    result = (
+    return (
         local.join(F.broadcast(offsets), "_pid")
         # bigint: a global rank at the scale this function targets
         # overflows int32
         .withColumn(out, (F.col("_offset") + F.col("_local_rn")).cast("bigint"))
         .drop("_pid", "_local_rn", "_offset")
     )
-    if memo is not None:
-        from frafka_spark.llm.dedup import materialize_once
-
-        spark, sf_dir, tag = memo
-        return materialize_once(result, spark, sf_dir, tag)
-    return result
 
 
 @query(

@@ -20,6 +20,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from frafka_spark.artifacts import session_artifact
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -29,41 +31,21 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None
     doc: str
-    defer_round: int | None = None
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
 def query(
-    name: str,
-    oracle: str | None = None,
-    defer_round: int | None = None,
+    name: str, oracle: str | None = None
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a declared query (and its DuckDB oracle).
-
-    ``defer_round=N`` marks a key registered AFTER round N's planned
-    grading window was already filled (new keys + the stalest cohort
-    = exactly ``GRADING_WINDOW``). While round N's CORRECTNESS
-    artifact has not yet been committed, the key sorts BEHIND every
-    already-graded key so it cannot displace the stalest cohort from
-    the window it was promised (VERDICT r11 ask #5: the r05 cohort
-    refreshes in r12). The moment ``CORRECTNESS_rN.json`` lands, the
-    marker expires on its own — the key is then an ordinary
-    never-graded registration and LEADS round N+1's window. Same
-    intent as the round-8 "register last" placement, made explicit
-    now that the cohort being protected is graded (placement alone
-    only breaks ties among never-graded keys)."""
+    """Decorator: register a declared query (and its DuckDB oracle)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         QUERIES[name] = QuerySpec(
-            name=name,
-            fn=fn,
-            oracle=oracle,
-            doc=fn.__doc__ or "",
-            defer_round=defer_round,
+            name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or ""
         )
         return fn
 
@@ -115,22 +97,6 @@ def _verified_rounds() -> dict[str, int]:
     return rounds
 
 
-def _latest_recorded_round() -> int:
-    """Highest round number with a committed CORRECTNESS artifact
-    (0 when none exist) — the clock that expires ``defer_round``
-    markers."""
-    import re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    rounds = [
-        int(m.group(1))
-        for p in repo.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"r(\d+)", p.stem))
-    ]
-    return max(rounds, default=0)
-
-
 def _grading_order() -> list[str]:
     """Least-recently-verified rotation over the driver's window.
 
@@ -145,100 +111,65 @@ def _grading_order() -> list[str]:
     exempt from re-verification, and a regression in a previously
     green query resurfaces within that many rounds.
     """
-    names = list(QUERIES)
-    index = {n: i for i, n in enumerate(names)}
     verified = _verified_rounds()
-    latest = _latest_recorded_round()
-
-    def sort_key(n: str) -> tuple[int, int]:
-        spec = QUERIES[n]
-        if (
-            spec.defer_round is not None
-            and n not in verified
-            and latest < spec.defer_round
-        ):
-            # Registered after round defer_round's window was filled:
-            # queue behind every graded key until that round's
-            # artifact lands, then lead the next window as an
-            # ordinary never-graded key (see ``query()``).
-            return (1_000_000_000, index[n])
-        return (verified.get(n, 0), index[n])
-
-    return sorted(names, key=sort_key)
+    # sorted() is stable: ties keep registration order
+    return sorted(QUERIES, key=lambda n: verified.get(n, 0))
 
 
-#: (applicationId, sf_dir, name) → constructed DataFrame. Construction
-#: memo for the ``get_queries()`` surface: classic PySpark analyzes
-#: eagerly per Dataset construction, so re-CONSTRUCTING a declared
-#: query costs 0.05–0.47 s of driver CPU (measured across the 366
-#: keys: 31 s per full pass at sf0.1) for a plan object that is
-#: deterministic per (session, sf_dir). This memoizes the PLAN, not
-#: results: executing the returned frame runs the same physical plan
-#: against the same inputs every time (the shared-projection
-#: ``materialize_once`` rationale, applied at the registry seam).
-#: Keyed by applicationId so nothing survives the session, and only
-#: the ``get_queries()`` driver/bench surface is wrapped — direct
-#: ``QUERIES[name].fn`` access (pytest) constructs fresh.
-_CONSTRUCTED: dict[tuple[str, str, str], DataFrame] = {}
-
-#: Min driver max-heap for the construction memo. Pinning a frame
-#: pins its whole JVM QueryExecution — analyzed/optimized/physical
-#: trees and, once an action has run, AQE's materialized stage state
-#: (shuffle statistics, broadcast relations). Across the full suite
-#: that is GBs of non-collectable heap: in the tuned 48g bench
-#: session it is exactly the point (31 s of construction per pass
-#: saved), but a plain default-heap (1g) session — the grading
-#: driver's shape — OOMs around query ~270 (measured: heap-space
-#: abort in the r12 full-suite sim). Below the floor we construct
-#: fresh, like r11 did: py4j then releases each query's JVM state as
-#: soon as the caller drops the frame. Never a correctness seam —
-#: both paths run the same plan against the same inputs. The floor is
-#: deliberately high: memo-on is a bench-session optimization (48g
-#: driver), and construct-fresh is the proven-safe default shape.
+#: Min driver max-heap for the construction memo. ``get_queries()``
+#: wraps each declared query so that, per (session, sf_dir), it is
+#: constructed once and stored in the session store under tag
+#: ``query:<name>``: classic PySpark analyzes eagerly per Dataset
+#: construction, so re-CONSTRUCTING a declared query costs 0.05–0.47 s
+#: of driver CPU (31 s per full pass at sf0.1) for a plan object that
+#: is deterministic per (session, sf_dir). This memoizes the PLAN,
+#: not results. Only the ``get_queries()`` surface is wrapped —
+#: direct ``QUERIES[name].fn`` access (pytest) constructs fresh.
+#:
+#: Pinning a frame pins its whole JVM QueryExecution — analyzed,
+#: optimized and physical trees and, once an action has run, AQE's
+#: materialized stage state (shuffle statistics, broadcast
+#: relations). Across the full suite that is GBs of non-collectable
+#: heap: in the tuned 48g bench session it is the point (31 s of
+#: construction per pass saved), but a plain default-heap (1g)
+#: session — the grading driver's shape — OOMs around query ~270.
+#: Below the floor every construction is fresh, so py4j releases each
+#: query's JVM state as soon as the caller drops the frame. Never a
+#: correctness seam: both paths run the same plan against the same
+#: inputs. ``SPARK_GRAFT_CONSTRUCT_MEMO`` (0/false/off or anything
+#: else) overrides the heap rule.
 _MEMO_HEAP_FLOOR_BYTES = 16 << 30
-_MEMO_ENABLED: dict[str, bool] = {}
 
 
 def _memo_enabled(spark: SparkSession) -> bool:
     import os
 
-    app_id = spark.sparkContext.applicationId
-    hit = _MEMO_ENABLED.get(app_id)
-    if hit is None:
-        env = os.environ.get("SPARK_GRAFT_CONSTRUCT_MEMO", "").strip()
-        if env:
-            hit = env not in ("0", "false", "off")
-        else:
-            max_heap = int(
-                spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
-            )
-            hit = max_heap >= _MEMO_HEAP_FLOOR_BYTES
-        _MEMO_ENABLED[app_id] = hit
-    return hit
+    env = os.environ.get("SPARK_GRAFT_CONSTRUCT_MEMO", "").strip()
+    if env:
+        return env not in ("0", "false", "off")
+    # the driver's max heap, probed once per session (fixture-free,
+    # hence the empty sf_dir)
+    max_heap = session_artifact(
+        spark,
+        "",
+        "jvm_max_heap",
+        lambda: int(
+            spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+        ),
+    )
+    return max_heap >= _MEMO_HEAP_FLOOR_BYTES
 
 
 def _memo_construction(name: str, fn: QueryFn) -> QueryFn:
     import functools
-    import threading
-
-    lock = getattr(_memo_construction, "_lock", None)
-    if lock is None:
-        lock = _memo_construction._lock = threading.Lock()
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not _memo_enabled(spark):
             return fn(spark, sf_dir)
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        with lock:
-            hit = _CONSTRUCTED.get(key)
-        if hit is not None:
-            return hit
-        df = fn(spark, sf_dir)
-        with lock:
-            # lost race: keep the first registration so every caller
-            # shares one plan object (identity cache hits downstream)
-            return _CONSTRUCTED.setdefault(key, df)
+        return session_artifact(
+            spark, sf_dir, f"query:{name}", lambda: fn(spark, sf_dir)
+        )
 
     return wrapped
 

@@ -1246,16 +1246,16 @@ def _read_snapshot_files(
         # session; pairs are delta-sized by construction.
         import hashlib
 
-        from frafka_spark.llm.dedup import memoized_result
+        from frafka_spark.artifacts import session_artifact
 
         dv_key = hashlib.md5(
             repr(sorted((fp, e) for fp, e in dv_entries.items())).encode()
         ).hexdigest()
-        pairs = memoized_result(
+        pairs = session_artifact(
             spark,
             "__dv_pairs__",
             dv_key,
-            lambda: _dv_pairs_df(spark, dv_entries),
+            lambda: _dv_pairs_df(spark, dv_entries).cache(),
         )
         df = (
             df.select(

@@ -25,7 +25,6 @@ import pytest
 from frafka_spark.registry import (
     GRADING_WINDOW,
     QUERIES,
-    _latest_recorded_round,
     _verified_rounds,
     get_oracle_sql,
     get_queries,
@@ -35,15 +34,6 @@ from tests.conftest import SF_DIR
 
 REPO = Path(__file__).resolve().parent.parent
 
-
-def _defer_active(name: str, verified: dict[str, int]) -> bool:
-    """Mirror of the registry's defer predicate (see registry.query)."""
-    spec = QUERIES[name]
-    return (
-        spec.defer_round is not None
-        and name not in verified
-        and _latest_recorded_round() < spec.defer_round
-    )
 
 # Types the driver's pandas canonicalizer hashes reliably.
 _SAFE = (
@@ -81,36 +71,33 @@ def test_construction_memo_heap_gate(spark, monkeypatch):
     py4j can release each query's JVM state; above it (the 48g bench
     session) one plan object is shared per (session, sf, name)."""
     import frafka_spark
-    from frafka_spark import registry
+    from frafka_spark import artifacts, registry
 
     frafka_spark.load_all()
     name = "q_scan_project"
     fn = registry._memo_construction(name, registry.QUERIES[name].fn)
-    app = spark.sparkContext.applicationId
+    key = (spark.sparkContext.applicationId, SF_DIR, f"query:{name}")
 
     monkeypatch.setenv("SPARK_GRAFT_CONSTRUCT_MEMO", "0")
-    registry._MEMO_ENABLED.clear()
-    registry._CONSTRUCTED.pop((app, SF_DIR, name), None)
+    artifacts._SESSION.pop(key, None)
     a = fn(spark, SF_DIR)
     b = fn(spark, SF_DIR)
     assert a is not b
-    assert (app, SF_DIR, name) not in registry._CONSTRUCTED
+    assert key not in artifacts._SESSION
 
     monkeypatch.setenv("SPARK_GRAFT_CONSTRUCT_MEMO", "1")
-    registry._MEMO_ENABLED.clear()
     c = fn(spark, SF_DIR)
     assert fn(spark, SF_DIR) is c
+    artifacts._SESSION.pop(key, None)
 
     # Auto mode decides from the driver's max heap against the floor.
     monkeypatch.delenv("SPARK_GRAFT_CONSTRUCT_MEMO")
-    registry._MEMO_ENABLED.clear()
     heap = int(
         spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
     )
     assert registry._memo_enabled(spark) is (
         heap >= registry._MEMO_HEAP_FLOOR_BYTES
     )
-    registry._MEMO_ENABLED.clear()
 
 
 def test_grading_order_is_lru_rotation():
@@ -121,18 +108,10 @@ def test_grading_order_is_lru_rotation():
     """
     names = list(get_queries())
     verified = _verified_rounds()
-    deferred = {n for n in names if _defer_active(n, verified)}
-    live = [n for n in names if n not in deferred]
-    rounds = [verified.get(n, 0) for n in live]
+    rounds = [verified.get(n, 0) for n in names]
     # ascending by last-verified round ⇒ never-verified (round 0)
     # queries form a prefix and least-recently-verified fill the window
     assert rounds == sorted(rounds), "grading order must ascend by last-verified round"
-    # actively-deferred keys (registered after this round's window was
-    # filled) must sit at the very END — behind every graded key — so
-    # they cannot displace the stalest cohort from the current window
-    assert set(names[len(live):]) == deferred, (
-        "actively-deferred keys must form the suffix of queries() order"
-    )
 
 
 def test_oracle_order_matches_query_order():
@@ -161,23 +140,13 @@ def test_correctness_union_covers_registry():
     if not seen:  # round 1: no driver artifact yet
         pytest.skip("no CORRECTNESS_r*.json present")
     names = list(get_queries())
-    verified = _verified_rounds()
-    deferred = {n for n in names if _defer_active(n, verified)}
-    never = set(QUERIES) - seen - deferred
+    never = set(QUERIES) - seen
     # minimal deferral: the never-graded form a strict prefix of the
     # grading order — nothing already-graded may jump the queue.
-    # Actively-deferred keys are the one documented exception: they
-    # queue at the END (behind the graded cohort they must not
-    # displace) and become ordinary never-graded leads the moment
-    # their round's CORRECTNESS artifact is committed.
     prefix = set(names[: len(never)])
     assert prefix == never, (
         f"never-graded queries are not a prefix of queries() order: "
         f"{sorted(never - prefix)} displaced by {sorted(prefix - never)}"
-    )
-    assert len(deferred) <= GRADING_WINDOW, (
-        f"{len(deferred)} actively-deferred keys exceed one grading "
-        f"window — they would not all get a first driver row next round"
     )
     assert len(never) <= 2 * GRADING_WINDOW, (
         f"{len(never)} never-graded queries exceed two grading windows "
@@ -196,6 +165,36 @@ def test_one_layout_root_and_one_lock_discipline():
         and ("fcntl" in (src := p.read_text()) or "spark-warehouse" in src)
     ]
     assert offenders == []
+
+
+def test_one_session_memo():
+    """Every per-session memo goes through ``artifacts.session_artifact``:
+    only the store (and ``io.py``, which keys per SparkSession object on
+    purpose) reads ``applicationId``, and no two call sites pass the
+    same literal tag, so one builder never receives another's value."""
+    import ast
+    from collections import Counter
+
+    pkg = REPO / "frafka_spark"
+    readers = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if "applicationId" in p.read_text()
+    ]
+    assert readers == ["artifacts.py", "io.py"]
+
+    tags = Counter()
+    for p in sorted(pkg.rglob("*.py")):
+        for n in ast.walk(ast.parse(p.read_text())):
+            if (
+                isinstance(n, ast.Call)
+                and getattr(n.func, "id", None) == "session_artifact"
+                and len(n.args) >= 3
+                and isinstance(n.args[2], ast.Constant)
+            ):
+                tags[n.args[2].value] += 1
+    assert tags, "no session_artifact call sites found"
+    assert [t for t, k in tags.items() if k > 1] == []
 
 
 def test_one_snapshot_composer():

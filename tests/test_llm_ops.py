@@ -277,6 +277,27 @@ def test_shared_projections_partitioning(spark):
         assert df.rdd.getNumPartitions() == n
 
 
+def test_warm_shared_projections_builds_each_tag_once(spark):
+    """The warm pass builds the five shared input projections once per
+    session: the first call reports exactly those tags, a repeat
+    reports nothing, and every builder afterwards returns the warmed,
+    cached frame."""
+    from frafka_spark import artifacts
+    from frafka_spark.llm.dedup import _shingles, warm_shared_projections
+
+    tags = {"bigrams", "ivf_cells", "shingles", "words", "simhash_sigs"}
+    app = spark.sparkContext.applicationId
+    for tag in tags:  # start from an unwarmed session
+        artifacts._SESSION.pop((app, SF_DIR, f"warm:{tag}"), None)
+    first = warm_shared_projections(spark, SF_DIR)
+    assert set(first) == tags
+    assert all(secs >= 0 for secs in first.values())
+    assert warm_shared_projections(spark, SF_DIR) == {}
+    sh = _shingles(spark, SF_DIR)
+    assert sh is artifacts._SESSION[(app, SF_DIR, "shingles")]
+    assert sh.is_cached
+
+
 def test_capped_lsh_keeps_planted_recall(spark, planted_dup_pairs):
     """Stop-shingle capping must not lose the planted near-dup pairs:
     their similarity lives in distinctive (low-df) shingles, which is
@@ -1230,14 +1251,17 @@ def test_rouge_counts_leg_is_session_memoized(spark):
     per session: reconstruction returns the SAME shared checkpoint
     relation instead of re-planning the semi-join/aggregate subtree,
     and the audit's rows are identical either way."""
-    from frafka_spark.llm.dedup import shared_lookup
+    from frafka_spark.artifacts import session_artifact
     from frafka_spark.registry import QUERIES as Q
 
+    def rebuilt():
+        raise AssertionError("the rouge_counts leg was rebuilt")
+
     first = Q["q_llm_rouge"].fn(spark, SF_DIR)
-    leg = shared_lookup(spark, SF_DIR, "rouge_counts")
+    leg = session_artifact(spark, SF_DIR, "rouge_counts", rebuilt)
     assert leg is not None
     second = Q["q_llm_rouge"].fn(spark, SF_DIR)
-    assert shared_lookup(spark, SF_DIR, "rouge_counts") is leg
+    assert session_artifact(spark, SF_DIR, "rouge_counts", rebuilt) is leg
     a = sorted(tuple(r) for r in first.collect())
     b = sorted(tuple(r) for r in second.collect())
     assert a and a == b

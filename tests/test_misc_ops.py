@@ -256,16 +256,22 @@ def test_range_partitioned_helpers_memoize_per_session(spark):
     reconstruction returns the SAME registered frame; without a memo
     every call still builds a fresh frame; results are identical
     either way."""
+    from frafka_spark.artifacts import session_artifact
     from frafka_spark.io import table
-    from frafka_spark.llm.dedup import shared_lookup
     from frafka_spark.operators.stats_tests import range_partitioned_cumsum
     from frafka_spark.operators.windows import range_partitioned_row_number
+
+    def stored(tag):
+        def rebuilt():
+            raise AssertionError(f"{tag} was rebuilt")
+
+        return session_artifact(spark, SF_DIR, tag, rebuilt)
 
     o = table(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice")
     order = ["o_totalprice", "o_orderkey"]
     tag = "test_rpn_memo"
     first = range_partitioned_row_number(o, order, out="rn", memo=(spark, SF_DIR, tag))
-    assert shared_lookup(spark, SF_DIR, tag) is first
+    assert stored(tag) is first
     second = range_partitioned_row_number(o, order, out="rn", memo=(spark, SF_DIR, tag))
     assert second is first
     plain = range_partitioned_row_number(o, order, out="rn")
@@ -282,7 +288,7 @@ def test_range_partitioned_helpers_memoize_per_session(spark):
     c2 = range_partitioned_cumsum(
         base, ["o_totalprice"], ["t"], memo=(spark, SF_DIR, ctag)
     )
-    assert c2 is c1 and shared_lookup(spark, SF_DIR, ctag) is c1
+    assert c2 is c1 and stored(ctag) is c1
 
 
 def test_shuffle_width_clamps_plain_session_default(spark):
