@@ -1419,11 +1419,17 @@ def _build_txn_streamed_tables(
 
         return {"corpus": corpus_applier, "index": index_applier}
 
+    def first_write(df: DataFrame, bid: int, path: Path) -> int:
+        # a raise, not an assert: the write must also run under -O
+        got = write_stream_batch(df, bid, str(path), ["doc_id"])
+        if got is None:
+            raise RuntimeError(f"{path.name}: batch {bid} judged delivered")
+        return got
+
     part0 = d.filter(F.col("doc_id") % N_INDEX_BATCHES == 0)
-    assert write_stream_batch(part0, 0, str(corpus), ["doc_id"]) == 0
-    assert write_stream_batch(
-        digest_rows(part0), 0, str(index), ["doc_id"]
-    ) == 0
+    for path, rows in ((corpus, part0), (index, digest_rows(part0))):
+        if first_write(rows, 0, path) != 0:
+            raise RuntimeError(f"{path.name}: batch 0 is not version 0")
     catalog_commit(
         str(dest),
         {
@@ -1437,9 +1443,7 @@ def _build_txn_streamed_tables(
         part = d.filter(F.col("doc_id") % N_INDEX_BATCHES == bid)
         if bid == 2:
             # crash: corpus committed, index + catalog publish lost
-            assert write_stream_batch(
-                part, bid, str(corpus), ["doc_id"]
-            ) is not None
+            first_write(part, bid, corpus)
             cv, snap = catalog_current(str(dest))
             # the torn state is INVISIBLE through the catalog
             assert snap["txn_id"] == "b1"

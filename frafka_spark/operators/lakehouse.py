@@ -1070,16 +1070,18 @@ def _build_stream_sink_table(
     e = table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
+    # raises, not asserts: the writes must also run under -O
     for bid in range(N_STREAM_BATCHES):
         part = e.filter(F.col("event_id") % N_STREAM_BATCHES == bid)
-        assert (
-            write_stream_batch(part, bid, str(dest), ["event_id"]) == bid
-        )
+        got = write_stream_batch(part, bid, str(dest), ["event_id"])
+        if got != bid:
+            raise RuntimeError(f"stream batch {bid} committed as {got}")
     # redelivered batch: same id, must be a no-op
     redelivered = write_stream_batch(
         e.filter(F.col("event_id") % N_STREAM_BATCHES == 1), 1, str(dest)
     )
-    assert redelivered is None
+    if redelivered is not None:
+        raise RuntimeError("redelivered stream batch 1 was committed again")
 
 
 @query(

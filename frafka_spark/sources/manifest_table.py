@@ -34,6 +34,16 @@ PER-COMMIT keys (``committed_at``, ``batch_id``, ``evolution``,
 ``restored_from``, ``cloned_from``, caller markers such as ``txn_id``)
 never carry.
 
+How DML rewrites: the copy-on-write verbs (``merge_table_pruned``,
+``merge_table_cdc``, ``delete_rows``, ``update_rows``, ``delete_keys``)
+each prune the files their predicate can touch and hand them, with a
+rows → rows transform, to ``_rewrite`` (read → transform → write →
+compose). The deletion-vector verbs (``delete_rows_dv``,
+``update_rows_dv``) find rows by their (file, row position) identity
+from ``_identity_scan`` — also the scan that applies vectors on read
+and the CDF's identity fetch — and commit through ``_vector_out``.
+``_updated`` is the one UPDATE assignment check for both families.
+
 Scale notes: the manifest lists file paths, not rows — O(files) per
 commit, like Delta. Reads hand Spark the file list, so partition
 pruning/pushdown work unchanged. On object stores without atomic
@@ -404,9 +414,9 @@ def _span_keep_files(
 
 
 def _keep_verdict(pv: dict, span, col: str, lo, hi) -> str:
-    """One file's prune decision ('part' | 'stats' | 'keep') — shared
-    verbatim by the driver-side loop and the distributed metadata
-    scan, so the two paths cannot diverge."""
+    """One file's prune decision ('part' | 'stats' | 'keep') — called
+    by the driver-side loop and by the distributed metadata scan's
+    workers, so the two paths cannot diverge."""
     if col in pv:
         v = pv[col]
         # lo is None marks an all-NULL change-set key (merge paths):
@@ -441,34 +451,17 @@ def _span_keep_files_distributed(
     sdf = spark.read.parquet(*meta["sidecars"])
 
     def verdicts(batches):
-        # SELF-CONTAINED worker closure (house rule: Python workers
-        # cannot import frafka_spark — the grading driver's cwd is not
-        # the repo, so module-level references break; cloudpickle
-        # ships nested defs by value). This is _keep_verdict's logic
-        # verbatim; test_meta_sidecar_distributed_matches_driver pins
-        # the two paths to identical decisions.
-        import json as _json
-
-        def kv(pv, span):
-            if col in pv:
-                v = pv[col]
-                if v is None or lo is None or v < lo or v > hi:
-                    return "part"
-            if span is not None and (
-                lo is None or span[1] < lo or span[0] > hi
-            ):
-                return "stats"
-            return "keep"
-
+        # _keep_verdict is pickled by reference (the worker imports this
+        # module), so both prune paths run the same decision function
         for pdf in batches:
-            mask = ~pdf["file"].isin(removed)
-            pdf = pdf[mask]
+            pdf = pdf[~pdf["file"].isin(removed)]
             out_v = []
             for m in pdf["meta"]:
-                fm = _json.loads(m)
-                out_v.append(
-                    kv(fm.get("parts") or {}, (fm.get("stats") or {}).get(col))
-                )
+                fm = json.loads(m)
+                out_v.append(_keep_verdict(
+                    fm.get("parts") or {},
+                    (fm.get("stats") or {}).get(col), col, lo, hi,
+                ))
             yield pd.DataFrame({"file": pdf["file"], "verdict": out_v})
 
     from pyspark.sql import functions as F
@@ -893,7 +886,10 @@ def _dv_of(manifest: dict) -> dict:
 # the driver only ever handles O(files) packed-bytes rows; the READ
 # path unpacks sidecars back into (file, position) pairs on the
 # executors too, so no large vector's positions ever materialize in
-# the driver's Python heap.
+# the driver's Python heap. The codec is three functions —
+# ``_dv_pack_positions``, ``_dv_unpack_positions`` and ``_dv_bits_of``
+# (an entry's bitmap, inline or sidecar) — used on the driver and,
+# pickled by reference, inside the executor closures.
 # ---------------------------------------------------------------------------
 
 #: positions kept inline in the manifest JSON; above this the vector
@@ -929,19 +925,23 @@ def _dv_unpack_positions(raw: bytes):
 
 
 def _dv_pack_positions(pos) -> bytes:
-    """Sorted/unique int64 positions → packed bitmap bytes."""
+    """Unique int64 positions (any order) → packed bitmap bytes."""
     import numpy as np
 
     pos = np.asarray(pos, dtype=np.int64)
+    if not len(pos):
+        return b""
     bits = np.zeros((int(pos.max()) >> 3) + 1, dtype=np.uint8)
     np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
     return bits.tobytes()
 
 
-def _dv_bits_of(entry: dict):
-    """Decode a manifest entry to its packed bitmap (uint8 array)."""
+def _dv_bits_of(entry: dict | None):
+    """Decode a manifest entry to its packed bitmap (uint8 array; empty
+    for no entry)."""
     import numpy as np
 
+    entry = entry or {}
     if "sidecar" in entry:
         with open(entry["sidecar"], "rb") as fh:
             return np.frombuffer(fh.read(), dtype=np.uint8)
@@ -991,8 +991,8 @@ def _dv_entry_from_bits(path: str, bits, card: int | None = None) -> dict:
 
 
 def _pack_positions_per_file(sel: "DataFrame"):
-    """EXECUTOR-side DV build: fold a (``__fp``, ``__ri``) position
-    stream into ONE packed bitmap per file (``applyInPandas`` per
+    """EXECUTOR-side DV build: fold a (``__dv_fp``, ``__dv_ri``)
+    position stream into ONE packed bitmap per file (``applyInPandas`` per
     file group — the llm/dedup.py bloom OR-fold applied per file, as
     VERDICT r11 prescribed) and return the collected O(files) rows of
     (file, cardinality, packed bytes). The driver never receives a
@@ -1002,20 +1002,19 @@ def _pack_positions_per_file(sel: "DataFrame"):
         import numpy as np
         import pandas as pd
 
-        ri = np.unique(pdf["__ri"].to_numpy(dtype=np.int64))
-        bits = np.zeros((int(ri.max()) >> 3) + 1, dtype=np.uint8)
-        np.bitwise_or.at(bits, ri >> 3, (1 << (ri & 7)).astype(np.uint8))
+        ri = np.unique(pdf["__dv_ri"].to_numpy(dtype=np.int64))
         return pd.DataFrame(
             {
-                "__fp": [pdf["__fp"].iloc[0]],
+                "__dv_fp": [pdf["__dv_fp"].iloc[0]],
                 "card": [int(len(ri))],
-                "bits": [bits.tobytes()],
+                "bits": [_dv_pack_positions(ri)],
             }
         )
 
     return (
-        sel.groupBy("__fp")
-        .applyInPandas(fold, "__fp string, card long, bits binary")
+        sel.select("__dv_fp", "__dv_ri")
+        .groupBy("__dv_fp")
+        .applyInPandas(fold, "__dv_fp string, card long, bits binary")
         .collect()
     )
 
@@ -1042,29 +1041,18 @@ def _dv_pairs_df(spark: SparkSession, entries: dict) -> DataFrame:
     if side:
 
         def unpack(batches):
-            import numpy as np
             import pandas as pd
 
             for pdf in batches:
                 for fp, sc in zip(pdf["__dv_fp"], pdf["__sc"]):
-                    with open(sc, "rb") as fh:
-                        raw = fh.read()
-                    pos = np.nonzero(
-                        np.unpackbits(
-                            np.frombuffer(raw, dtype=np.uint8),
-                            bitorder="little",
-                        )
-                    )[0].astype(np.int64)
+                    pos = _dv_unpack_positions(_dv_bits_of({"sidecar": sc}))
                     yield pd.DataFrame({"__dv_fp": fp, "__dv_ri": pos})
 
         src = spark.createDataFrame(
             side, "__dv_fp string, __sc string"
         ).repartition(min(len(side), 32))
         parts.append(src.mapInPandas(unpack, "__dv_fp string, __dv_ri bigint"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+    return functools.reduce(DataFrame.unionAll, parts)
 
 
 def _dv_new_pairs(spark: SparkSession, cur_dv: dict, prev_dv: dict):
@@ -1107,44 +1095,19 @@ def _dv_new_pairs(spark: SparkSession, cur_dv: dict, prev_dv: dict):
     if dist_rows:
 
         def diff(batches):
-            import json as _json
-
             import numpy as np
             import pandas as pd
-
-            def bits(entry):
-                if entry is None:
-                    return np.zeros(0, dtype=np.uint8)
-                if "sidecar" in entry:
-                    with open(entry["sidecar"], "rb") as fh:
-                        return np.frombuffer(fh.read(), dtype=np.uint8)
-                pos = np.asarray(entry.get("pos", []), dtype=np.int64)
-                if len(pos) == 0:
-                    return np.zeros(0, dtype=np.uint8)
-                out = np.zeros((int(pos.max()) >> 3) + 1, dtype=np.uint8)
-                np.bitwise_or.at(
-                    out, pos >> 3, (1 << (pos & 7)).astype(np.uint8)
-                )
-                return out
 
             for pdf in batches:
                 for fp, cj, pj in zip(
                     pdf["__dv_fp"], pdf["__cur"], pdf["__prev"]
                 ):
-                    c = bits(_json.loads(cj))
-                    p = (
-                        bits(_json.loads(pj))
-                        if isinstance(pj, str)
-                        else np.zeros(0, dtype=np.uint8)
-                    )
-                    if len(p) < len(c):
-                        p = np.concatenate(
-                            [p, np.zeros(len(c) - len(p), dtype=np.uint8)]
-                        )
-                    fresh = c & ~p[: len(c)]
-                    pos = np.nonzero(
-                        np.unpackbits(fresh, bitorder="little")
-                    )[0].astype(np.int64)
+                    cur = _dv_bits_of(json.loads(cj))
+                    old = np.zeros(len(cur), dtype=np.uint8)
+                    if isinstance(pj, str):
+                        prev = _dv_bits_of(json.loads(pj))[: len(cur)]
+                        old[: len(prev)] = prev
+                    pos = _dv_unpack_positions((cur & ~old).tobytes())
                     yield pd.DataFrame({"__dv_fp": fp, "__dv_ri": pos})
 
         src = spark.createDataFrame(
@@ -1153,10 +1116,7 @@ def _dv_new_pairs(spark: SparkSession, cur_dv: dict, prev_dv: dict):
         parts.append(
             src.mapInPandas(diff, "__dv_fp string, __dv_ri bigint")
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return sorted(changed), out
+    return sorted(changed), functools.reduce(DataFrame.unionAll, parts)
 
 
 def _dv_dense_files(files_entries: dict) -> list[str]:
@@ -1184,7 +1144,7 @@ def _warn_dense_dv(path: str, files_entries: dict) -> None:
             f"{len(dense)} file(s) of {path} now exceed "
             f"{_DV_DENSE_WARN:.0%} deleted rows; run auto_compact() to "
             "materialize their deletion vectors",
-            stacklevel=3,
+            stacklevel=4,
         )
 
 
@@ -1201,6 +1161,73 @@ def _physical_schema(logical, mapping: dict[str, str]):
     )
 
 
+def _dv_entries(dv: dict | None, files: list[str]) -> dict:
+    """The entries of ``dv`` that name deleted positions of ``files``."""
+    keep = set(files)
+    return {fp: e for fp, e in (dv or {}).items() if fp in keep and _dv_has(e)}
+
+
+def _identity_scan(
+    spark: SparkSession,
+    files: list[str],
+    logical,
+    mapping: dict[str, str],
+    dv: dict | None = None,
+) -> DataFrame:
+    """Read ``files`` (non-empty) under the snapshot's PHYSICAL schema
+    as LOGICAL columns plus each row's (file, position) identity,
+    ``__dv_fp`` / ``__dv_ri``, from the scan's ``_metadata``. With
+    ``dv``, the rows its vectors name are removed by a broadcast
+    anti-join on that identity.
+
+    ``_metadata.file_path`` is a Hadoop URI (file:/… or file:///…);
+    it is normalized to the manifest's plain absolute path. DVs are
+    delta-sized by construction (a DV bigger than its file is what
+    compaction materializes away), so the deleted-identity relation
+    broadcasts; a real engine applies the bitmap inside the scan —
+    same O(deleted) state, one fewer join, a storage-layer detail not
+    a protocol one."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.schema(_physical_schema(logical, mapping)).parquet(*files)
+    df = _to_logical(
+        df.select(
+            "*",
+            F.regexp_replace(
+                F.col("_metadata.file_path"), "^file:/+", "/"
+            ).alias("__dv_fp"),
+            F.col("_metadata.row_index").alias("__dv_ri"),
+        ),
+        mapping,
+    )
+    entries = _dv_entries(dv, files)
+    if not entries:
+        return df
+    # Sidecar bitmaps unpack on the EXECUTORS (_dv_pairs_df).
+    # Session-cached per DV CONTENT (r13, guide §4.5 heavyweight init
+    # once): the sidecar unpack is a Python stage that otherwise
+    # re-runs on EVERY execution of every consumer of the snapshot
+    # (measured 1.63 s warm for the spilled-DV scan, most of it the
+    # per-run unpack). The key hashes the exact (file →
+    # positions/sidecar) map, so any DML producing a new DV state
+    # builds a fresh entry and stale states die with the session;
+    # pairs are delta-sized by construction.
+    import hashlib
+
+    from frafka_spark.artifacts import session_artifact
+
+    dv_key = hashlib.md5(
+        repr(sorted((fp, e) for fp, e in entries.items())).encode()
+    ).hexdigest()
+    pairs = session_artifact(
+        spark,
+        "__dv_pairs__",
+        dv_key,
+        lambda: _dv_pairs_df(spark, entries).cache(),
+    )
+    return df.join(F.broadcast(pairs), ["__dv_fp", "__dv_ri"], "left_anti")
+
+
 def _read_snapshot_files(
     spark: SparkSession,
     files: list[str],
@@ -1213,66 +1240,19 @@ def _read_snapshot_files(
 
     ``dv`` is the snapshot's deletion-vector map (file path → sorted
     within-file row positions, see ``delete_rows_dv``): rows named by
-    a DV are filtered out with a broadcast anti-join on the scan's
-    ``_metadata`` (file, row_index) identity — the merge-on-read half
-    of the format. Files with no DV entry pay nothing (the common
+    a DV are filtered out by ``_identity_scan`` — the merge-on-read
+    half of the format. Files with no DV entry pay nothing (the common
     path is a plain multi-file scan, metadata columns never
     materialize)."""
     if not files:
         return spark.createDataFrame([], schema=logical)
-    df = spark.read.schema(_physical_schema(logical, mapping)).parquet(*files)
-    from pyspark.sql import functions as F
-
-    dv_entries = {
-        fp: e for fp, e in (dv or {}).items()
-        if fp in set(files) and _dv_has(e)
-    }
-    if dv_entries:
-        # _metadata.file_path is a Hadoop URI (file:/… or file:///…);
-        # normalize to the manifest's plain absolute path before the
-        # anti-join. DVs are delta-sized by construction (a DV bigger
-        # than its file is what compaction materializes away), so the
-        # deleted-identity relation broadcasts; a real engine applies
-        # the bitmap inside the scan — same O(deleted) state, one
-        # fewer join, a storage-layer detail not a protocol one.
-        # Sidecar bitmaps unpack on the EXECUTORS (_dv_pairs_df).
-        # Session-cached per DV CONTENT (r13, guide §4.5 heavyweight
-        # init once): the sidecar unpack is a Python stage that
-        # otherwise re-runs on EVERY execution of every consumer of
-        # the snapshot (measured 1.63 s warm for the spilled-DV scan,
-        # most of it the per-run unpack). The key hashes the exact
-        # (file → positions/sidecar) map, so any DML producing a new
-        # DV state builds a fresh entry and stale states die with the
-        # session; pairs are delta-sized by construction.
-        import hashlib
-
-        from frafka_spark.artifacts import session_artifact
-
-        dv_key = hashlib.md5(
-            repr(sorted((fp, e) for fp, e in dv_entries.items())).encode()
-        ).hexdigest()
-        pairs = session_artifact(
-            spark,
-            "__dv_pairs__",
-            dv_key,
-            lambda: _dv_pairs_df(spark, dv_entries).cache(),
+    if _dv_entries(dv, files):
+        return _identity_scan(spark, files, logical, mapping, dv).drop(
+            "__dv_fp", "__dv_ri"
         )
-        df = (
-            df.select(
-                "*",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ).alias("__dv_fp"),
-                F.col("_metadata.row_index").alias("__dv_ri"),
-            )
-            .join(F.broadcast(pairs), ["__dv_fp", "__dv_ri"], "left_anti")
-            .drop("__dv_fp", "__dv_ri")
-        )
-    if not mapping:
-        return df
-    inverse = {phys: logi for logi, phys in mapping.items()}
-    return df.select(
-        *[F.col(c).alias(inverse.get(c, c)) for c in df.columns]
+    return _to_logical(
+        spark.read.schema(_physical_schema(logical, mapping)).parquet(*files),
+        mapping,
     )
 
 
@@ -1286,6 +1266,12 @@ def _to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     return df.select(
         *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
     )
+
+
+def _to_logical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
+    """Rename a scanned frame's physical columns to their logical
+    names — the mirror of ``_to_physical``."""
+    return _to_physical(df, {phys: logi for logi, phys in mapping.items()})
 
 
 def _head(path: str) -> tuple[int, dict]:
@@ -1482,6 +1468,132 @@ def merge_table(
     return write_table(merged, path, mode="overwrite")
 
 
+def _rewrite(
+    spark: SparkSession,
+    path: str,
+    prev: int,
+    manifest: dict,
+    touched: list[str],
+    transform,
+    mode: str,
+    inserts: bool = False,
+) -> dict:
+    """The copy-on-write step every rewriting DML verb shares: read the
+    ``touched`` files of snapshot ``prev`` (vectors applied, logical
+    names), write ``transform(rows)`` as new files, and commit them
+    under ``mode`` with every untouched file carried verbatim; the new
+    files get stats on the columns the parent records stats for.
+    ``transform`` always runs, so its checks raise before anything is
+    written; with no touched file nothing is written unless the verb
+    ``inserts`` rows (a MERGE). Returns ``{"version",
+    "files_rewritten", "files_carried"}``."""
+    mapping = _mapping_of(manifest)
+    rows = transform(_read_snapshot_files(
+        spark, touched, _schema_from_json(manifest["schema"]), mapping,
+        dv=_dv_of(manifest),
+    ))
+    t_set = set(touched)
+    untouched = [fp for fp in manifest["files"] if fp not in t_set]
+    new_files = (
+        _write_data_files(_to_physical(rows, mapping), path)
+        if touched or inserts
+        else []
+    )
+    version = _compose(
+        path, prev, manifest, untouched + new_files, mode,
+        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+    )
+    return {
+        "version": version,
+        "files_rewritten": len(touched),
+        "files_carried": len(untouched),
+    }
+
+
+def _updated(rows: DataFrame, logical, assignments: dict, cond) -> DataFrame:
+    """``rows`` as the snapshot's columns with ``assignments`` applied
+    where ``cond`` holds — the one UPDATE check, schema-only: an
+    unknown column, or an assignment that would retype the snapshot
+    schema, raises ``SchemaConflict``."""
+    from pyspark.sql import functions as F
+
+    known = {f.name for f in logical.fields}
+    for c in assignments:
+        if c not in known:
+            raise SchemaConflict(f"UPDATE assigns unknown column {c!r}")
+    out = rows.select(
+        *[
+            F.when(cond, assignments[f.name])
+            .otherwise(F.col(f.name))
+            .alias(f.name)
+            if f.name in assignments
+            else F.col(f.name)
+            for f in logical.fields
+        ]
+    )
+    # compare names+types only: F.when() legitimately widens
+    # nullability, and parquet round-trips everything nullable
+    if [(f.name, f.dataType) for f in out.schema.fields] != [
+        (f.name, f.dataType) for f in logical.fields
+    ]:
+        raise SchemaConflict(
+            "UPDATE assignments would retype the table: "
+            f"{logical.simpleString()} → {out.schema.simpleString()}"
+        )
+    return out
+
+
+def _vector_out(
+    spark: SparkSession,
+    path: str,
+    prev: int,
+    manifest: dict,
+    mode: str,
+    hits: DataFrame | None,
+    images: DataFrame | None = None,
+) -> tuple[int, int, int, int]:
+    """The merge-on-read step the deletion-vector verbs share: OR the
+    (``__dv_fp``, ``__dv_ri``) positions of ``hits`` into each file's
+    vector; if any position is new, write ``images`` (an UPDATE's
+    post-images) as new files and commit the carried file list plus
+    those files under ``mode`` with the merged vectors. Returns
+    ``(version, files_touched, new positions, files_added)``; with no
+    new position nothing is written or committed and ``version`` is
+    ``prev`` (commit churn is not a DML)."""
+    new_dv = dict(_dv_of(manifest))
+    files_touched = fresh = 0
+    # O(files with matches) rows back, each a packed bitmap built
+    # executor-side — the driver never sees a position
+    for r in _pack_positions_per_file(hits) if hits is not None else ():
+        old = new_dv.get(r["__dv_fp"])
+        merged = _dv_or_bits(_dv_bits_of(old) if old else None, r["bits"])
+        card = _dv_popcount(merged)
+        if card == _dv_card(old):
+            continue  # re-deleting already-vectored rows: no-op
+        files_touched += 1
+        fresh += card - _dv_card(old)
+        new_dv[r["__dv_fp"]] = _dv_entry_from_bits(path, merged, card)
+    if not fresh:
+        return prev, 0, 0, 0
+    # an UPDATE's images are a second pass over the touched files
+    # (immutable bytes, deterministic filter — same rows both jobs); a
+    # resident engine fuses this into the vector-building scan
+    new_files = (
+        _write_data_files(_to_physical(images, _mapping_of(manifest)), path)
+        if images is not None
+        else []
+    )
+    live = {fp: e for fp, e in new_dv.items() if _dv_has(e)}
+    # the parent's file list carries verbatim — merge-on-read
+    version = _compose(
+        path, prev, manifest, manifest["files"] + new_files, mode,
+        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+        dv=live,
+    )
+    _warn_dense_dv(path, live)
+    return version, files_touched, fresh, len(new_files)
+
+
 def merge_table_pruned(
     spark: SparkSession, path: str, changes: DataFrame, key: str
 ) -> dict:
@@ -1516,7 +1628,6 @@ def merge_table_pruned(
     from frafka_spark.operators.merge import merge_upsert
 
     prev, manifest = _head(path)
-    mapping = _mapping_of(manifest)
     span_row = changes.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
     ).first()
@@ -1529,24 +1640,11 @@ def merge_table_pruned(
         }
     # partition values prune first, then stats spans; lo is None only
     # for an all-NULL-keyed change set, which matches nothing
-    touched = _span_keep_files(manifest, key, lo, hi)
-    t_set = set(touched)
-    untouched = [fp for fp in manifest["files"] if fp not in t_set]
-    logical = _schema_from_json(manifest["schema"])
-    target = _read_snapshot_files(
-        spark, touched, logical, mapping, dv=_dv_of(manifest)
+    return _rewrite(
+        spark, path, prev, manifest, _span_keep_files(manifest, key, lo, hi),
+        lambda target: merge_upsert(target, changes, key),
+        "merge", inserts=True,
     )
-    merged = merge_upsert(target, changes, key)
-    new_files = _write_data_files(_to_physical(merged, mapping), path)
-    version = _compose(
-        path, prev, manifest, untouched + new_files, "merge",
-        added={"stats": _stats_like_parent(spark, manifest, new_files)},
-    )
-    return {
-        "version": version,
-        "files_rewritten": len(touched),
-        "files_carried": len(untouched),
-    }
 
 
 def merge_table_cdc(
@@ -1595,37 +1693,23 @@ def merge_table_cdc(
             "across the upsert and delete branches"
         )
     prev, manifest = _head(path)
-    mapping = _mapping_of(manifest)
     span_row = changes.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
     ).first()
     lo, hi = span_row["lo"], span_row["hi"]
-    touched = _span_keep_files(manifest, key, lo, hi)
-    t_set = set(touched)
-    untouched = [fp for fp in manifest["files"] if fp not in t_set]
     dels = changes.filter(F.col(op_col) == "delete").select(key).distinct()
     ups = changes.filter(F.col(op_col) == "upsert").drop(op_col)
     n_del, n_ups = dels.count(), ups.count()
-    logical = _schema_from_json(manifest["schema"])
-    target = _read_snapshot_files(
-        spark, touched, logical, mapping, dv=_dv_of(manifest)
-    )
     # deletes first (broadcast anti-join keeps NULL-keyed target rows),
     # then the classic upsert over the survivors
-    survivors = target.join(F.broadcast(dels), key, "left_anti")
-    merged = merge_upsert(survivors, ups, key)
-    new_files = _write_data_files(_to_physical(merged, mapping), path)
-    version = _compose(
-        path, prev, manifest, untouched + new_files, "merge",
-        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+    res = _rewrite(
+        spark, path, prev, manifest, _span_keep_files(manifest, key, lo, hi),
+        lambda target: merge_upsert(
+            target.join(F.broadcast(dels), key, "left_anti"), ups, key
+        ),
+        "merge", inserts=True,
     )
-    return {
-        "version": version,
-        "files_rewritten": len(touched),
-        "files_carried": len(untouched),
-        "n_deletes": n_del,
-        "n_upserts": n_ups,
-    }
+    return {**res, "n_deletes": n_del, "n_upserts": n_ups}
 
 
 def delete_rows(
@@ -1653,30 +1737,17 @@ def delete_rows(
     Returns ``{"version", "files_rewritten", "files_carried"}`` so
     callers (and tests) can pin that pruning actually happened.
     """
-    prev, manifest = _head(path)
-    mapping = _mapping_of(manifest)
-    # partition values prune first, then stats spans
-    touched = _span_keep_files(manifest, col, lo, hi)
-    t_set = set(touched)
-    untouched = [fp for fp in manifest["files"] if fp not in t_set]
-    new_files: list[str] = []
-    if touched:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        logical = _schema_from_json(manifest["schema"])
-        survivors = _read_snapshot_files(
-            spark, touched, logical, mapping, dv=_dv_of(manifest)
-        ).filter(~F.col(col).between(lo, hi) | F.col(col).isNull())
-        new_files = _write_data_files(_to_physical(survivors, mapping), path)
-    version = _compose(
-        path, prev, manifest, untouched + new_files, "delete",
-        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+    prev, manifest = _head(path)
+    # partition values prune first, then stats spans
+    return _rewrite(
+        spark, path, prev, manifest, _span_keep_files(manifest, col, lo, hi),
+        lambda rows: rows.filter(
+            ~F.col(col).between(lo, hi) | F.col(col).isNull()
+        ),
+        "delete",
     )
-    return {
-        "version": version,
-        "files_rewritten": len(touched),
-        "files_carried": len(untouched),
-    }
 
 
 def update_rows(
@@ -1709,51 +1780,14 @@ def update_rows(
     from pyspark.sql import functions as F
 
     prev, manifest = _head(path)
-    mapping = _mapping_of(manifest)
     logical = _schema_from_json(manifest["schema"])
-    known = {f.name for f in logical.fields}
-    for c in assignments:
-        if c not in known:
-            raise SchemaConflict(f"UPDATE assigns unknown column {c!r}")
+    cond = F.col(col).between(lo, hi)
     # partition values prune first, then stats spans
-    touched = _span_keep_files(manifest, col, lo, hi)
-    t_set = set(touched)
-    untouched = [fp for fp in manifest["files"] if fp not in t_set]
-    new_files: list[str] = []
-    if touched:
-        rows = _read_snapshot_files(
-            spark, touched, logical, mapping, dv=_dv_of(manifest)
-        )
-        cond = F.col(col).between(lo, hi)
-        updated = rows.select(
-            *[
-                F.when(cond, assignments[f.name])
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in assignments
-                else F.col(f.name)
-                for f in logical.fields
-            ]
-        )
-        # compare names+types only: F.when() legitimately widens
-        # nullability, and parquet round-trips everything nullable
-        if [(f.name, f.dataType) for f in updated.schema.fields] != [
-            (f.name, f.dataType) for f in logical.fields
-        ]:
-            raise SchemaConflict(
-                "UPDATE assignments would retype the table: "
-                f"{logical.simpleString()} → {updated.schema.simpleString()}"
-            )
-        new_files = _write_data_files(_to_physical(updated, mapping), path)
-    version = _compose(
-        path, prev, manifest, untouched + new_files, "update",
-        added={"stats": _stats_like_parent(spark, manifest, new_files)},
+    return _rewrite(
+        spark, path, prev, manifest, _span_keep_files(manifest, col, lo, hi),
+        lambda rows: _updated(rows, logical, assignments, cond),
+        "update",
     )
-    return {
-        "version": version,
-        "files_rewritten": len(touched),
-        "files_carried": len(untouched),
-    }
 
 
 def delete_keys(spark: SparkSession, path: str, col: str, keys) -> dict:
@@ -1782,49 +1816,28 @@ def delete_keys(spark: SparkSession, path: str, col: str, keys) -> dict:
     ks = sorted({k for k in keys if k is not None})
     prev, manifest = _head(path)
     stats = manifest.get("stats", {})
-    mapping = _mapping_of(manifest)
     parts = _partitions_of(manifest)
-    untouched: list[str] = []
-    touched: list[str] = []
     kset = set(ks)
-    for fp in manifest["files"]:
+    touched: list[str] = []
+    for fp in manifest["files"] if ks else ():  # no key matches no file
         pv = parts.get(fp, {})
         if col in pv and pv[col] not in kset:
             # exact partition value known and not a deleted key
             # (NULL partitions prune too: NULL never matches IN)
-            untouched.append(fp)
             continue
         span = stats.get(fp, {}).get(col)
         if span is not None:
             i = bisect.bisect_left(ks, span[0])
             if i >= len(ks) or ks[i] > span[1]:
-                untouched.append(fp)
                 continue
         touched.append(fp)
-    new_files: list[str] = []
-    if touched and ks:
-        logical = _schema_from_json(manifest["schema"])
-        keys_df = spark.createDataFrame(
-            [(k,) for k in ks], f"`{col}` {logical[col].dataType.simpleString()}"
-        )
-        survivors = _read_snapshot_files(
-            spark, touched, logical, mapping, dv=_dv_of(manifest)
-        ).join(F.broadcast(keys_df), col, "left_anti")
-        new_files = _write_data_files(_to_physical(survivors, mapping), path)
-    elif touched:
-        new_files = touched  # empty key set: nothing to rewrite
-        touched = []
-    version = _compose(
-        path, prev, manifest, untouched + new_files, "delete",
-        added={"stats": _stats_like_parent(
-            spark, manifest, [fp for fp in new_files if fp not in stats]
-        )},
-    )
-    return {
-        "version": version,
-        "files_rewritten": len(touched),
-        "files_carried": len(untouched),
-    }
+
+    def survivors(rows: DataFrame) -> DataFrame:
+        ktype = rows.schema[col].dataType.simpleString()
+        keys_df = spark.createDataFrame([(k,) for k in ks], f"`{col}` {ktype}")
+        return rows.join(F.broadcast(keys_df), col, "left_anti")
+
+    return _rewrite(spark, path, prev, manifest, touched, survivors, "delete")
 
 
 def delete_rows_dv(
@@ -1870,60 +1883,20 @@ def delete_rows_dv(
     from pyspark.sql import functions as F
 
     prev, manifest = _head(path)
-    mapping = _mapping_of(manifest)
-    logical = _schema_from_json(manifest["schema"])
-    dv = _dv_of(manifest)
     # file-pruned like the COW path (partition values first, then
     # stats spans); files without metadata are conservatively scanned
     touched = _span_keep_files(manifest, col, lo, hi)
-    new_dv = {fp: dict(e) for fp, e in dv.items()}
-    rows_deleted = 0
-    files_touched = 0
-    if touched:
-        pcol = mapping.get(col, col)
-        sel = (
-            spark.read.schema(_physical_schema(logical, mapping))
-            .parquet(*touched)
-            .select(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ).alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-                F.col(pcol).alias("__v"),
-            )
-            .filter(F.col("__v").between(lo, hi))
-            .select("__fp", "__ri")
-        )
-        # O(files with matches) rows back, each a packed bitmap built
-        # executor-side — the driver never sees a position
-        for r in _pack_positions_per_file(sel):
-            old = new_dv.get(r["__fp"])
-            merged = _dv_or_bits(
-                _dv_bits_of(old) if old else None, r["bits"]
-            )
-            card = _dv_popcount(merged)
-            fresh = card - _dv_card(old)
-            if fresh == 0:
-                continue  # re-deleting already-vectored rows: no-op
-            files_touched += 1
-            rows_deleted += fresh
-            new_dv[r["__fp"]] = _dv_entry_from_bits(path, merged, card)
-    if files_touched == 0:
-        # nothing newly deleted — no commit, like merge_table_pruned's
-        # empty change set (commit churn is not a delete)
-        return {
-            "version": prev,
-            "rows_deleted": 0,
-            "files_touched": 0,
-            "files_rewritten": 0,
-            "files_carried": len(manifest["files"]),
-        }
-    live = {fp: e for fp, e in new_dv.items() if _dv_has(e)}
-    # the file list carries verbatim — merge-on-read
-    version = _compose(
-        path, prev, manifest, manifest["files"], "delete_dv", dv=live
+    hits = (
+        _identity_scan(
+            spark, touched, _schema_from_json(manifest["schema"]),
+            _mapping_of(manifest),
+        ).filter(F.col(col).between(lo, hi))
+        if touched
+        else None
     )
-    _warn_dense_dv(path, live)
+    version, files_touched, rows_deleted, _ = _vector_out(
+        spark, path, prev, manifest, "delete_dv", hits
+    )
     return {
         "version": version,
         "rows_deleted": rows_deleted,
@@ -1966,104 +1939,25 @@ def update_rows_dv(
     prev, manifest = _head(path)
     mapping = _mapping_of(manifest)
     logical = _schema_from_json(manifest["schema"])
-    dv = _dv_of(manifest)
-    known = {f.name for f in logical.fields}
-    for c in assignments:
-        if c not in known:
-            raise SchemaConflict(f"UPDATE assigns unknown column {c!r}")
+    cond = F.col(col).between(lo, hi)
     touched = _span_keep_files(manifest, col, lo, hi)
-    new_dv = {fp: dict(e) for fp, e in dv.items()}
-    new_files: list[str] = []
-    rows_updated = 0
-    files_touched = 0
-    if touched:
-        scan = (
-            spark.read.schema(_physical_schema(logical, mapping))
-            .parquet(*touched)
-            .select(
-                "*",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ).alias("__dv_fp"),
-                F.col("_metadata.row_index").alias("__dv_ri"),
-            )
-        )
-        if mapping:
-            inverse = {phys: logi for logi, phys in mapping.items()}
-            scan = scan.select(
-                *[F.col(c).alias(inverse.get(c, c)) for c in scan.columns]
-            )
-        dv_entries = {
-            fp: e
-            for fp, e in dv.items()
-            if fp in set(touched) and _dv_has(e)
-        }
-        if dv_entries:
-            scan = scan.join(
-                F.broadcast(_dv_pairs_df(spark, dv_entries)),
-                ["__dv_fp", "__dv_ri"],
-                "left_anti",
-            )
-        matched = scan.filter(F.col(col).between(lo, hi))
-        # the updated images, with the schema pinned BEFORE any job
-        upd_img = matched.select(
-            *[
-                (assignments[f.name] if f.name in assignments
-                 else F.col(f.name)).alias(f.name)
-                for f in logical.fields
-            ]
-        )
-        if [(f.name, f.dataType) for f in upd_img.schema.fields] != [
-            (f.name, f.dataType) for f in logical.fields
-        ]:
-            raise SchemaConflict(
-                "UPDATE assignments would retype the table: "
-                f"{logical.simpleString()} → {upd_img.schema.simpleString()}"
-            )
-        # packed per-file bitmaps built executor-side (the scan already
-        # excluded previously-vectored rows, so every position is new)
-        hits = _pack_positions_per_file(
-            matched.select(
-                F.col("__dv_fp").alias("__fp"),
-                F.col("__dv_ri").alias("__ri"),
-            )
-        )
-        for r in hits:
-            old = new_dv.get(r["__fp"])
-            merged = _dv_or_bits(
-                _dv_bits_of(old) if old else None, r["bits"]
-            )
-            files_touched += 1
-            rows_updated += int(r["card"])
-            new_dv[r["__fp"]] = _dv_entry_from_bits(
-                path, merged, _dv_card(old) + int(r["card"])
-            )
-        if rows_updated:
-            # second pass over the touched files (immutable bytes,
-            # deterministic filter — same rows both jobs); a resident
-            # engine fuses this into the vector-building scan
-            new_files = _write_data_files(_to_physical(upd_img, mapping), path)
-    if rows_updated == 0:
-        return {
-            "version": prev,
-            "rows_updated": 0,
-            "files_touched": 0,
-            "files_added": 0,
-            "files_rewritten": 0,
-            "files_carried": len(manifest["files"]),
-        }
-    live = {fp: e for fp, e in new_dv.items() if _dv_has(e)}
-    version = _compose(
-        path, prev, manifest, manifest["files"] + new_files, "update_dv",
-        added={"stats": _stats_like_parent(spark, manifest, new_files)},
-        dv=live,
+    # previously-vectored rows are excluded, so every matched position
+    # is new; with no touched file the check still runs on no rows
+    matched = (
+        _identity_scan(spark, touched, logical, mapping, _dv_of(manifest))
+        if touched
+        else _read_snapshot_files(spark, [], logical, mapping)
+    ).filter(cond)
+    images = _updated(matched, logical, assignments, cond)
+    version, files_touched, rows_updated, files_added = _vector_out(
+        spark, path, prev, manifest, "update_dv",
+        matched if touched else None, images,
     )
-    _warn_dense_dv(path, live)
     return {
         "version": version,
         "rows_updated": rows_updated,
         "files_touched": files_touched,
-        "files_added": len(new_files),
+        "files_added": files_added,
         "files_rewritten": 0,
         "files_carried": len(manifest["files"]),
     }
@@ -3099,23 +2993,10 @@ def read_changes(
         # the rows a delete_dv commit removed, fetched by identity:
         # scan only the files holding new positions, keep the
         # semi-joined (file, row_index) matches
-        df = spark.read.schema(
-            _physical_schema(schema, mapping)
-        ).parquet(*files)
-        df = (
-            df.select(
-                "*",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ).alias("__dv_fp"),
-                F.col("_metadata.row_index").alias("__dv_ri"),
-            )
+        return (
+            _identity_scan(spark, files, schema, mapping)
             .join(F.broadcast(pair_df), ["__dv_fp", "__dv_ri"], "left_semi")
             .drop("__dv_fp", "__dv_ri")
-        )
-        inverse = {phys: logi for logi, phys in mapping.items()}
-        return df.select(
-            *[F.col(c).alias(inverse.get(c, c)) for c in df.columns]
         )
 
     chain = []  # manifests in (from, to], oldest first

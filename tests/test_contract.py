@@ -231,3 +231,73 @@ def test_one_snapshot_composer():
                                                 "partitions", "dv"})),
         ("manifest_table.py", ["bloom", "dv", "partitions", "stats"]),
     ]
+
+
+def test_one_dml_rewrite_and_one_vector_codec():
+    """The manifest table's DML has one mechanism per concern: one
+    function reads a row's (file, row_index) identity, one packs a
+    position bitmap, one decodes positions from it (``_dv_popcount``
+    only counts bits), and the five copy-on-write verbs hand their
+    rewrite to a shared step instead of writing data files."""
+    import ast
+
+    src = (REPO / "frafka_spark" / "sources" / "manifest_table.py").read_text()
+    top = [
+        n for n in ast.parse(src).body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+
+    def holders(hit) -> set[str]:
+        return {fn.name for fn in top if any(hit(n) for n in ast.walk(fn))}
+
+    def attr(n, name: str) -> bool:
+        return isinstance(n, ast.Attribute) and n.attr == name
+
+    assert holders(
+        lambda n: isinstance(n, ast.Constant)
+        and n.value == "_metadata.row_index"
+    ) == {"_identity_scan"}
+    assert holders(
+        lambda n: attr(n, "at") and attr(n.value, "bitwise_or")
+    ) == {"_dv_pack_positions"}
+    assert holders(lambda n: attr(n, "unpackbits")) == {
+        "_dv_unpack_positions", "_dv_popcount",
+    }
+    cow = {
+        "merge_table_pruned", "merge_table_cdc", "delete_rows",
+        "update_rows", "delete_keys",
+    }
+    writers = holders(
+        lambda n: isinstance(n, ast.Call)
+        and getattr(n.func, "id", None) == "_write_data_files"
+    )
+    assert cow <= {fn.name for fn in top}
+    assert writers & cow == set()
+
+
+def test_no_side_effects_in_assert():
+    """No ``assert`` in the package commits to a table: under
+    ``python -O`` the whole statement, call included, is skipped, so a
+    layout would be published without its writes."""
+    import ast
+    import re
+
+    mutating = re.compile(
+        r"^(write_stream_batch|write_table\w*|commit_\w+|catalog_commit"
+        r"|run_txn|delete_\w+|update_\w+|merge_table\w*)$"
+    )
+    offenders = []
+    for p in sorted((REPO / "frafka_spark").rglob("*.py")):
+        for a in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(a, ast.Assert):
+                continue
+            for n in ast.walk(a.test):
+                name = isinstance(n, ast.Call) and (
+                    getattr(n.func, "id", None)
+                    or getattr(n.func, "attr", None)
+                )
+                if name and mutating.match(name):
+                    offenders.append(
+                        f"{p.relative_to(REPO)}:{a.lineno} {name}"
+                    )
+    assert offenders == []

@@ -2936,10 +2936,10 @@ def test_partition_evolution_mixed_layouts(spark, tmp_path):
 
 
 def test_meta_sidecar_distributed_matches_driver(spark, tmp_path, monkeypatch):
-    """The distributed prune's inlined worker predicate must decide
-    exactly like the driver-side _keep_verdict loop: same kept file
-    set, same probe counts, on a table exercising BOTH prune tiers
-    and a removed list."""
+    """The distributed prune (whose workers call _keep_verdict) must
+    decide exactly like the driver-side _keep_verdict loop: same kept
+    file set, same probe counts, on a table exercising BOTH prune
+    tiers and a removed list."""
     from pyspark.sql import functions as F
 
     from frafka_spark.sources import manifest_table as mt
