@@ -180,10 +180,7 @@ def encode_pq(vectors: DataFrame, codes: DataFrame) -> DataFrame:
     )
 
 
-@_register_builder(
-    "embeddings_ann_trained",
-    fp_params=[CRAWL_MOD, CENTROID_MOD, KM_ITERS, PQ_M, PQ_CODES],
-)
+@_register_builder("embeddings_ann_trained")
 def _build_trained_index_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:

@@ -1673,7 +1673,7 @@ def q_llm_dedup_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_llm_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-URL dedup: collapse syntactic URL variants (scheme/
-    host case, trailing slash, tracking query params) onto one
+    host case, trailing slash, tracking query parameters) onto one
     canonical form and group — the crawl-frontier dedup every web
     pipeline runs BEFORE fetching, where each variant class would
     otherwise multiply both crawl cost and corpus dups.

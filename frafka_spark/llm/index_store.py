@@ -113,7 +113,7 @@ def ivf_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-@_register_builder("documents_digest_indexed", fp_params=[CRAWL_MOD])
+@_register_builder("documents_digest_indexed")
 def _build_digest_index_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -231,10 +231,7 @@ PIPE_MIN_WORDS = 8
 PIPE_VALID_RESIDUE = 7
 
 
-@_register_builder(
-    "documents_pipeline",
-    fp_params=[PIPE_MOD, PIPE_MIN_WORDS, PIPE_VALID_RESIDUE],
-)
+@_register_builder("documents_pipeline")
 def _build_pipeline_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -425,13 +422,7 @@ def q_llm_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _near_index_fp():
-    from frafka_spark.llm.dedup import BAND_ROWS, N_MINHASH
-
-    return [CRAWL_MOD, N_MINHASH, BAND_ROWS]
-
-
-@_register_builder("documents_near_indexed", fp_params=_near_index_fp())
+@_register_builder("documents_near_indexed")
 def _build_near_index_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -559,9 +550,7 @@ DML_DEL_LO = 50
 DML_DEL_HI = 199
 
 
-@_register_builder(
-    "documents_digest_dml", fp_params=[CRAWL_MOD, DML_DEL_LO, DML_DEL_HI]
-)
+@_register_builder("documents_digest_dml")
 def _build_digest_dml_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -676,7 +665,7 @@ def q_llm_index_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_INDEX_BATCHES = 4
 
 
-@_register_builder("documents_index_streamed", fp_params=[N_INDEX_BATCHES])
+@_register_builder("documents_index_streamed")
 def _build_streamed_index_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -809,7 +798,7 @@ def q_llm_dedup_exact_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_builder("embeddings_cells_indexed", fp_params=[CRAWL_MOD])
+@_register_builder("embeddings_cells_indexed")
 def _build_cells_index_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -970,10 +959,7 @@ def posting_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-@_register_builder(
-    "documents_postings_indexed",
-    fp_params=[BM25_MOD, BM25_DEL_LO, BM25_DEL_HI],
-)
+@_register_builder("documents_postings_indexed")
 def _build_postings_index_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -1204,9 +1190,7 @@ TXN_DEL_LO = 300
 TXN_DEL_HI = 399
 
 
-@_register_builder(
-    "documents_digest_txn", fp_params=[CRAWL_MOD, TXN_DEL_LO, TXN_DEL_HI]
-)
+@_register_builder("documents_digest_txn")
 def _build_digest_txn_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -1363,9 +1347,7 @@ def q_llm_index_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_builder(
-    "documents_index_txn_streamed", fp_params=[N_INDEX_BATCHES, "txn"]
-)
+@_register_builder("documents_index_txn_streamed")
 def _build_txn_streamed_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -1551,7 +1533,7 @@ def segment_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-@_register_builder("documents_segfreq_indexed", fp_params=[SEGIDX_MOD])
+@_register_builder("documents_segfreq_indexed")
 def _build_segfreq_index_tables(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:

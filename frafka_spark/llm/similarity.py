@@ -570,7 +570,7 @@ def _lsh_bucket() -> Column:
     can never flip across engines the way a float fold's last ulp
     could), packed into an 8-bit bucket id."""
     def plane_prods(p: int):
-        # closure (not a default arg: pyspark counts lambda params to
+        # closure (not a default arg: pyspark counts lambda arguments to
         # type the higher-order function, so `p=p` would break it)
         return lambda x, i: (
             F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast("bigint")

@@ -19,6 +19,8 @@ fixtures — layout changes the plan, never the answer.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,10 +52,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         )
         specs = (("orders", o, "o_orderkey"), ("lineitem", li, "l_orderkey"))
 
-        def build(path: str) -> None:
-            gen = path.rsplit("/", 1)[-1]
+        def build(path: Path) -> None:
             for name, df, key in specs:
-                tmp = f"fs_bkt_build_{name}_{gen}"
+                tmp = f"fs_bkt_build_{name}_{path.name}"
                 (
                     df.write.format("parquet")
                     .mode("overwrite")
@@ -63,7 +64,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 )
                 spark.sql(f"DROP TABLE IF EXISTS {tmp}")  # files stay
 
-        path = disk_artifact(sf_dir, "bucketed", [N_BUCKETS], build)
+        path = disk_artifact(sf_dir, "bucketed", build)
         gen = path.rsplit("/", 1)[-1]
         names = []
         for name, df, key in specs:

@@ -25,6 +25,8 @@ once per fixture generation.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,17 +46,17 @@ def _ensure_layout(spark: SparkSession, sf_dir: str) -> str:
     write — the small-files discipline a production layout job
     applies)."""
 
-    def build(path: str) -> None:
+    def build(path: Path) -> None:
         (
             table(spark, sf_dir, "events")
             .withColumn("event_date", F.to_date("ts"))
             .repartition("event_date")
             .write.mode("overwrite")
             .partitionBy("event_date")
-            .parquet(path)
+            .parquet(str(path))
         )
 
-    return disk_artifact(sf_dir, "events_by_date", [], build)
+    return disk_artifact(sf_dir, "events_by_date", build)
 
 
 def dpp_fact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,6 +20,8 @@ end-to-end answer under the driver's differential.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,7 +49,8 @@ def _ensure_evolved_table(spark: SparkSession, sf_dir: str) -> str:
         write_table,
     )
 
-    def build(path: str) -> None:
+    def build(dest: Path) -> None:
+        path = str(dest)
         o = table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         )
@@ -67,8 +70,7 @@ def _ensure_evolved_table(spark: SparkSession, sf_dir: str) -> str:
         )
         rename_column(path, "o_totalprice", "price")
 
-    # 2: version of the persisted manifests' carry rules
-    return disk_artifact(sf_dir, "orders_evolved", [2, SEG_PRICE], build)
+    return disk_artifact(sf_dir, "orders_evolved", build)
 
 
 @query(

@@ -24,6 +24,8 @@ never the rows.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,7 +57,7 @@ def _ensure_layout(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     def resolve() -> tuple[str, int]:
         li = table(spark, sf_dir, "lineitem").select(*_COLS)
 
-        def build(path: str) -> None:
+        def build(path: Path) -> None:
             ranked = li.select(
                 "*", *[zorder_rank(c).alias(f"__zr_{c}") for c in zcols]
             )
@@ -66,12 +68,11 @@ def _ensure_layout(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
                 .sortWithinPartitions("__z")
                 .drop("__z", *[f"__zr_{c}" for c in zcols])
             )
-            write_table_with_stats(clustered, path, zcols, mode="overwrite")
+            write_table_with_stats(clustered, str(path), zcols, mode="overwrite")
 
         max_pk = li.agg(F.max("l_partkey")).first()[0]
         hi = (int(max_pk) + SKIP_DEN - 1) // SKIP_DEN
-        # 2: version of the persisted manifest's carry rules
-        return disk_artifact(sf_dir, "lineitem_z", [2, N_ZFILES], build), hi
+        return disk_artifact(sf_dir, "lineitem_z", build), hi
 
     return session_artifact(spark, sf_dir, "lineitem_z", resolve)
 

@@ -31,6 +31,7 @@ exactly what the driver's differential is built to catch.
 
 from __future__ import annotations
 
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -159,14 +160,8 @@ _BUILDERS = {
 }
 
 
-#: tag → the graded constants of an out-of-module builder (e.g.
-#: llm/index_store.py), part of that tag's generation hash
-_PARAMS: dict[str, list] = {}
-
-
-def _register_builder(name, fp_params: list | None = None):
+def _register_builder(name):
     """Builders defined after the dict literal self-register here."""
-    _PARAMS[name] = fp_params or []
 
     def deco(fn):
         _BUILDERS[name] = fn
@@ -174,32 +169,12 @@ def _register_builder(name, fp_params: list | None = None):
     return deco
 
 
-def _table_params(which: str) -> list:
-    """The generation params of one lifecycle table: the version of
-    the persisted manifest and index encodings, this module's builder
-    constants, and the tag's own registered constants."""
-    return [
-        3,  # bump on any change to the persisted manifests or indexes
-        [
-            DEL_LO, DEL_HI, N_RANGE_FILES, N_APPENDS,
-            UPD_LO, UPD_HI, UPD_BUMP, INS_ROWS, PROBE_CUST,
-            N_STREAM_BATCHES, PFX_WORDS,
-            UPD2_LO, UPD2_HI, UPD2_BUMP, UPD2_PRIORITY,
-        ],
-        _PARAMS.get(which, []),
-    ]
-
-
 def _ensure_table(spark: SparkSession, sf_dir: str, which: str) -> str:
-    """The ``which`` lifecycle table, built once per fixture generation
-    through the artifact store; nested lifecycles keep several tables
-    under the returned directory."""
-    return disk_artifact(
-        sf_dir,
-        which,
-        _table_params(which),
-        lambda path: _BUILDERS[which](spark, sf_dir, Path(path)),
-    )
+    """The ``which`` lifecycle table, built once per generation of its
+    registered builder's code and the fixture through the artifact
+    store; nested lifecycles keep several tables under the returned
+    directory."""
+    return disk_artifact(sf_dir, which, partial(_BUILDERS[which], spark, sf_dir))
 
 
 @query(
@@ -434,7 +409,7 @@ def apply_cdf_to_rollup(
     write_table(merged, rollup_path, mode="overwrite")
 
 
-@_register_builder("orders_rollup_ivm", fp_params=[IVM_MOD])
+@_register_builder("orders_rollup_ivm")
 def _build_ivm_tables(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """corpus v0 = base orders (o_orderkey % IVM_MOD != 0, range-
     clustered stats); v1 = crawl append; v2 = DELETION-VECTOR delete
@@ -732,7 +707,7 @@ CDC_DEL_LO = 600
 CDC_DEL_HI = 699
 
 
-@_register_builder("orders_cdc", fp_params=[CDC_DEL_LO, CDC_DEL_HI])
+@_register_builder("orders_cdc")
 def _build_cdc_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0: range-clustered stats write; v1: one three-branch CDC merge
     (updates [UPD_LO, UPD_HI], inserts INS_ROWS, deletes
@@ -1257,10 +1232,7 @@ AC_FRAC_NUM, AC_FRAC_DEN = 3, 40
 AC_THRESHOLD = 0.30
 
 
-@_register_builder(
-    "orders_partitioned",
-    fp_params=[PP_PRIORITY, PP_KEY_LO, PP_KEY_HI, N_PART_RANGE],
-)
+@_register_builder("orders_partitioned")
 def _build_partitioned_table(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -1343,10 +1315,7 @@ def q_scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_builder(
-    "orders_autocompacted",
-    fp_params=[AC_FRAC_NUM, AC_FRAC_DEN, AC_THRESHOLD, N_RANGE_FILES],
-)
+@_register_builder("orders_autocompacted")
 def _build_autocompacted_table(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -1425,9 +1394,7 @@ def q_scan_autocompacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_builder(
-    "orders_deleted_dv_spilled", fp_params=[AC_FRAC_NUM, AC_FRAC_DEN]
-)
+@_register_builder("orders_deleted_dv_spilled")
 def _build_deleted_dv_spilled_table(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -1525,10 +1492,7 @@ MS_DEL_LO, MS_DEL_HI = 1251, 1350
 MS_BAND_LO, MS_BAND_HI = 1201, 1480  # the graded pruned read
 
 
-@_register_builder(
-    "orders_meta_sidecar",
-    fp_params=[MS_N_FILES, MS_SPLIT_MOD, MS_DEL_LO, MS_DEL_HI],
-)
+@_register_builder("orders_meta_sidecar")
 def _build_meta_sidecar_table(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -1629,7 +1593,7 @@ def q_scan_meta_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 PE_STATUS = "F"
 
 
-@_register_builder("orders_partition_evolved", fp_params=[PE_STATUS])
+@_register_builder("orders_partition_evolved")
 def _build_partition_evolved_table(
     spark: SparkSession, sf_dir: str, dest: Path
 ) -> None:
@@ -1723,7 +1687,7 @@ def q_scan_partition_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
 VAC_FRAC_NUM, VAC_FRAC_DEN = 35, 40
 
 
-@_register_builder("orders_vacuumed", fp_params=[VAC_FRAC_NUM, VAC_FRAC_DEN])
+@_register_builder("orders_vacuumed")
 def _build_vacuumed_table(spark: SparkSession, sf_dir: str, dest: Path) -> None:
     """v0: range-clustered stats write (8 files); v1: copy-on-write
     DELETE of the top 5/40 of the key space (rewrites only the

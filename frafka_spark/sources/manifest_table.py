@@ -1678,28 +1678,31 @@ def merge_table_cdc(
 
     from frafka_spark.operators.merge import merge_upsert
 
-    ops = [
-        r[0] for r in changes.select(op_col).distinct().collect()
-    ]
-    bad = [o for o in ops if o not in ("upsert", "delete")]
-    if bad:
+    op = F.col(op_col)
+    # one pass: per-key row and branch counts (NULL keys group as one
+    # key, so two NULL keys are a duplicate; a NULL op is neither branch)
+    per_key = changes.groupBy(key).agg(
+        F.count("*").alias("n"),
+        F.count(F.when(op == "delete", 1)).alias("d"),
+        F.count(F.when(op == "upsert", 1)).alias("u"),
+    )
+    lo, hi, *counts = per_key.agg(
+        F.min(key), F.max(key), F.sum("n"), F.sum("d"), F.sum("u"),
+        F.max("n"),
+    ).first()
+    n, n_del, n_ups, dup = (v or 0 for v in counts)
+    if n > n_del + n_ups:
+        bad = changes.filter(op.isNull() | ~op.isin("upsert", "delete"))
+        bad = [r[0] for r in bad.select(op).distinct().collect()]
         raise ValueError(f"unknown {op_col!r} values: {bad}")
-    dup = (
-        changes.groupBy(key).count().filter(F.col("count") > 1).limit(1)
-    ).count()
-    if dup:
+    if dup > 1:
         raise ValueError(
             "change set must be keyed: a key may appear at most once "
             "across the upsert and delete branches"
         )
     prev, manifest = _head(path)
-    span_row = changes.agg(
-        F.min(key).alias("lo"), F.max(key).alias("hi")
-    ).first()
-    lo, hi = span_row["lo"], span_row["hi"]
-    dels = changes.filter(F.col(op_col) == "delete").select(key).distinct()
-    ups = changes.filter(F.col(op_col) == "upsert").drop(op_col)
-    n_del, n_ups = dels.count(), ups.count()
+    dels = changes.filter(op == "delete").select(key).distinct()
+    ups = changes.filter(op == "upsert").drop(op_col)
     # deletes first (broadcast anti-join keeps NULL-keyed target rows),
     # then the classic upsert over the survivors
     res = _rewrite(

@@ -1,10 +1,16 @@
 """The artifact store (``frafka_spark/artifacts.py``) without Spark:
 cross-process build-once, crash recovery, generation immutability,
-and the per-key session memo."""
+generations keyed by the builder's code, the stale-generation
+collector (``tools/artifacts_gc.py``) and the per-key session memo."""
 
 from __future__ import annotations
 
+import fcntl
+import importlib.util
+import json
 import multiprocessing
+import re
+import shutil
 import subprocess
 import sys
 import threading
@@ -41,7 +47,7 @@ def _race_worker(root: str, sf: str, counter: str, out: str) -> None:
         time.sleep(1.0)
         Path(path, "data.txt").write_text("payload")
 
-    got = artifacts.disk_artifact(sf, "race", [1], build)
+    got = artifacts.disk_artifact(sf, "race", build)
     Path(out).write_text(got)
 
 
@@ -78,8 +84,8 @@ def test_failed_build_leaves_no_marker_and_rebuilds(store):
         raise RuntimeError("builder crashed")
 
     with pytest.raises(RuntimeError):
-        artifacts.disk_artifact(str(sf), "flaky", [], broken)
-    gen = artifacts._gen_dir(str(sf), "flaky", [])
+        artifacts.disk_artifact(str(sf), "flaky", broken)
+    gen = artifacts._gen_dir(str(sf), "flaky", broken.__module__)
     assert (gen / "half.txt").exists()
     assert not (gen / "_ARTIFACT.json").exists()
 
@@ -87,24 +93,49 @@ def test_failed_build_leaves_no_marker_and_rebuilds(store):
         assert not Path(path, "half.txt").exists()  # partial removed
         Path(path, "data.txt").write_text("ok")
 
-    path = artifacts.disk_artifact(str(sf), "flaky", [], good)
+    path = artifacts.disk_artifact(str(sf), "flaky", good)
     assert Path(path) == gen
     assert Path(path, "data.txt").read_text() == "ok"
     assert Path(path, "_ARTIFACT.json").exists()
 
 
-def test_new_params_build_a_new_generation_and_keep_the_old(store):
+_BUILDER = """
+from pathlib import Path
+
+
+def build(path):
+    Path(path, "data.txt").write_text(str(path))
+
+
+def unexpected(path):
+    raise AssertionError("a committed generation was rebuilt")
+"""
+
+
+def test_code_change_builds_a_new_generation_and_keeps_the_old(
+    store, tmp_path, monkeypatch
+):
+    """An edit to the builder's module names a new generation; the
+    old one keeps its bytes, inodes and mtimes, and reverting the edit
+    returns it unbuilt."""
     _root, sf = store
+    src = tmp_path / "gen_builder.py"
+    src.write_text(_BUILDER)
+    spec = importlib.util.spec_from_file_location("gen_builder", src)
+    mod = importlib.util.module_from_spec(spec)
+    monkeypatch.setitem(sys.modules, "gen_builder", mod)
+    spec.loader.exec_module(mod)
+    monkeypatch.setattr(artifacts, "_PARSED", {})
 
-    def build(path: str) -> None:
-        Path(path, "data.txt").write_text(path)
-
-    old = Path(artifacts.disk_artifact(str(sf), "gen", [1], build))
+    old = Path(artifacts.disk_artifact(str(sf), "gen", mod.build))
     before = {
         p: (p.read_bytes(), p.stat().st_mtime_ns, p.stat().st_ino)
         for p in old.rglob("*")
     }
-    new = Path(artifacts.disk_artifact(str(sf), "gen", [2], build))
+    # the digests are read from source once per process: a new process
+    src.write_text(_BUILDER + "\nVERSION = 2\n")
+    artifacts._PARSED.clear()
+    new = Path(artifacts.disk_artifact(str(sf), "gen", mod.build))
     assert new != old and new.parent == old.parent
     after = {
         p: (p.read_bytes(), p.stat().st_mtime_ns, p.stat().st_ino)
@@ -112,10 +143,150 @@ def test_new_params_build_a_new_generation_and_keep_the_old(store):
     }
     assert after == before
 
-    def unexpected(path: str) -> None:
-        raise AssertionError("a committed generation was rebuilt")
+    src.write_text(_BUILDER)
+    artifacts._PARSED.clear()
+    assert Path(artifacts.disk_artifact(str(sf), "gen", mod.unexpected)) == old
 
-    assert Path(artifacts.disk_artifact(str(sf), "gen", [1], unexpected)) == old
+
+DPP = "frafka_spark.operators.dpp"
+LAKEHOUSE = "frafka_spark.operators.lakehouse"
+
+
+@pytest.fixture
+def tree(store, tmp_path, monkeypatch):
+    """A copy of the package under ``tmp_path`` that the code digests
+    are read from, and the store's fixture directory."""
+    src = tmp_path / "tree"
+    shutil.copytree(
+        REPO / "frafka_spark", src / "frafka_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    monkeypatch.setattr(artifacts, "_SRC", src)
+    monkeypatch.setattr(artifacts, "_PARSED", {})
+    return src, str(store[1])
+
+
+def _gen(src: Path, sf: str, tag: str, module: str) -> str:
+    """The generation name a fresh process resolves from ``src``."""
+    artifacts._SRC = src
+    artifacts._PARSED.clear()
+    return artifacts._gen_dir(sf, tag, module).name
+
+
+def _edit(src: Path, rel: str, edit) -> None:
+    f = src / "frafka_spark" / rel
+    f.write_text(edit(f.read_text()))
+
+
+def test_code_edit_in_the_closure_makes_a_new_generation(tree):
+    src, sf = tree
+    before = _gen(src, sf, "events_by_date", DPP)
+    _edit(src, "operators/dpp.py", lambda t: t + "\n_EDITED = 1\n")
+    edited = _gen(src, sf, "events_by_date", DPP)
+    assert edited != before
+    _edit(src, "io.py", lambda t: t + "\n_EDITED = 1\n")  # imported by dpp
+    assert _gen(src, sf, "events_by_date", DPP) not in (before, edited)
+
+
+def test_docstring_and_comment_edits_keep_the_generation(tree):
+    src, sf = tree
+    before = _gen(src, sf, "events_by_date", DPP)
+    _edit(
+        src, "operators/dpp.py",
+        lambda t: t.replace('"""Dynamic partition', '"""Reworded.\n\nDynamic', 1)
+        .replace("def _ensure_layout", "# a new comment\ndef _ensure_layout", 1),
+    )
+    _edit(src, "artifacts.py", lambda t: t.replace('"""', '"""Reworded. ', 1))
+    assert _gen(src, sf, "events_by_date", DPP) == before
+
+
+def test_edits_outside_the_closure_keep_the_generation(tree):
+    src, sf = tree
+    dpp = _gen(src, sf, "events_by_date", DPP)
+    compacted = _gen(src, sf, "orders_compacted", LAKEHOUSE)
+    _edit(src, "llm/pack.py", lambda t: t + "\n_EDITED = 1\n")
+    # index_store imports lakehouse, not the other way round
+    _edit(src, "llm/index_store.py", lambda t: t + "\n_EDITED = 1\n")
+    assert _gen(src, sf, "events_by_date", DPP) == dpp
+    assert _gen(src, sf, "orders_compacted", LAKEHOUSE) == compacted
+
+
+def test_segment_cut_edit_makes_a_new_segfreq_generation(tree):
+    """The segment index persists ``segment_rows``, which cuts lines at
+    ``llm/dedup.py``'s ``LINE_SEG_WORDS``: editing that constant names
+    a new generation of the index, through a function-level import."""
+    from frafka_spark.llm import index_store  # noqa: F401 — registers it
+    from frafka_spark.operators.lakehouse import _BUILDERS
+
+    src, sf = tree
+    tag = "documents_segfreq_indexed"
+    module = _BUILDERS[tag].__module__
+    before = _gen(src, sf, tag, module)
+    _edit(
+        src, "llm/dedup.py",
+        lambda t: re.sub(
+            r"^LINE_SEG_WORDS = (\d+)",
+            lambda m: f"LINE_SEG_WORDS = {int(m[1]) + 1}",
+            t, count=1, flags=re.M,
+        ),
+    )
+    assert _gen(src, sf, tag, module) != before
+
+
+def test_moving_the_tree_keeps_the_generation(tree, tmp_path):
+    src, sf = tree
+    moved = tmp_path / "elsewhere" / "tree"
+    shutil.copytree(src, moved)
+    for tag, module in (("events_by_date", DPP), ("orders_compacted", LAKEHOUSE)):
+        assert _gen(moved, sf, tag, module) == _gen(src, sf, tag, module)
+
+
+def _gc():
+    spec = importlib.util.spec_from_file_location(
+        "artifacts_gc", REPO / "tools" / "artifacts_gc.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_gc_removes_unlocked_stale_generations_only(store, capsys):
+    _root, sf = store
+
+    def build(path: Path) -> None:
+        Path(path, "data.txt").write_text("payload")
+
+    def broken(path: Path) -> None:
+        raise RuntimeError("builder crashed")
+
+    stale = Path(artifacts.disk_artifact(str(sf), "stale", build))
+    locked = Path(artifacts.disk_artifact(str(sf), "locked", build))
+    gone = Path(artifacts.disk_artifact(str(sf), "gone", build))
+    marker = gone / "_ARTIFACT.json"  # as an older tree's builder left it
+    meta = json.loads(marker.read_text())
+    marker.write_text(json.dumps({**meta, "module": "frafka_spark.gone"}))
+    with pytest.raises(RuntimeError):
+        artifacts.disk_artifact(str(sf), "crashed", broken)
+    crashed = artifacts._gen_dir(str(sf), "crashed", broken.__module__)
+    assert crashed.is_dir()
+    (sf / "orders.parquet").write_bytes(b"fixture, regenerated")
+    current = Path(artifacts.disk_artifact(str(sf), "stale", build))
+    assert current != stale
+
+    gc = _gc()
+    with open(f"{locked}.lock", "w") as held:
+        fcntl.flock(held, fcntl.LOCK_EX)
+        gc.main()
+    assert sorted(capsys.readouterr().out.split()) == sorted(
+        [str(stale), str(crashed), str(gone)]
+    )
+    assert not stale.exists() and not crashed.exists() and not gone.exists()
+    assert (locked / "_ARTIFACT.json").exists()
+    assert (current / "data.txt").read_text() == "payload"
+
+    gc.main()  # the lock is released: the stale generation goes now
+    assert capsys.readouterr().out.split() == [str(locked)]
+    assert not locked.exists() and (current / "_ARTIFACT.json").exists()
 
 
 def _spark(app_id: str):
@@ -186,22 +357,28 @@ from frafka_spark import artifacts
 {setup}
 from frafka_spark.operators import lakehouse
 
-lakehouse.disk_artifact = lambda sf, tag, params, build: str(
-    artifacts._gen_dir(sf, tag, params)
+lakehouse.disk_artifact = lambda sf, tag, build: str(
+    artifacts._gen_dir(sf, tag, build.func.__module__)
 )
 print(lakehouse._ensure_table(None, sys.argv[1], "orders_compacted"))
+from frafka_spark.llm import index_store
+print(lakehouse._ensure_table(None, sys.argv[1], "documents_segfreq_indexed"))
 """
 
 
 def test_lakehouse_generation_independent_of_import_order():
-    """A process that imported only the lakehouse module and one that
-    loaded every module resolve the same generation directory."""
+    """A process that imported only the modules that register the two
+    tags and one that loaded every module resolve the same generation
+    directories, for a lakehouse tag and for one registered by
+    ``llm/index_store.py``."""
     resolved = [
         subprocess.run(
             [sys.executable, "-c", _RESOLVE.format(setup=setup), SF_DIR],
             cwd=REPO, capture_output=True, text=True, check=True,
-        ).stdout.strip().splitlines()[-1]
+        ).stdout.strip().splitlines()[-2:]
         for setup in ("", "import frafka_spark; frafka_spark.load_all()")
     ]
     assert resolved[0] == resolved[1]
-    assert Path(resolved[0]).parent.name == Path(SF_DIR).name
+    for path in resolved[0]:
+        assert Path(path).parent.name == Path(SF_DIR).name
+    assert Path(resolved[0][1]).parts[-3] == "documents_segfreq_indexed"

@@ -3018,3 +3018,57 @@ def test_vacuumed_lifecycle_physical_contract(spark):
     # still serves the post-delete, post-compact row set
     n = read_table(spark, path).count()
     assert n > 0
+
+
+def test_merge_table_cdc_checks_the_change_set_in_one_aggregate(
+    spark, tmp_path, monkeypatch
+):
+    """``merge_table_cdc`` learns its change set's op values,
+    keyedness, key span and branch counts from one grouped aggregate:
+    with the rewrite stubbed out it runs exactly the jobs of one such
+    aggregate. A NULL op is an unknown op, and two NULL keys are a
+    duplicate key."""
+    from frafka_spark.sources import manifest_table as mt
+
+    path = str(tmp_path / "tbl")
+    base = spark.range(0, 20).select(
+        F.col("id").alias("k"), F.lit(1.0).alias("v")
+    )
+    mt.write_table_with_stats(base, path, ["k"], mode="overwrite")
+    ddl = "k long, v double, _op string"
+    changes = spark.createDataFrame(
+        [(1, 2.0, "upsert"), (3, None, "delete"), (4, None, "delete"),
+         (30, 5.0, "upsert"), (31, 5.0, "upsert")],
+        ddl,
+    )
+    res = {"version": 9, "files_rewritten": 0, "files_carried": 1}
+    monkeypatch.setattr(mt, "_rewrite", lambda *a, **kw: dict(res))
+    sc = spark.sparkContext
+
+    def jobs(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got, n_jobs = jobs(
+        "cdc-check", lambda: mt.merge_table_cdc(spark, path, changes, "k")
+    )
+    _, one_agg = jobs(
+        "cdc-one-agg",
+        lambda: changes.groupBy("k").count().agg(F.max("count")).first(),
+    )
+    assert got == {**res, "n_deletes": 2, "n_upserts": 3}
+    assert 0 < n_jobs == one_agg
+
+    two_null_keys = spark.createDataFrame(
+        [(None, 1.0, "upsert"), (None, 2.0, "delete")], ddl
+    )
+    with pytest.raises(ValueError, match="at most once"):
+        mt.merge_table_cdc(spark, path, two_null_keys, "k")
+    null_op = spark.createDataFrame([(1, 1.0, None), (2, 1.0, "upsert")], ddl)
+    with pytest.raises(ValueError, match=r"unknown '_op' values: \[None\]"):
+        mt.merge_table_cdc(spark, path, null_op, "k")
+    assert mt.current_version(path) == 0
